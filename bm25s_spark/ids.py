@@ -79,10 +79,12 @@ def assign_dense_ids(df: DataFrame, order_cols: list[str], id_col: str,
         # corpus used to build several index variants, metadata pulls,
         # analytics passes over the same corpus object).  Releasing it
         # here was tried and measured a 4×-corpus REGRESSION (~1.7× on
-        # corpus-rescanning steps): an idle MEMORY_AND_DISK cache costs
-        # nothing (the block manager evicts under pressure), while a
-        # released-but-needed one costs a full recomputation.  Callers
-        # that truly want it gone own the df and can unpersist it.
+        # corpus-rescanning steps): the memory tier of an idle
+        # MEMORY_AND_DISK cache is evicted under pressure, while a
+        # released-but-needed cache costs a full recomputation.  Its
+        # disk tier is not evicted and holds until unpersist: long-lived
+        # sessions release it through ``persisted_out`` (the caller
+        # unpersists every tracked frame) or by unpersisting the df.
         src = df.persist(StorageLevel.MEMORY_AND_DISK)
         if persisted_out is not None:
             persisted_out.append(src)

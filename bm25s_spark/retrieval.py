@@ -39,6 +39,9 @@ Reference semantics reproduced exactly:
 
 from __future__ import annotations
 
+from collections import Counter
+
+import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -46,6 +49,31 @@ from bm25s_spark import scoring
 from bm25s_spark.indexer import IMPACT_COLS, NNOC_COLS, BM25Index
 from bm25s_spark.scoring import METHODS, METHODS_REQUIRING_NNOC
 from bm25s_spark.tokenization import make_tokenizer_udf
+
+
+def count_query_terms(queries_pdf: pd.DataFrame, query_id_col: str,
+                      text_col: str, local_tok) -> pd.DataFrame:
+    """Driver-side (query_id, term, mult) for a query batch already
+    resident as a pandas frame — the local twin of the distributed
+    ``explode → groupBy(query_id, term).count()``.
+
+    ``local_tok`` is the driver tokenizer (``make_local_tokenizer``,
+    which shares the distributed UDF's kernel); ``None`` means
+    ``text_col`` already holds token arrays, counted verbatim.  A null
+    element inside a pre-tokenized array is kept as a null term, as the
+    distributed explode keeps it; a ``term_stats`` join drops it."""
+    texts = queries_pdf[text_col]
+    token_lists = texts if local_tok is None else local_tok(texts)
+    counts = Counter(
+        (qid, t)
+        for qid, toks in zip(queries_pdf[query_id_col], token_lists)
+        if toks is not None
+        for t in toks
+    )
+    return pd.DataFrame(
+        [(q, t, m) for (q, t), m in counts.items()],
+        columns=["query_id", "term", "mult"],
+    ).astype({"mult": "int64"})
 
 
 def tokenize_queries(index: BM25Index, queries_df: DataFrame,
@@ -87,21 +115,7 @@ def tokenize_queries(index: BM25Index, queries_df: DataFrame,
             .toPandas()
         )
         if len(probe) <= localize_max:
-            if local_tok is not None:
-                token_lists = local_tok(probe[text_col])
-            else:
-                token_lists = probe[text_col]
-            counts: dict = {}
-            for qid, toks in zip(probe[query_id_col], token_lists):
-                if toks is None:
-                    continue
-                if hasattr(qid, "item"):
-                    qid = qid.item()  # numpy scalar → Python for createDataFrame
-                for t in toks:
-                    # a null element in a pre-tokenized array explodes to
-                    # a null term row distributed — keep it for parity
-                    key = (qid, t)
-                    counts[key] = counts.get(key, 0) + 1
+            qt = count_query_terms(probe, query_id_col, text_col, local_tok)
             schema = StructType([
                 StructField("query_id", queries_df.schema[query_id_col].dataType, True),
                 StructField("term", StringType(), True),
@@ -111,7 +125,7 @@ def tokenize_queries(index: BM25Index, queries_df: DataFrame,
 
             return local_relation(
                 queries_df.sparkSession,
-                [(q, t, int(m)) for (q, t), m in counts.items()], schema,
+                list(qt.itertuples(index=False, name=None)), schema,
             )
     if pretok:
         token_col = F.col(text_col)
@@ -384,36 +398,6 @@ def _with_pad_candidates(index, queries_df, qterms, scores, k, method,
         .select("query_id", "doc_id", "score")
     )
     return scores.select("query_id", "doc_id", "score").unionByName(cand)
-
-
-def _pad_to_k(index, queries_df, qterms, topk, k, method, idf_method,
-              query_id_col, allow_negative: bool = False) -> DataFrame:
-    """Post-top-k padding for the sharded kernel (whose output is already
-    ≤k rows/query): union nnoc-scored pool candidates and re-rank.  No
-    count-probe — the pad rows are a broadcastable ``n_queries × 2k``
-    sliver, so always unioning and letting the window drop them is
-    cheaper than a probe job.  The caller persists ``topk`` (it is
-    consumed by both the anti-join and the union)."""
-    all_q = queries_df.select(F.col(query_id_col).alias("query_id")).distinct()
-    pool = index.doc_lens.select("doc_id").orderBy("doc_id").limit(2 * k)
-    nnoc = _nnoc_per_query(index, qterms, method, idf_method, allow_negative)
-    cand = (
-        F.broadcast(all_q).crossJoin(F.broadcast(pool))
-        .join(topk.select("query_id", "doc_id"),
-              ["query_id", "doc_id"], "left_anti")
-        .join(F.broadcast(nnoc), "query_id", "left")
-        .withColumn("score", F.coalesce(F.col("nnoc_sum"), F.lit(0.0)))
-        .select("query_id", "doc_id", "score")
-    )
-    unioned = topk.select("query_id", "doc_id", "score").unionByName(cand)
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("score").desc(), F.col("doc_id").asc()
-    )
-    return (
-        unioned.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", "rank", "doc_id", "score")
-    )
 
 
 def score_all(

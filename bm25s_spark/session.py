@@ -22,13 +22,18 @@ def get_spark(
     cores: local parallelism (defaults to $SPARK_GRAFT_CPUS or 32).
     shuffle_partitions: defaults to max(cores, 32) — small enough for
     local tests, and on a real cluster AQE coalesces anyway.
-    extra_conf: per-caller config overrides (applied last).
+    extra_conf: per-caller config overrides (applied last).  A
+    ``spark.driver.memory`` override also sizes the pinned initial heap.
     """
     if cores is None:
         cores = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     if shuffle_partitions is None:
         shuffle_partitions = max(cores, 32)
-    mem = os.environ.get("SPARK_DRIVER_MEM") or _default_driver_mem()
+    mem = (
+        (extra_conf or {}).get("spark.driver.memory")
+        or os.environ.get("SPARK_DRIVER_MEM")
+        or _default_driver_mem()
+    )
     builder = (
         SparkSession.builder.appName(app_name)
         .master(f"local[{cores}]")

@@ -8,9 +8,10 @@ way every horizontally-scaled search engine partitions its index.  Each
 row holds the term's postings *within one shard* as columnar arrays:
 delta-encoded local doc gaps (``reference`` stores raw int32 ids,
 ``reference/bm25s/__init__.py:432-438`` — delta encoding is our
-compression addition) plus one float32 impact array per BM25 variant and
-the per-(shard,term) **max impact** per variant (the block-max metadata
-that enables score-upper-bound pruning at query time).
+compression addition) plus one float32 impact array per BM25 variant.
+No block-max column is stored: the kernel takes each loaded list's
+maximum as its MaxScore upper bound, so a stored copy would only be
+written, never read.
 
 Doc-sharding also *structurally* bounds term skew: the per-group
 ``collect_list`` for even the most frequent term caps at
@@ -54,7 +55,7 @@ from pyspark.sql.types import (
 from bm25s_spark import scoring
 from bm25s_spark.indexer import IMPACT_COLS, NNOC_COLS, BM25Index
 from bm25s_spark.scoring import METHODS, METHODS_REQUIRING_NNOC, METHOD_SLUGS
-from bm25s_spark.retrieval import tokenize_queries
+from bm25s_spark.retrieval import count_query_terms, tokenize_queries
 from bm25s_spark.tokenization import make_local_tokenizer
 from bm25s_spark.util import local_relation
 
@@ -71,9 +72,6 @@ SHARD_SCHEMA_FIELDS = [
 ] + [
     StructField(f"impacts_{METHOD_SLUGS[m]}", ArrayType(FloatType()), False)
     for m in METHODS
-] + [
-    StructField(f"max_impact_{METHOD_SLUGS[m]}", FloatType(), False)
-    for m in METHODS
 ]
 SHARD_SCHEMA = StructType(SHARD_SCHEMA_FIELDS)
 # assembly output: numeric fields only (term/df joined back afterwards)
@@ -84,7 +82,7 @@ ASSEMBLE_SCHEMA = StructType(
 
 def build_sharded_postings(index: BM25Index, docs_per_shard: int | None = None) -> DataFrame:
     """Flat postings → blocked (shard_id, term) rows with delta-encoded
-    doc gaps and per-variant impact arrays + block maxes.
+    doc gaps and per-variant impact arrays.
 
     One shuffle of compact flat rows hash-partitioned on
     ``(shard_id, term_id)``, then a Tungsten sort within partitions and
@@ -180,16 +178,13 @@ def _emit_groups(pdf: pd.DataFrame, bounds: np.ndarray, slugs, dps: int) -> pd.D
     }
     for s in slugs:
         rows[f"impacts_{s}"] = []
-        rows[f"max_impact_{s}"] = []
     for a, b in zip(starts, ends):
         loc = local[a:b]
         rows["doc_gaps"].append(np.diff(loc, prepend=np.int32(0)))
         rows["tfs"].append(tfs[a:b])
         rows["dls"].append(dls[a:b])
         for s in slugs:
-            arr = imp_cols[s][a:b]
-            rows[f"impacts_{s}"].append(arr)
-            rows[f"max_impact_{s}"].append(np.float32(arr.max()))
+            rows[f"impacts_{s}"].append(imp_cols[s][a:b])
     return pd.DataFrame(rows)
 
 
@@ -286,69 +281,33 @@ def _local_qstats(
     """Driver-side twin of the ``tokenize_queries ⨝ term_stats`` metadata
     pull for a ≤chunk batch already resident as ``probe_pdf``.
 
-    Tokenization runs on the driver through the SAME pandas kernel the
-    distributed UDF wraps (``local_tok``; ``None`` means ``text_col`` is
-    pre-tokenized arrays, exploded verbatim — the distributed contract).
-    Only the per-term df lookup touches Spark: the batch's distinct
-    terms (bounded by chunk × query length) broadcast-join into the
-    vocab-sized ``term_stats`` — one JVM-only job, no Python workers, no
-    explode/groupBy shuffle.  Output columns/dtypes match the
-    distributed ``qstats.toPandas()`` frame: (query_id, term, mult, df
-    [, _nnoc]) with inner-join semantics (OOV terms and empty-token
-    queries drop here, exactly as the distributed join drops them)."""
-    if probe_pdf[query_id_col].isna().any():
-        raise ValueError(
-            f"null {query_id_col!r} in query batch — every query needs a "
-            "non-null id (results are keyed by it)"
+    Tokenization runs on the driver (``count_query_terms``; ``local_tok``
+    ``None`` means pre-tokenized arrays).  Only the per-term df lookup
+    touches Spark: the batch's distinct terms (bounded by chunk × query
+    length) broadcast-join into the vocab-sized ``term_stats`` — one
+    JVM-only job, no Python workers, no explode/groupBy shuffle.  Output
+    columns/dtypes match the distributed ``qstats.toPandas()`` frame:
+    (query_id, term, mult, df[, _nnoc]) with inner-join semantics (OOV
+    and null terms and empty-token queries drop here, exactly as the
+    distributed join drops them)."""
+    qt = count_query_terms(probe_pdf, query_id_col, text_col, local_tok)
+    distinct_terms = sorted(t for t in qt["term"].unique() if t is not None)
+    if distinct_terms:
+        tdf = local_relation(
+            index.spark, [(t,) for t in distinct_terms], "term string"
         )
-    if local_tok is not None:
-        token_lists = local_tok(probe_pdf[text_col])
-    else:
-        token_lists = probe_pdf[text_col]
-    qids: list = []
-    terms: list = []
-    for qid, toks in zip(probe_pdf[query_id_col], token_lists):
-        if toks is None:
-            continue
-        for t in toks:
-            # a null element inside a pre-tokenized array: the
-            # distributed path explodes it to a null term row that the
-            # term_stats join then drops — dropping it here is the same
-            if t is None:
-                continue
-            qids.append(qid)
-            terms.append(t)
-    qt = pd.DataFrame({
-        "query_id": pd.Series(qids, dtype=None if qids else object),
-        "term": pd.Series(terms, dtype=None if terms else object),
-    })
-    if len(qt):
-        qt = (
-            qt.groupby(["query_id", "term"], as_index=False, sort=False)
-            .size()
-            .rename(columns={"size": "mult"})
+        stats = (
+            index.term_stats.join(F.broadcast(tdf), "term")
+            .select("term", "df", *nnoc_cols)
+            .toPandas()
         )
-        qt["mult"] = qt["mult"].astype("int64")
     else:
-        qt["mult"] = pd.Series([], dtype="int64")
-    distinct_terms = sorted(set(terms))
-    spark = index.spark
-    out_cols = ["query_id", "term", "mult", "df"] + (
-        ["_nnoc"] if nnoc_cols else []
-    )
-    if not distinct_terms:
         stats = pd.DataFrame({"term": pd.Series([], dtype=object),
                               "df": pd.Series([], dtype="int64")})
         if nnoc_cols:
             stats["_nnoc"] = pd.Series([], dtype="float64")
-        return qt.merge(stats, on="term", how="inner")[out_cols]
-    tdf = local_relation(
-        spark, [(t,) for t in distinct_terms], "term string"
-    )
-    stats = (
-        index.term_stats.join(F.broadcast(tdf), "term")
-        .select("term", "df", *nnoc_cols)
-        .toPandas()
+    out_cols = ["query_id", "term", "mult", "df"] + (
+        ["_nnoc"] if nnoc_cols else []
     )
     return qt.merge(stats, on="term", how="inner")[out_cols]
 
@@ -387,9 +346,9 @@ def retrieve_sharded(
     as approximate telemetry, not exact counts.
 
     ``prune=True`` enables the TAAT MaxScore pruning inside the kernel
-    (uses the per-(shard, term) block-max impacts; disabled automatically
-    when a weight mask is present).  Result sets are identical up to
-    tie-group membership.
+    (each loaded posting list's maximum impact is its upper bound;
+    disabled automatically when a weight mask is present).  Result sets
+    are identical up to tie-group membership.
 
     ``exact=True`` recomputes every impact in float64 from the stored
     (tf, dl) arrays instead of reading the float32 eager impacts — used
@@ -399,25 +358,35 @@ def retrieve_sharded(
     ties doc_id-ascending, so the kernel's candidate cut agrees exactly
     with an oracle ranking on rounded scores.
 
-    ``query_chunk_size`` also bounds the driver-side batch-size probe:
-    the fast path pulls up to ``query_chunk_size + 1`` query rows —
-    ids AND text — to the driver, so with very large per-query text
-    (documents-as-queries) lower ``query_chunk_size`` or pre-tokenize
-    to keep that pull byte-bounded.
+    **Probe.** Every call first pulls at most ``query_chunk_size + 1``
+    query rows — ids AND text — to the driver (one Arrow job).  A batch
+    that fits (≤ ``query_chunk_size`` rows) takes its query metadata
+    from those rows: the driver tokenizer twin counts terms locally and
+    one JVM-only broadcast join fetches their df; the stemmer-less
+    ``engine="sql"`` tokenizer, which has no driver twin, runs over the
+    probed rows as a local relation instead.  With very large per-query
+    text (documents-as-queries) lower ``query_chunk_size`` or
+    pre-tokenize to keep the probe byte-bounded.  The returned plan of a
+    fitting batch is fully lazy (one kernel job); its broadcast lives as
+    long as the returned DataFrame.
 
-    ``query_chunk_size`` bounds the driver-side state per kernel pass:
-    batches larger than this are streamed through the kernel in chunks —
-    each chunk pulls *only its own* (query_id, term, mult, df) metadata
-    to the driver (Arrow ``toPandas`` on a chunk filter), broadcasts it,
-    materializes its candidate set (``localCheckpoint``), and destroys
-    its broadcast before the next chunk starts.  Driver peak is therefore
-    O(chunk) for the metadata and broadcasts; the only O(batch)
-    driver-side structures left are the sorted query-id list (ids only —
-    the reference holds the full query set in RAM,
-    ``reference/bm25s/__init__.py:759-803``) and the per-query nnoc sums.
-    Single-chunk batches keep the fully-lazy plan (one job); there the
-    chunk broadcast lives as long as the returned DataFrame — spill-able
-    by the JVM block manager, freed when the result goes out of scope.
+    **Chunks.** A larger batch is streamed through the kernel in chunks
+    of ``query_chunk_size`` query ids: each chunk pulls *only its own*
+    (query_id, term, mult, df) metadata to the driver (Arrow ``toPandas``
+    on a chunk filter), broadcasts it, materializes its candidate set
+    (``localCheckpoint``), and destroys its broadcast before the next
+    chunk starts.  Driver peak is therefore O(chunk) for the metadata
+    and broadcasts; the only O(batch) driver-side structures left are
+    the sorted query-id list (ids only — the reference holds the full
+    query set in RAM, ``reference/bm25s/__init__.py:759-803``) and the
+    per-query nnoc sums.
+
+    **Pad.** ``pad=True`` returns exactly k rows per query.  The 2·k
+    lowest doc ids are unioned as score-0 candidates against every query
+    id of the batch (all-OOV and empty queries included) before the
+    final merge, which adds the query's nnoc constant and drops a pad
+    row whose doc already has a real candidate; the merge's single
+    top-k cut then serves both real and pad rows.
     """
     idf_method = idf_method or method
     if k > index.num_docs:
@@ -449,84 +418,70 @@ def retrieve_sharded(
     _nnoc_cols = (
         [F.col(NNOC_COLS[method]).alias("_nnoc")] if compat_nnoc else []
     )
-    # batch-size probe doubling as the metadata pull: when the query
-    # tokenizer has a driver-local twin (the pandas engine — every
-    # config except stemmer-less "sql"), pull the ≤chunk+1 query rows
-    # themselves (one tiny Arrow job) — a ≤chunk batch then tokenizes
-    # ON THE DRIVER (milliseconds for a few thousand short strings,
-    # identical output by construction: make_local_tokenizer shares the
-    # UDF's kernel closure) and only the vocab-side df lookup runs as a
-    # Spark job (JVM-only broadcast semi-join into term_stats — no
-    # Python-worker round-trip, no explode/groupBy shuffle).  The limit
-    # bounds the probe to O(chunk) rows however big the batch is; row
-    # count over-approximates distinct ids, which can only push a
-    # duplicated-id batch onto the chunked path — correct either way.
-    # Deliberate tradeoff: a >chunk batch discards this one bounded
-    # pull (chunk+1 rows of query text) — the alternative, an id-only
-    # count first, would put a second Spark job back on every
-    # interactive ≤chunk batch, the exact cost this path removes.
-    # Callers with pathologically large per-query text (documents as
-    # queries) should lower query_chunk_size or pre-tokenize.
+
+    def qstats_of(qterms: DataFrame) -> DataFrame:
+        return qterms.join(
+            index.term_stats.select("term", "df", *_nnoc_cols), "term"
+        ).select("query_id", "term", "mult", "df",
+                 *(["_nnoc"] if compat_nnoc else []))
+
+    # batch-size probe doubling as the metadata pull: the ≤chunk+1 query
+    # rows themselves (one tiny Arrow job).  A ≤chunk batch tokenizes ON
+    # THE DRIVER (milliseconds for a few thousand short strings, identical
+    # output by construction: make_local_tokenizer shares the UDF's
+    # kernel closure) and only the vocab-side df lookup runs as a Spark
+    # job.  Row count over-approximates distinct ids, which can only push
+    # a duplicated-id batch onto the chunked path — correct either way.
+    # A >chunk batch discards this one bounded pull; an id-only count
+    # first would put a second Spark job on every interactive batch.
     pretok = isinstance(queries_df.schema[text_col].dataType, ArrayType)
     local_tok = (
         None if pretok
         else make_local_tokenizer(**index.tokenizer_kwargs)
     )
-    probe_pdf = None
-    if pretok or local_tok is not None:
-        probe_pdf = (
-            queries_df.select(query_id_col, text_col)
-            .limit(query_chunk_size + 1)
-            .toPandas()
-        )
-        n_q_probe = len(probe_pdf)
+    probe_pdf = (
+        queries_df.select(query_id_col, text_col)
+        .limit(query_chunk_size + 1)
+        .toPandas()
+    )
+    bounded = len(probe_pdf) <= query_chunk_size
+    if bounded:
+        ids = probe_pdf[query_id_col]
+        has_null_id = bool(ids.isna().any())
+        # every query id of the batch, all-OOV queries included: each
+        # gets a q_idx, hence pad rows
+        query_ids = sorted(pd.unique(ids.dropna()).tolist())
     else:
-        n_q_probe = (
-            queries_df.select(query_id_col).limit(query_chunk_size + 1).count()
+        query_ids = [
+            r[0] for r in queries_df.select(query_id_col).distinct()
+            .orderBy(query_id_col).collect()
+        ]
+        has_null_id = bool(query_ids) and query_ids[0] is None
+    if has_null_id:
+        raise ValueError(
+            f"null {query_id_col!r} in query batch — every query needs a "
+            "non-null id (results are keyed by it)"
         )
-    qterms = None
-    fold_pad = False
-    if n_q_probe <= query_chunk_size and probe_pdf is not None:
-        qpdf = _local_qstats(
-            index, probe_pdf, query_id_col, text_col, local_tok,
-            _nnoc_cols,
-        )
-        # the probe holds EVERY query id of the batch (all-OOV queries
-        # included, which the in-vocab qpdf drops) — keying the merge on
-        # the full id set lets the pad-candidate pool ride the kernel
-        # job (`fold_pad`) instead of a separate post-top-k union+window
-        # pass; ids absent from the kernel payload simply emit no
-        # candidate rows
-        query_ids = sorted(pd.unique(probe_pdf[query_id_col]).tolist())
-        # round_to (gate mode) keeps the classic post-top-k pad pass:
-        # its rounding/tie contract is pinned against the oracle there
-        fold_pad = pad and round_to is None
-    else:
+    if not bounded:
         # the batch is already known to exceed the chunk size — skip
         # tokenize_queries' own driver-localization probe
-        qterms = tokenize_queries(index, queries_df, query_id_col, text_col,
-                                  localize_max=0)
-        qstats = (
-            qterms.join(
-                index.term_stats.select("term", "df", *_nnoc_cols), "term"
-            )
-            .select("query_id", "term", "mult", "df",
-                    *(["_nnoc"] if compat_nnoc else []))
+        qstats = qstats_of(tokenize_queries(
+            index, queries_df, query_id_col, text_col, localize_max=0
+        )).persist()
+    elif pretok or local_tok is not None:
+        qpdf = _local_qstats(
+            index, probe_pdf, query_id_col, text_col, local_tok, _nnoc_cols,
         )
-        if n_q_probe <= query_chunk_size:
-            # Arrow toPandas, not collect(): the driver holds one compact
-            # columnar frame of (query_id, term, mult, df) — ~10× denser
-            # than per-row Python objects
-            qpdf = qstats.toPandas()
-            query_ids = sorted(pd.unique(qpdf["query_id"]).tolist())
-        else:
-            qpdf = None
-            qstats = qstats.persist()
-            query_ids = [
-                r[0]
-                for r in qstats.select("query_id").distinct()
-                .orderBy("query_id").collect()
-            ]
+    else:
+        # stemmer-less "sql" tokenizer: no driver twin (its regex engine
+        # is the JVM's) — tokenize the probed rows as a local relation
+        probed = local_relation(
+            spark, list(probe_pdf.itertuples(index=False, name=None)),
+            queries_df.select(query_id_col, text_col).schema,
+        )
+        qpdf = qstats_of(tokenize_queries(
+            index, probed, query_id_col, text_col, localize_max=0
+        )).toPandas()
     slug = METHOD_SLUGS[method]
     # allow_negative (robertson idf unclamped) rides the cross-recompute
     # path: the stored float32 impacts are clamped, but tf/dl are kept
@@ -851,34 +806,11 @@ def retrieve_sharded(
     # chunk the query batch: each chunk is one bounded metadata pull +
     # one bounded broadcast + one kernel pass, materialized before the
     # next chunk starts so per-chunk broadcasts can be destroyed eagerly
-    if qpdf is not None:
+    if bounded:
         accum_nnoc(qpdf)
         # single chunk: fully lazy (one job); the broadcast lives as
         # long as the returned plan does
         candidates, _bc = run_chunk(qpdf)
-        if fold_pad:
-            # pad folded INTO the kernel job: union the 2·k-lowest-doc
-            # pool (score 0 — the nnoc add below lifts pads to the same
-            # nnoc-floor value the reference's dense vector assigns
-            # unmatched docs) against every query BEFORE the final
-            # merge.  Equivalent to the post-top-k pad pass by rank
-            # algebra (topk(topk(R) ∪ P) = topk(R ∪ P) for rows pruned
-            # per query in the merge), and one whole job + window pass
-            # cheaper; matched pool docs keep their real score — the
-            # merge drops their pad twin.
-            pool = index.doc_lens.select("doc_id").orderBy("doc_id") \
-                .limit(2 * k)
-            pad_rows = (
-                F.broadcast(qid_df.select("q_idx")).crossJoin(pool)
-                .select(
-                    "q_idx", F.col("doc_id").cast("long").alias("doc_id"),
-                    F.lit(0.0).alias("score"),
-                    F.lit(True).alias("is_pad"),
-                )
-            )
-            candidates = candidates.withColumn(
-                "is_pad", F.lit(False)
-            ).unionByName(pad_rows)
     else:
         n_chunks = (len(query_ids) + query_chunk_size - 1) // query_chunk_size
         chunked = qstats.join(F.broadcast(qid_df), "query_id").withColumn(
@@ -917,29 +849,41 @@ def retrieve_sharded(
             accum_nnoc(cpdf)
             return part
 
-        if n_chunks == 0:
-            # every query tokenized to OOV-only terms: no kernel work —
-            # an empty candidate set flows through the normal merge/pad
-            # path (the single-chunk branch reaches the same result via
-            # an empty broadcast payload)
-            candidates = local_relation(spark, [], out_schema)
-        else:
-            # a 2-deep thread pool overlaps consecutive chunks (Spark
-            # schedules jobs from separate threads concurrently),
-            # recovering the stage pipelining a strictly sequential
-            # materialize-barrier loop gives up, while broadcast +
-            # metadata memory stays bounded by the in-flight window
-            # instead of the whole batch
-            from concurrent.futures import ThreadPoolExecutor
+        # a 2-deep thread pool overlaps consecutive chunks (Spark
+        # schedules jobs from separate threads concurrently), recovering
+        # the stage pipelining a strictly sequential materialize-barrier
+        # loop gives up, while broadcast + metadata memory stays bounded
+        # by the in-flight window instead of the whole batch
+        from concurrent.futures import ThreadPoolExecutor
 
-            with ThreadPoolExecutor(max_workers=2) as pool:
-                parts = list(pool.map(process_chunk, range(n_chunks)))
-            candidates = parts[0]
-            for part in parts[1:]:
-                candidates = candidates.unionByName(part)
+        with ThreadPoolExecutor(max_workers=2) as pool:
+            parts = list(pool.map(process_chunk, range(n_chunks)))
+        candidates = parts[0]
+        for part in parts[1:]:
+            candidates = candidates.unionByName(part)
         qstats.unpersist()
         if mask_rows_df is not None:
             mask_rows_df.unpersist()
+
+    if pad:
+        # pad folded INTO the final merge: union the 2·k-lowest-doc pool
+        # (score 0 — the nnoc add below lifts pads to the same nnoc-floor
+        # value the reference's dense vector assigns unmatched docs)
+        # against every query id before the merge, so one top-k cut
+        # serves real and pad rows alike.  Matched pool docs keep their
+        # real score — the merge drops their pad twin.
+        pool = index.doc_lens.select("doc_id").orderBy("doc_id").limit(2 * k)
+        pad_rows = (
+            F.broadcast(qid_df.select("q_idx")).crossJoin(pool)
+            .select(
+                "q_idx", F.col("doc_id").cast("long").alias("doc_id"),
+                F.lit(0.0).alias("score"),
+                F.lit(True).alias("is_pad"),
+            )
+        )
+        candidates = candidates.withColumn(
+            "is_pad", F.lit(False)
+        ).unionByName(pad_rows)
 
     # final exact merge: ≤ shards×k candidates per query — tiny
     merged = candidates.join(F.broadcast(qid_df), "q_idx").drop("q_idx")
@@ -979,9 +923,8 @@ def retrieve_sharded(
         # parity (reference/bm25s/selection.py:14-37): argpartition then
         # descending argsort of the k-partition
         if "is_pad" in pdf.columns:
-            # folded pad rows: a doc with a real (kernel) candidate row
-            # keeps that row only — its pad twin is dropped here, the
-            # same per-(query, doc) exclusion the anti-join performed
+            # pad rows: a doc with a real (kernel) candidate row keeps
+            # that row only — its pad twin is dropped here
             isp = pdf["is_pad"].to_numpy()
             if isp.any():
                 real_docs = pdf["doc_id"].to_numpy()[~isp]
@@ -999,11 +942,10 @@ def retrieve_sharded(
             order = np.lexsort((pdf["doc_id"].to_numpy(), -rs))[:kk]
         else:
             # deterministic (score desc, doc_id asc) — the documented
-            # tie contract.  The earlier argpartition+stable-argsort
-            # broke cross-shard ties by shuffle arrival order, so the
-            # folded-pad merge and the chunked/pad window could pick
-            # different members of an exact tie group; a full lexsort
-            # over the ≤ shards×k candidate sliver is just as cheap.
+            # tie contract; argpartition + stable argsort would break
+            # cross-shard ties by shuffle arrival order, and a full
+            # lexsort over the ≤ shards×k candidate sliver is just as
+            # cheap
             order = np.lexsort((pdf["doc_id"].to_numpy(), -sc))[:kk]
         return pd.DataFrame({
             "query_id": np.full(kk, key[0]),
@@ -1012,36 +954,4 @@ def retrieve_sharded(
             "score": sc[order],
         })
 
-    topk = merged.groupBy("query_id").applyInPandas(final_topk, final_schema)
-
-    if not pad or fold_pad:
-        # fold_pad already unioned the pad pool pre-merge: done in the
-        # kernel job, no post-top-k pass
-        return topk
-    # pad to exactly k rows/query (empty or sparse queries)
-    topk = topk.persist()
-    from bm25s_spark.retrieval import _pad_to_k
-
-    if qterms is None:
-        # driver-local metadata branch: rebuild the tiny in-vocab
-        # (query_id, term, mult) relation from the chunk frame instead
-        # of re-tokenizing distributed.  Post-vocab-join qterms is
-        # equivalent for padding: _nnoc_per_query inner-joins term_stats
-        # anyway, and its consumers left-join + coalesce(nnoc_sum, 0)
-        qt_schema = StructType([
-            StructField("query_id", qid_type, False),
-            StructField("term", StringType(), False),
-            StructField("mult", LongType(), False),
-        ])
-        qterms = local_relation(
-            spark,
-            [(q, t, int(m)) for q, t, m in zip(
-                qpdf["query_id"].tolist(), qpdf["term"].tolist(),
-                qpdf["mult"].tolist(),
-            )],
-            qt_schema,
-        )
-    return _pad_to_k(
-        index, queries_df, qterms, topk, k, method, idf_method, query_id_col,
-        allow_negative,
-    )
+    return merged.groupBy("query_id").applyInPandas(final_topk, final_schema)

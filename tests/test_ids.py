@@ -31,10 +31,14 @@ def _corpus(spark, n=500):
 
 def test_dense_ids_equal_global_rank(spark):
     df = _corpus(spark)
-    out = assign_dense_ids(df, ["ka", "kb"], "rid")
-    rows = out.orderBy("ka", "kb").collect()
-    assert [r["rid"] for r in rows] == list(range(len(rows)))
-    df.unpersist()
+    tracked: list = []
+    try:
+        out = assign_dense_ids(df, ["ka", "kb"], "rid", persisted_out=tracked)
+        rows = out.orderBy("ka", "kb").collect()
+        assert [r["rid"] for r in rows] == list(range(len(rows)))
+    finally:
+        for t in tracked:
+            t.unpersist()
 
 
 def test_input_cache_retained_and_tracked(spark):
@@ -56,9 +60,9 @@ def test_input_cache_retained_and_tracked(spark):
 
 def test_caller_persisted_input_left_alone(spark):
     df = _corpus(spark).persist(StorageLevel.MEMORY_AND_DISK)
+    tracked: list = []
     try:
         assert df.storageLevel != StorageLevel.NONE
-        tracked: list = []
         out = assign_dense_ids(df, ["ka", "kb"], "rid", persisted_out=tracked)
         out.count()
         # a cache the caller owns is never re-persisted or torn down by
@@ -66,4 +70,6 @@ def test_caller_persisted_input_left_alone(spark):
         assert df.storageLevel != StorageLevel.NONE
         assert not any(t is df for t in tracked)
     finally:
+        for t in tracked:
+            t.unpersist()
         df.unpersist()

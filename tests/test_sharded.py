@@ -341,3 +341,86 @@ def test_local_qstats_equals_distributed_pull(spark):
     key = lambda f: sorted(map(tuple, f[["query_id", "term", "mult", "df"]]
                                .itertuples(index=False)))
     assert key(local) == key(dist)
+
+
+@pytest.fixture(scope="module")
+def pad_index(spark):
+    from bm25s_spark.indexer import build_index
+
+    idx = build_index(transcripts_df(spark, "t2"),
+                      order_cols=["conv_id", "turn_idx"])
+    idx.docs_per_shard = 300
+    return idx
+
+
+def _padded_batch(spark, idx, k):
+    """Small batch mixing an empty, an all-OOV and a sparse (< k
+    matching docs) query with ordinary doc spans."""
+    from pyspark.sql import functions as F
+
+    rare = (
+        idx.term_stats.where((F.col("df") > 0) & (F.col("df") < k))
+        .orderBy("term").select("term").first()["term"]
+    )
+    texts = [r["text"] for r in idx.doc_map.orderBy("doc_id").limit(200)
+             .select("text").collect()]
+    queries = [("q-empty", ""), ("q-oov", "zzqx qqzz xxqq"),
+               ("q-sparse", rare)]
+    queries += [q for q in queries_for(texts, 12, seed=5) if q[1].strip()][:5]
+    return spark.createDataFrame(queries, "query_id string, text string")
+
+
+@pytest.mark.parametrize("path", ["bounded", "chunked", "sql_tokenizer"])
+def test_folded_pad_matches_join(spark, pad_index, path):
+    """Gate-mode padded retrieval pads inside the final merge on every
+    metadata path: empty, all-OOV and sparse queries get exactly k rows
+    whose nnoc-floor pads rank like the join strategy's."""
+    from bm25s_spark.indexer import build_index
+    from bm25s_spark.retrieval import retrieve
+
+    from tests.conftest import rows_to_arrays
+
+    k = 10
+    idx = pad_index
+    if path == "sql_tokenizer":
+        idx = build_index(transcripts_df(spark, "t2"),
+                          order_cols=["conv_id", "turn_idx"],
+                          tokenizer_engine="sql")
+        idx.docs_per_shard = 300
+    qdf = _padded_batch(spark, idx, k)
+    ref = _rows(retrieve(idx, qdf, k=k, method="bm25l", strategy="join"))
+    ours = _rows(retrieve(
+        idx, qdf, k=k, method="bm25l", strategy="sharded", round_to=4,
+        prune=False, pad=True,
+        query_chunk_size=2 if path == "chunked" else 16384,
+    ))
+    nnoc_floor = {r["query_id"]: r["score"] for r in ref if r["rank"] == k}
+    sparse = sorted(r["score"] for r in ref if r["query_id"] == "q-sparse")
+    assert sparse[0] == nnoc_floor["q-sparse"] < sparse[-1]  # really padded
+    assert len(ours) == qdf.count() * k
+    # round_to=4 moves each score by up to 5e-5
+    assert_rank_identical(ours, *rows_to_arrays(ref), atol=1e-4)
+
+
+def _cached_rdds(spark) -> set:
+    """Ids of the RDDs behind DataFrame caches.  Local checkpoints are
+    left out: a chunked result's candidate blocks are its own data."""
+    return {
+        rid for rid, rdd in spark.sparkContext._jsc.getPersistentRDDs().items()
+        if not rdd.rdd().isCheckpointed()
+    }
+
+
+def test_padded_chunked_retrieve_caches_nothing(spark, pad_index):
+    """A padded, chunked sharded retrieve leaves no DataFrame cache
+    behind once its result is consumed."""
+    from bm25s_spark.retrieval import retrieve
+    from bm25s_spark.shards import ensure_sharded
+
+    ensure_sharded(pad_index).count()
+    qdf = _padded_batch(spark, pad_index, 5)
+    before = _cached_rdds(spark)
+    rows = retrieve(pad_index, qdf, k=5, strategy="sharded", pad=True,
+                    query_chunk_size=3).collect()
+    assert len(rows) == qdf.count() * 5
+    assert _cached_rdds(spark) - before == set()
