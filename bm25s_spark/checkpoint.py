@@ -32,12 +32,9 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from bm25s_spark.indexer import BM25Index, IMPACT_COLS, NNOC_COLS
-from bm25s_spark.scoring import (
-    DEFAULT_B, DEFAULT_DELTA, DEFAULT_K1, METHODS,
-)
-from bm25s_spark import scoring
-from bm25s_spark.ids import assign_dense_ids, assign_doc_ids
+from bm25s_spark.indexer import BM25Index, corpus_term_stats, with_impacts
+from bm25s_spark.scoring import DEFAULT_B, DEFAULT_DELTA, DEFAULT_K1
+from bm25s_spark.ids import assign_doc_ids
 from bm25s_spark.tokenization import make_tokenizer_udf
 
 MANIFEST = "_MANIFEST.json"
@@ -236,39 +233,18 @@ def build_index_checkpointed(
     tf = ck.stage("tf", s_tf)
 
     def s_term_stats():
-        dfreq = tf.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
-        empty_row = spark.range(1).select(
-        F.lit("").alias("term"), F.lit(0).cast("long").alias("df")
-    )  # JVM-native one-row relation: createDataFrame(rows) would put a
-    # Python-worker scan into every downstream postings/save plan
-        vocab = dfreq.unionByName(empty_row).groupBy("term").agg(F.max("df").alias("df"))
-        from bm25s_spark.indexer import VOCAB_LOCALIZE_MAX
-
-        ts = assign_dense_ids(vocab, ["term"], "term_id",
-                              localize_max=VOCAB_LOCALIZE_MAX)
-        for m, col in NNOC_COLS.items():
-            ts = ts.withColumn(
-                col,
-                F.when(
-                    F.col("df") > 0,
-                    scoring.nnoc_expr(m, m, F.col("df"), num_docs, avgdl, k1, b, delta),
-                ).otherwise(F.lit(0.0)),
-            )
-        return ts
+        return corpus_term_stats(
+            spark, tf.groupBy("term").agg(F.count(F.lit(1)).alias("df")),
+            num_docs, avgdl, k1, b, delta,
+        )
 
     term_stats = ck.stage("term_stats", s_term_stats)
 
     def s_postings():
-        p = tf.join(term_stats.select("term", "term_id", "df"), "term")
-        for m in METHODS:
-            p = p.withColumn(
-                IMPACT_COLS[m],
-                scoring.impact_expr(
-                    m, m, F.col("tf"), F.col("dl"), F.col("df"),
-                    num_docs, avgdl, k1, b, delta,
-                ).cast("double"),
-            )
-        return p
+        return with_impacts(
+            tf.join(term_stats.select("term", "term_id", "df"), "term"),
+            num_docs, avgdl, k1, b, delta,
+        )
 
     postings = ck.stage(
         "postings", s_postings,

@@ -44,7 +44,8 @@ Scale notes
 * An imported index carries only the (method, idf_method) impacts the
   file stores — tf/dl are not part of the reference format — so
   retrieval on it is pinned to that combination (a loud ``ValueError``
-  otherwise, see ``check_compat``).
+  otherwise, see ``check_compat``).  ``save_index``/``load_index`` keep
+  the pin and the stored impacts.
 """
 
 from __future__ import annotations
@@ -428,22 +429,13 @@ def import_bm25s(
 
     raw = rng_df.mapInPandas(scan, "term_id long, doc_id long, score double")
 
-    # other-method impact columns are unknowable from this file: 0.0
-    # placeholders, kept unread by the check_compat guard.  (Not NaN —
-    # the pandas→Arrow passes downstream treat NaN as NULL, and the
-    # sharded assembly declares non-nullable float fields.)
-    impact_cols = [
-        (F.col("score") if m == method else F.lit(0.0).cast("double"))
-        .alias(IMPACT_COLS[m])
-        for m in METHODS
-    ]
     postings = (
         raw.join(term_stats.select("term", "term_id", "df"), "term_id")
         .select(
             "term", "doc_id",
             F.lit(0).cast("int").alias("dl"),
             F.lit(0).cast("int").alias("tf"),
-            "term_id", "df", *impact_cols,
+            "term_id", "df", *imported_impacts(method, F.col("score")),
         )
     )
 
@@ -459,7 +451,7 @@ def import_bm25s(
             .select(F.col("id").alias("doc_id"), "text")
         )
 
-    index = BM25Index(
+    return BM25Index(
         spark=spark,
         postings=postings,
         term_stats=term_stats,
@@ -473,9 +465,22 @@ def import_bm25s(
         docs_per_shard=auto_docs_per_shard(
             num_docs, spark.sparkContext.defaultParallelism
         ),
+        compat_import={"method": method, "idf_method": idf_method},
     )
-    index.compat_import = {"method": method, "idf_method": idf_method}
-    return index
+
+
+def imported_impacts(method: str, score) -> list:
+    """The five flat ``impact_*`` columns of an imported index: ``score``
+    (the file's stored impact) under ``method``.  Other-method impacts
+    are unknowable from the file: 0.0 placeholders, kept unread by the
+    :func:`check_compat` guard (not NaN — the pandas→Arrow passes
+    downstream treat NaN as NULL, and the sharded assembly declares
+    non-nullable float fields)."""
+    return [
+        (score.cast("double") if m == method else F.lit(0.0).cast("double"))
+        .alias(IMPACT_COLS[m])
+        for m in METHODS
+    ]
 
 
 def check_compat(index: BM25Index, method: str, idf_method: str,
@@ -484,7 +489,7 @@ def check_compat(index: BM25Index, method: str, idf_method: str,
     its file cannot support (wrong method/idf_method, or exact-mode /
     ``allow_negative`` recomputation, which needs the (tf, dl) the
     format does not carry)."""
-    info = getattr(index, "compat_import", None)
+    info = index.compat_import
     if info is None:
         return
     stored_idf = info["idf_method"] or info["method"]

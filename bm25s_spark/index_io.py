@@ -4,15 +4,17 @@ Replaces the reference's ``.npy`` triple + JSON vocab/params save/load
 (``reference/bm25s/__init__.py:941-1282``) with self-describing tables:
 
     <path>/params.json            scalars: num_docs, avgdl, k1, b, delta,
-                                  tokenizer config, docs_per_shard, version
+                                  tokenizer config, docs_per_shard, version,
+                                  the method pin of a reference-format import
     <path>/term_stats/            (term, term_id, df, nnoc_*)
     <path>/doc_lens/              (doc_id, dl)
     <path>/doc_map/               (doc_id, conv_id, turn_idx, ...) [optional]
     <path>/postings/              term-ordered flat postings (term-sorted —
                                   the CSC analog; built via the salted
                                   two-phase merge)
-    <path>/postings_sharded/      doc-sharded blocked layout, partitioned
-                                  by shard bucket (the query-path layout)
+    <path>/postings_sharded/      doc-sharded blocked layout (doc gaps,
+                                  tf, dl), partitioned by shard bucket
+                                  (the query-path layout)
 
 Format is parquet locally; pass ``fmt="iceberg"`` on a cluster with an
 Iceberg catalog (gated — falls back with a clear error if unavailable).
@@ -128,6 +130,7 @@ def _params_dict(index: BM25Index) -> dict:
         "delta": index.delta,
         "docs_per_shard": index.docs_per_shard,
         "tokenizer": index.tokenizer_kwargs,
+        "compat_import": index.compat_import,
     }
 
 
@@ -245,20 +248,26 @@ def _reassemble_index(spark: SparkSession, params: dict, term_stats: DataFrame,
     if params.get("version") != FORMAT_VERSION:
         raise ValueError(f"unsupported index version {params.get('version')}")
 
-    # reconstruct the flat postings view lazily from the sharded layout
-    # (doc_gaps → absolute ids); used only by the join strategy / cross
-    # combos, so reading it stays optional
-    from bm25s_spark.indexer import IMPACT_COLS
-    from bm25s_spark.scoring import METHODS
-
-    dps = int(params["docs_per_shard"])
     from pyspark.sql import Window
 
+    from bm25s_spark.compat import imported_impacts
+    from bm25s_spark.indexer import with_impacts
+
+    # reconstruct the flat postings view lazily from the sharded layout
+    # (doc_gaps → absolute ids) plus term_stats.df; only the join
+    # strategy and the operators read it.  Its impacts come from the
+    # build's own expressions over (tf, dl, df), so a loaded index scores
+    # exactly like a fresh one; an import's come from its stored
+    # ``imps``.  Layout columns are chosen by name, so layouts that still
+    # carry per-method impact arrays and df load the same way.
+    dps = int(params["docs_per_shard"])
+    num_docs, avgdl = int(params["num_docs"]), float(params["avg_doc_len"])
+    k1, b, delta = float(params["k1"]), float(params["b"]), float(params["delta"])
+    compat_import = params.get("compat_import")
+    imp = ["imps"] if compat_import is not None else []
     ex = sharded.select(
-        "term_id", "term", "df", "shard_id",
-        F.posexplode(
-            F.arrays_zip("doc_gaps", "tfs", "dls", *[f"impacts_{s}" for s in _slugs()])
-        ).alias("pos", "e"),
+        "term_id", "term", "shard_id",
+        F.posexplode(F.arrays_zip("doc_gaps", "tfs", "dls", *imp)).alias("pos", "e"),
     )
     w = (
         Window.partitionBy("shard_id", "term_id")
@@ -266,42 +275,37 @@ def _reassemble_index(spark: SparkSession, params: dict, term_stats: DataFrame,
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     )
     flat = ex.select(
-        "term_id", "term", "df", "shard_id", "pos",
-        F.sum(F.col("e.doc_gaps")).over(w).alias("local"),
+        "term_id", "term",
+        (F.col("shard_id") * dps + F.sum("e.doc_gaps").over(w)).alias("doc_id"),
         F.col("e.tfs").alias("tf"),
         F.col("e.dls").alias("dl"),
-        *[
-            F.col(f"e.impacts_{s}").cast("double").alias(IMPACT_COLS[m])
-            for m, s in zip(METHODS, _slugs())
-        ],
-    ).select(
-        "term_id", "term", "df", "tf", "dl",
-        (F.col("shard_id") * dps + F.col("local")).alias("doc_id"),
-        *[IMPACT_COLS[m] for m in METHODS],
-    )
+        *[F.col(f"e.{c}").alias(c) for c in imp],
+    ).join(term_stats.select("term_id", "df"), "term_id")
+    if compat_import is None:
+        postings = with_impacts(flat, num_docs, avgdl, k1, b, delta)
+    else:
+        postings = flat.select(
+            "term_id", "term", "doc_id", "tf", "dl", "df",
+            *imported_impacts(compat_import["method"], F.col("imps")),
+        )
 
     idx = BM25Index(
         spark=spark,
-        postings=flat,
+        postings=postings,
         term_stats=term_stats,
         doc_lens=doc_lens,
         doc_map=doc_map,
-        num_docs=int(params["num_docs"]),
-        avg_doc_len=float(params["avg_doc_len"]),
-        k1=float(params["k1"]),
-        b=float(params["b"]),
-        delta=float(params["delta"]),
+        num_docs=num_docs,
+        avg_doc_len=avgdl,
+        k1=k1,
+        b=b,
+        delta=delta,
         tokenizer_kwargs=params.get("tokenizer", {}),
         docs_per_shard=dps,
+        compat_import=compat_import,
     )
     idx.sharded = sharded
     return idx
-
-
-def _slugs():
-    from bm25s_spark.scoring import METHOD_SLUGS, METHODS
-
-    return [METHOD_SLUGS[m] for m in METHODS]
 
 
 def read_term_postings(spark: SparkSession, path: str,

@@ -7,7 +7,7 @@ of DataFrames/tables:
 - ``doc_lens``   (doc_id, dl)                       — per-doc token count
 - ``term_stats`` (term, term_id, df, nnoc_*)        — vocab + doc freq
 - ``postings``   (term, doc_id, tf, dl, impact_*)   — the flat inverted
-  index with **eagerly precomputed float32 impacts for all five variants**
+  index with **eagerly precomputed float64 impacts for all five variants**
   (north_star requirement), equivalent to the reference's CSC ``data``/
   ``indices`` arrays (``reference/bm25s/__init__.py:432-438``)
 - ``stats``      scalars: num_docs, avg_doc_len, k1, b, delta
@@ -27,9 +27,10 @@ The build is a pure DataFrame pipeline (SURVEY.md §3.1 lifecycle):
 
 ``k1/b/delta`` are pinned at index time like the reference
 (``reference/bm25s/__init__.py:144-152``); ``method``/``idf_method`` stay
-query-time choices because every variant's impact is stored (and arbitrary
-``method × idf_method`` cross-combinations are recoverable exactly from
-``tf``/``dl``/``df``).
+query-time choices: the flat table stores every variant's impact, and
+every ``method × idf_method`` combination is recoverable exactly from
+``tf``/``dl``/``df``.  The doc-sharded query layout (``shards.py``)
+stores only ``tf``/``dl`` and scores every combination from them.
 """
 
 from __future__ import annotations
@@ -99,7 +100,7 @@ class BM25Index:
     """Handle to the index tables plus the global scalars."""
 
     spark: SparkSession
-    postings: DataFrame          # (term, doc_id, tf, dl, impact_* ×5 float32)
+    postings: DataFrame          # (term, doc_id, tf, dl, term_id, df, impact_* ×5)
     term_stats: DataFrame        # (term, term_id, df, nnoc_bm25l, nnoc_bm25plus)
     doc_lens: DataFrame          # (doc_id, dl)
     doc_map: DataFrame | None    # (doc_id, <original key/payload columns>)
@@ -109,10 +110,13 @@ class BM25Index:
     b: float = DEFAULT_B
     delta: float = DEFAULT_DELTA
     tokenizer_kwargs: dict = field(default_factory=dict)
-    sharded: DataFrame | None = None   # blocked layout (see postings_blocks)
+    sharded: DataFrame | None = None   # doc-sharded layout (see shards.py)
     docs_per_shard: int = 65536
     # build-internal cached stages (tokenized, tf) — released by unpersist()
     aux_persisted: list = field(default_factory=list)
+    # {"method", "idf_method"} of a reference-format import
+    # (compat.import_bm25s): scoring is pinned to that stored combination
+    compat_import: dict | None = None
 
     def persist(self) -> "BM25Index":
         self.postings = self.postings.persist()
@@ -377,6 +381,68 @@ def _index_from_tokenized(
     )
 
 
+def corpus_term_stats(
+    spark: SparkSession,
+    dfreq: DataFrame,
+    num_docs: int,
+    avgdl: float,
+    k1: float,
+    b: float,
+    delta: float,
+    persisted_out: list | None = None,
+) -> DataFrame:
+    """(term, df) → ``term_stats`` (term, term_id, df, nnoc_*): the
+    vocabulary with the empty-token patch, dense term ids and the
+    per-term nonoccurrence constants under the given corpus scalars."""
+    # vocab with the empty-token patch (reference/bm25s/__init__.py:562-564):
+    # "" joins the vocab (df=0 → contributes nothing, but OOV lookups hit it)
+    empty_row = spark.range(1).select(
+        F.lit("").alias("term"), F.lit(0).cast("long").alias("df")
+    )  # JVM-native one-row relation: createDataFrame(rows) would put a
+    # Python-worker scan into every downstream postings/save plan
+    # max() dedups against a real "" term (possible when empty_fallback
+    # inserted "" into documents — its true df>0 wins over the patch's 0)
+    vocab = (
+        dfreq.unionByName(empty_row).groupBy("term").agg(F.max("df").alias("df"))
+    )
+    # vocab-sized and narrow (term, df): ids assign driver-locally up to
+    # VOCAB_LOCALIZE_MAX terms (one bounded Arrow pull + a pandas sort →
+    # pure-JVM local relation) instead of the 3-job range-partitioner
+    # path; web-scale vocabularies past the cap stay distributed
+    term_stats = assign_dense_ids(vocab, ["term"], "term_id",
+                                  persisted_out=persisted_out,
+                                  localize_max=VOCAB_LOCALIZE_MAX)
+    for m, col in NNOC_COLS.items():
+        term_stats = term_stats.withColumn(
+            col,
+            F.when(
+                F.col("df") > 0,
+                scoring.nnoc_expr(m, m, F.col("df"), num_docs, avgdl, k1, b, delta),
+            ).otherwise(F.lit(0.0)),
+        )
+    return term_stats
+
+
+def with_impacts(postings: DataFrame, num_docs: int, avgdl: float,
+                 k1: float, b: float, delta: float) -> DataFrame:
+    """Add the five float64 ``impact_*`` columns to (tf, dl, df) rows.
+
+    impacts: reference/bm25s/scoring.py:246-309 — idf*tfc (− nnoc for
+    bm25l/bm25+), the paper's eager impacts.  The flat table is their
+    only store: the sharded layout keeps (tf, dl) and its kernel scores
+    from those with the same formulas (``shards.py``)."""
+    for m in METHODS:
+        postings = postings.withColumn(
+            IMPACT_COLS[m],
+            scoring.impact_expr(
+                m, m,
+                F.col("tf"), F.col("dl"), F.col("df"),
+                num_docs, avgdl, k1, b, delta,
+            ).cast("double"),
+        )
+    return postings
+
+
 def _index_from_tf(
     spark: SparkSession,
     tf: DataFrame,
@@ -411,50 +477,16 @@ def _index_from_tf(
     if dfreq is None:
         dfreq = tf.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
 
-    # vocab with the empty-token patch (reference/bm25s/__init__.py:562-564):
-    # "" joins the vocab (df=0 → contributes nothing, but OOV lookups hit it)
-    empty_row = spark.range(1).select(
-        F.lit("").alias("term"), F.lit(0).cast("long").alias("df")
-    )  # JVM-native one-row relation: createDataFrame(rows) would put a
-    # Python-worker scan into every downstream postings/save plan
-    # max() dedups against a real "" term (possible when empty_fallback
-    # inserted "" into documents — its true df>0 wins over the patch's 0)
-    vocab = (
-        dfreq.unionByName(empty_row).groupBy("term").agg(F.max("df").alias("df"))
-    )
-    # vocab-sized and narrow (term, df): ids assign driver-locally up to
-    # VOCAB_LOCALIZE_MAX terms (one bounded Arrow pull + a pandas sort →
-    # pure-JVM local relation) instead of the 3-job range-partitioner
-    # path; web-scale vocabularies past the cap stay distributed
-    term_stats = assign_dense_ids(vocab, ["term"], "term_id",
-                                  persisted_out=aux_persisted,
-                                  localize_max=VOCAB_LOCALIZE_MAX)
-    for m, col in NNOC_COLS.items():
-        term_stats = term_stats.withColumn(
-            col,
-            F.when(
-                F.col("df") > 0,
-                scoring.nnoc_expr(m, m, F.col("df"), num_docs, avgdl, k1, b, delta),
-            ).otherwise(F.lit(0.0)),
-        )
-    term_stats = term_stats.persist()
-
-    # impacts: reference/bm25s/scoring.py:246-309 — idf*tfc (− nnoc for
-    # bm25l/bm25+). Kept at float64 in the flat layout (exact-arithmetic
-    # oracle comparisons); the sharded/saved layout downcasts to float32,
-    # the reference's storage dtype (reference/bm25s/scoring.py:265).
+    term_stats = corpus_term_stats(
+        spark, dfreq, num_docs, avgdl, k1, b, delta,
+        persisted_out=aux_persisted,
+    ).persist()
     # term_stats is vocab-sized → broadcast when small; Catalyst/AQE
-    # picks the strategy.
-    postings = tf.join(term_stats.select("term", "term_id", "df"), "term")
-    for m in METHODS:
-        postings = postings.withColumn(
-            IMPACT_COLS[m],
-            scoring.impact_expr(
-                m, m,
-                F.col("tf"), F.col("dl"), F.col("df"),
-                num_docs, avgdl, k1, b, delta,
-            ).cast("double"),
-        )
+    # picks the strategy
+    postings = with_impacts(
+        tf.join(term_stats.select("term", "term_id", "df"), "term"),
+        num_docs, avgdl, k1, b, delta,
+    )
 
     return BM25Index(
         spark=spark,

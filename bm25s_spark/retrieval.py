@@ -143,7 +143,7 @@ def _impact_col(index: BM25Index, method: str, idf_method: str,
                 allow_negative: bool = False):
     """Column expression for the effective per-posting impact.
 
-    Standard combos (idf_method == method) read the eagerly-stored float32
+    Standard combos (idf_method == method) read the eagerly-stored impact
     column; cross combos (e.g. atire+robertson — the rank-bm25 equivalence
     setting, ``reference/tests/__init__.py:92-98``) recompute exactly from
     (tf, dl, df), which the flat postings retain.  ``allow_negative``
@@ -276,8 +276,8 @@ def retrieve(
     ``queries_df`` may carry pre-tokenized queries: an ``array<string>``
     ``text_col`` is used verbatim (reference token-list queries,
     ``reference/bm25s/__init__.py:759-803``).
-    Sharded-strategy extras: ``exact`` (float64 impacts recomputed from
-    tf/dl), ``round_to`` (gate-mode rounding before local top-k),
+    Sharded-strategy extras: ``exact`` (the kernel's impacts, computed
+    from tf/dl, kept in float64 instead of float32), ``round_to`` (gate-mode rounding before local top-k),
     ``query_chunk_size`` (bounded per-chunk broadcast for huge batches).
     ``require_all_terms=True`` (join strategy): boolean-AND semantics —
     only docs containing EVERY distinct query term are returned (an OOV

@@ -8,10 +8,15 @@ way every horizontally-scaled search engine partitions its index.  Each
 row holds the term's postings *within one shard* as columnar arrays:
 delta-encoded local doc gaps (``reference`` stores raw int32 ids,
 ``reference/bm25s/__init__.py:432-438`` — delta encoding is our
-compression addition) plus one float32 impact array per BM25 variant.
+compression addition) plus the postings' ``tf`` and ``dl``.  No impact
+is stored: impacts depend on the corpus statistics (N, avgdl, df), and
+the kernel computes them from (tf, dl) and two scalars per term.  The
+paper's eager impacts live in the flat ``postings`` table, which the
+join strategy and the reference-format export read.  A reference-format
+import (``compat.import_bm25s``) has no real (tf, dl), so its layout
+adds one ``imps`` array of the file's stored impacts, scored verbatim.
 No block-max column is stored: the kernel takes each loaded list's
-maximum as its MaxScore upper bound, so a stored copy would only be
-written, never read.
+maximum as its MaxScore upper bound.
 
 Doc-sharding also *structurally* bounds term skew: the per-group
 ``collect_list`` for even the most frequent term caps at
@@ -21,11 +26,15 @@ two-phase merge — see ``index_io.py``.)
 
 **Query kernel.** Queries are tokenized, joined to ``term_stats``
 (OOV drop), collected into one small broadcast payload
-``{term -> [(query_idx, mult·scale, ...)]}``, then a single
-``mapInPandas`` pass over the sharded postings scores every query against
-every shard: per shard we reconstruct ``term -> (local_ids, impacts)``
-and run a NumPy scatter-add into a dense float32 vector of
-``docs_per_shard`` elements — the *same* kernel as the reference's
+``{term -> [(query_idx, mult)]}`` plus ``{term -> (idf, nnoc)}``, then a
+single ``mapInPandas`` pass over the sharded postings scores every query
+against every shard.  Each loaded posting list is scored once as
+``idf·tfc(tf, dl) − nnoc`` (``scoring.tfc_numpy``, the NumPy twin of the
+build's impact expressions) — one expression for every
+``method × idf_method`` combination, float64 with ``exact=True`` and
+float32, the reference's storage dtype, otherwise.  A NumPy scatter-add
+then accumulates each query into a dense vector of ``docs_per_shard``
+elements — the *same* kernel as the reference's
 ``_compute_relevance_from_scores`` (``reference/bm25s/__init__.py:272-324``,
 ``np.add.at`` at ``:318``) but over a bounded doc range — followed by a
 local ``argpartition`` top-k (``reference/bm25s/selection.py:14-37``).
@@ -33,12 +42,6 @@ Each shard emits ≤k candidates per query, so the only shuffle after the
 postings scan is ``n_queries × k × n_shards`` rows; the final exact top-k
 merge re-ranks those candidates with the identical NumPy routine for tie
 parity.
-
-Cross ``method × idf_method`` combos never rescan: stored impact
-``I = idf_m·tfc`` (or ``idf_m·tfc − nnoc_mm`` for bm25l/+) is rescaled
-per *term* with scalars:  ``I' = (I + nnoc_mm)·idf_i/idf_m − nnoc_mi``,
-folded into the broadcast payload as an affine (scale, shift) per
-(query, term).
 """
 
 from __future__ import annotations
@@ -54,7 +57,7 @@ from pyspark.sql.types import (
 
 from bm25s_spark import scoring
 from bm25s_spark.indexer import IMPACT_COLS, NNOC_COLS, BM25Index
-from bm25s_spark.scoring import METHODS, METHODS_REQUIRING_NNOC, METHOD_SLUGS
+from bm25s_spark.scoring import METHODS_REQUIRING_NNOC
 from bm25s_spark.retrieval import count_query_terms, tokenize_queries
 from bm25s_spark.tokenization import make_local_tokenizer
 from bm25s_spark.util import local_relation
@@ -64,25 +67,18 @@ SHARD_SCHEMA_FIELDS = [
     StructField("shard_id", LongType(), False),
     StructField("term_id", LongType(), False),
     StructField("term", StringType(), False),
-    StructField("df", LongType(), False),
     StructField("n_postings", IntegerType(), False),
     StructField("doc_gaps", ArrayType(IntegerType()), False),
     StructField("tfs", ArrayType(IntegerType()), False),
     StructField("dls", ArrayType(IntegerType()), False),
-] + [
-    StructField(f"impacts_{METHOD_SLUGS[m]}", ArrayType(FloatType()), False)
-    for m in METHODS
 ]
-SHARD_SCHEMA = StructType(SHARD_SCHEMA_FIELDS)
-# assembly output: numeric fields only (term/df joined back afterwards)
-ASSEMBLE_SCHEMA = StructType(
-    [f for f in SHARD_SCHEMA_FIELDS if f.name not in ("term", "df")]
-)
+# only in the layout of a reference-format import: its stored impacts
+IMPS_FIELD = StructField("imps", ArrayType(FloatType()), False)
 
 
 def build_sharded_postings(index: BM25Index, docs_per_shard: int | None = None) -> DataFrame:
     """Flat postings → blocked (shard_id, term) rows with delta-encoded
-    doc gaps and per-variant impact arrays.
+    doc gaps and the postings' tf/dl arrays.
 
     One shuffle of compact flat rows hash-partitioned on
     ``(shard_id, term_id)``, then a Tungsten sort within partitions and
@@ -99,12 +95,10 @@ def build_sharded_postings(index: BM25Index, docs_per_shard: int | None = None) 
         docs_per_shard = index.docs_per_shard
     spark = index.spark
     p = index.postings
-    # float32 before the shuffle: halves shuffle bytes and matches the
-    # reference's storage dtype; tf/dl ride along as small ints so any
-    # method × idf_method cross-combination stays exactly computable.
+    imported = index.compat_import is not None
     # NUMERIC COLUMNS ONLY through the Arrow pass — per-posting strings
     # (term) would cost one Python object per posting in the pandas
-    # conversion; term/df are joined back onto the vocab-sized output.
+    # conversion; term is joined back onto the vocab-sized output.
     flat = p.withColumn(
         "shard_id", (F.col("doc_id") / docs_per_shard).cast("long")
     ).select(
@@ -112,14 +106,13 @@ def build_sharded_postings(index: BM25Index, docs_per_shard: int | None = None) 
         F.col("doc_id").cast("long").alias("doc_id"),
         F.col("tf").cast("int").alias("tf"),
         F.col("dl").cast("int").alias("dl"),
-        *[F.col(IMPACT_COLS[m]).cast("float").alias(f"imp_{METHOD_SLUGS[m]}")
-          for m in METHODS],
+        *([F.col(IMPACT_COLS[index.compat_import["method"]])
+           .cast("float").alias("imp")] if imported else []),
     )
     n_parts = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
     flat = flat.repartition(n_parts, "shard_id", "term_id").sortWithinPartitions(
         "shard_id", "term_id", "doc_id"
     )
-    slugs = [METHOD_SLUGS[m] for m in METHODS]
     dps = docs_per_shard
 
     def assemble(batches):
@@ -143,48 +136,42 @@ def build_sharded_postings(index: BM25Index, docs_per_shard: int | None = None) 
             carry = pdf.iloc[last:].copy()
             out = _emit_groups(pdf.iloc[:last],
                                np.concatenate(([0], change[:-1], [last])),
-                               slugs, dps)
+                               dps)
             if out is not None:
                 yield out
         if carry is not None and len(carry):
-            out = _emit_groups(carry, np.array([0, len(carry)]), slugs, dps)
+            out = _emit_groups(carry, np.array([0, len(carry)]), dps)
             if out is not None:
                 yield out
 
-    assembled = flat.mapInPandas(assemble, ASSEMBLE_SCHEMA)
-    # vocab-sized join puts term/df back on the ~(shards × terms) output
+    fields = SHARD_SCHEMA_FIELDS + ([IMPS_FIELD] if imported else [])
+    assembled = flat.mapInPandas(
+        assemble, StructType([f for f in fields if f.name != "term"])
+    )
+    # vocab-sized join puts term back on the ~(shards × terms) output
     return assembled.join(
-        F.broadcast(index.term_stats.select("term_id", "term", "df")), "term_id"
-    ).select([f.name for f in SHARD_SCHEMA_FIELDS])
+        F.broadcast(index.term_stats.select("term_id", "term")), "term_id"
+    ).select([f.name for f in fields])
 
 
-def _emit_groups(pdf: pd.DataFrame, bounds: np.ndarray, slugs, dps: int) -> pd.DataFrame | None:
+def _emit_groups(pdf: pd.DataFrame, bounds: np.ndarray, dps: int) -> pd.DataFrame | None:
     """Assemble one output row per (shard_id, term_id) group; ``bounds``
     holds group start offsets plus the final end offset."""
     if len(pdf) == 0:
         return None
-    doc = pdf["doc_id"].values
-    local = (doc % dps).astype(np.int32)
+    local = (pdf["doc_id"].values % dps).astype(np.int32)
     starts, ends = bounds[:-1], bounds[1:]
-    heads = starts  # first row index of each group
-    imp_cols = {s: pdf[f"imp_{s}"].values for s in slugs}
-    tfs = pdf["tf"].values
-    dls = pdf["dl"].values
-    rows: dict[str, list] = {
-        "shard_id": pdf["shard_id"].values[heads],
-        "term_id": pdf["term_id"].values[heads],
+    rows: dict[str, object] = {
+        "shard_id": pdf["shard_id"].values[starts],
+        "term_id": pdf["term_id"].values[starts],
         "n_postings": (ends - starts).astype(np.int32),
-        "doc_gaps": [], "tfs": [], "dls": [],
+        "doc_gaps": [np.diff(local[a:b], prepend=np.int32(0))
+                     for a, b in zip(starts, ends)],
     }
-    for s in slugs:
-        rows[f"impacts_{s}"] = []
-    for a, b in zip(starts, ends):
-        loc = local[a:b]
-        rows["doc_gaps"].append(np.diff(loc, prepend=np.int32(0)))
-        rows["tfs"].append(tfs[a:b])
-        rows["dls"].append(dls[a:b])
-        for s in slugs:
-            rows[f"impacts_{s}"].append(imp_cols[s][a:b])
+    for src, dst in (("tf", "tfs"), ("dl", "dls"), ("imp", "imps")):
+        if src in pdf:
+            col = pdf[src].values
+            rows[dst] = [col[a:b] for a, b in zip(starts, ends)]
     return pd.DataFrame(rows)
 
 
@@ -195,46 +182,41 @@ def ensure_sharded(index: BM25Index) -> DataFrame:
 
 
 def _query_payload(index: BM25Index, qpdf: pd.DataFrame, method: str,
-                   idf_method: str, qidx: dict, exact: bool = False,
+                   idf_method: str, qidx: dict,
                    allow_negative: bool = False):
     """Driver-side broadcast payload for one chunk of queries.
 
     ``qpdf``: pandas frame of (query_id, term, mult, df) for the chunk's
     in-vocab terms (an Arrow ``toPandas`` slice — columnar, ~10× denser
     than collected Row objects); ``qidx`` maps query_id → *global* query
-    index.  Returns ({term: [(q_idx, mult)]}, {term: cross_info}).
-    ``cross_info`` is None for the standard combos (the stored eager
-    impact is used verbatim); for ``idf_method != method`` — or
-    ``exact=True`` — it carries ``(idf_i, nnoc_mi)`` so the kernel
-    recomputes the exact float64 impact ``idf_i·tfc_m(tf, dl) − nnoc_mi``
-    from the stored tf/dl arrays (no rescale approximation — robust even
-    when the stored variant's idf is zero, e.g. robertson's clamp or
-    atire with df=N).
+    index.  Returns ({term: [(q_idx, mult)]}, {term: (idf, nnoc)}): the
+    kernel scores each posting as ``idf·tfc_method(tf, dl) − nnoc``, the
+    same formula for every ``method × idf_method`` combination (robust
+    even where the matched combination's idf is zero, e.g. robertson's
+    clamp or atire with df=N).  A reference-format import maps every
+    term to None: it scores from its stored impacts and has no avgdl
+    to compute nnoc from.
     """
     n, avgdl = index.num_docs, index.avg_doc_len
     k1, b, delta = index.k1, index.b, index.delta
+    imported = index.compat_import is not None
     per_term: dict[str, list[tuple[int, float]]] = {}
-    cross: dict[str, tuple[float, float] | None] = {}
+    scalars: dict[str, tuple[float, float] | None] = {}
     for qid, term, mult, df in zip(
         qpdf["query_id"].values, qpdf["term"].values,
         qpdf["mult"].values, qpdf["df"].values,
     ):
-        mult = float(mult)
         df = float(df)
         if df <= 0:
             continue  # the "" patch token: no postings, contributes via nnoc only
-        if term not in cross:
-            if idf_method == method and not exact and not allow_negative:
-                cross[term] = None
-            else:
-                idf_i = scoring.idf_value(idf_method, df, n, allow_negative)
-                nnoc_mi = scoring.nnoc_value(
-                    method, idf_method, df, n, avgdl, k1, b, delta,
-                    allow_negative,
-                )
-                cross[term] = (idf_i, nnoc_mi)
-        per_term.setdefault(term, []).append((qidx[qid], mult))
-    return per_term, cross
+        if term not in scalars:
+            scalars[term] = None if imported else (
+                scoring.idf_value(idf_method, df, n, allow_negative),
+                scoring.nnoc_value(method, idf_method, df, n, avgdl, k1, b,
+                                   delta, allow_negative),
+            )
+        per_term.setdefault(term, []).append((qidx[qid], float(mult)))
+    return per_term, scalars
 
 
 def _mask_shard_rows(weight_mask_df: DataFrame, docs_per_shard: int) -> DataFrame:
@@ -347,12 +329,15 @@ def retrieve_sharded(
 
     ``prune=True`` enables the TAAT MaxScore pruning inside the kernel
     (each loaded posting list's maximum impact is its upper bound;
-    disabled automatically when a weight mask is present).  Result sets
+    disabled automatically when a weight mask is present or
+    ``allow_negative`` makes robertson impacts negative).  Result sets
     are identical up to tie-group membership.
 
-    ``exact=True`` recomputes every impact in float64 from the stored
-    (tf, dl) arrays instead of reading the float32 eager impacts — used
-    by the correctness gate to compare the kernel path against a
+    The kernel scores every posting list from the layout's (tf, dl)
+    arrays as ``idf·tfc(tf, dl) − nnoc``, once per loaded (shard, term)
+    row, and accumulates in float32 (the reference's storage dtype).
+    ``exact=True`` keeps those impacts and the accumulator in float64 —
+    used by the correctness gate to compare the kernel path against a
     double-precision oracle bit-stably.  ``round_to`` (gate mode) rounds
     scores to that many decimals *before* the local top-k and breaks
     ties doc_id-ascending, so the kernel's candidate cut agrees exactly
@@ -403,6 +388,9 @@ def retrieve_sharded(
             "on unrounded scores can evict docs that tie the kth rounded "
             "score."
         )
+    # MaxScore needs nonnegative impacts: its in-shard kth score only
+    # grows as terms add up.  Unclamped robertson idf breaks that.
+    prune = prune and not (allow_negative and idf_method == "robertson")
     spark = index.spark
     sharded = ensure_sharded(index)
     docs_per_shard = index.docs_per_shard
@@ -411,10 +399,8 @@ def retrieve_sharded(
     # a reference-format import (compat.import_bm25s) carries stored
     # per-term nnoc values but no (avgdl, dl) to recompute them from —
     # ride the stored column along the metadata pull instead
-    compat_nnoc = (
-        getattr(index, "compat_import", None) is not None
-        and method in METHODS_REQUIRING_NNOC
-    )
+    imported = index.compat_import is not None
+    compat_nnoc = imported and method in METHODS_REQUIRING_NNOC
     _nnoc_cols = (
         [F.col(NNOC_COLS[method]).alias("_nnoc")] if compat_nnoc else []
     )
@@ -482,13 +468,9 @@ def retrieve_sharded(
         qpdf = qstats_of(tokenize_queries(
             index, probed, query_id_col, text_col, localize_max=0
         )).toPandas()
-    slug = METHOD_SLUGS[method]
-    # allow_negative (robertson idf unclamped) rides the cross-recompute
-    # path: the stored float32 impacts are clamped, but tf/dl are kept
-    allow_negative = allow_negative and idf_method == "robertson"
-    is_cross = idf_method != method or exact or allow_negative
     qidx = {q: i for i, q in enumerate(query_ids)}
     has_mask = weight_mask_df is not None
+    val_dtype = np.float64 if exact else np.float32
 
     acc_shards = acc_postings = acc_cands = acc_scored = None
     if metrics is not None:
@@ -504,19 +486,10 @@ def retrieve_sharded(
         # hitting each term when MaxScore pruning masks adds
         metrics["postings_scored"] = acc_scored
 
-    imp_col = f"impacts_{slug}"
-    if is_cross:
-        base_needed = sharded.select(
-            "shard_id", "term", "doc_gaps", "tfs", "dls",
-            F.col(imp_col).alias("imps"),
-        )
-    else:
-        base_needed = sharded.select(
-            "shard_id", "term", "doc_gaps",
-            F.lit(None).cast("array<int>").alias("tfs"),
-            F.lit(None).cast("array<int>").alias("dls"),
-            F.col(imp_col).alias("imps"),
-        )
+    base_needed = sharded.select(
+        "shard_id", "term", "doc_gaps", "tfs", "dls",
+        "imps" if imported else F.lit(None).cast("array<float>").alias("imps"),
+    )
     mask_rows_df = (
         _mask_shard_rows(weight_mask_df, docs_per_shard).persist()
         if has_mask else None
@@ -537,12 +510,12 @@ def retrieve_sharded(
     ])
 
     def run_chunk(chunk_pdf: pd.DataFrame):
-        per_term, cross = _query_payload(
-            index, chunk_pdf, method, idf_method, qidx, exact=exact,
+        per_term, scalars = _query_payload(
+            index, chunk_pdf, method, idf_method, qidx,
             allow_negative=allow_negative,
         )
         bc = spark.sparkContext.broadcast(
-            (per_term, cross, docs_per_shard, k,
+            (per_term, scalars, docs_per_shard, k,
              (method, index.avg_doc_len, index.k1, index.b, index.delta),
              prune, has_mask, round_to)
         )
@@ -567,17 +540,17 @@ def retrieve_sharded(
 
     def _make_kernel(bc, _schema):
         def score_partition(batches):
-            (per_term_l, cross_l, dps, k_l,
+            (per_term_l, scalars_l, dps, k_l,
              (method_l, avgdl_l, k1_l, b_l, delta_l),
              prune_l, has_mask_l, round_l) = bc.value
             # per-query term lists within the current shard
             cur_shard = None
-            cur_rows: list[tuple[str, np.ndarray, np.ndarray]] = []
+            cur_rows: list[tuple] = []
             cur_mask: tuple[np.ndarray, np.ndarray] | None = None
 
             def flush(shard_id, rows, mask_lw):
                 """Score one complete shard: NumPy scatter-add per query
-                into a dense float32 vector of the shard's doc range (the
+                into a dense ``val_dtype`` vector of the shard's doc range (the
                 reference kernel, bm25s/__init__.py:272-324, bounded per
                 shard), then argpartition local top-k
                 (bm25s/selection.py:14-37).  ``mask_lw``: optional
@@ -596,25 +569,19 @@ def retrieve_sharded(
                 # this shard allocate anything
                 per_query: dict[int, list] = {}
                 n_postings_seen = 0
-                for term, gaps, vals, tfs, dls in rows:
+                for term, gaps, tfs, dls, imps in rows:
                     entries = per_term_l.get(term)
                     if not entries:
                         continue
                     n_postings_seen += len(gaps)
                     local = np.cumsum(gaps, dtype=np.int64)
-                    info = cross_l.get(term)
-                    if info is not None:
-                        # exact (cross or float64-gate) impact from tf/dl
-                        idf_i, nnoc_mi = info
-                        vals = (
-                            idf_i
-                            * scoring.tfc_numpy(
-                                method_l, tfs, dls, avgdl_l, k1_l, b_l, delta_l
-                            )
-                            - nnoc_mi
-                        )
-                        if not exact:
-                            vals = vals.astype(np.float32)
+                    if imps is None:
+                        # the one scoring expression, once per loaded list
+                        idf, nnoc = scalars_l[term]
+                        imps = idf * scoring.tfc_numpy(
+                            method_l, tfs, dls, avgdl_l, k1_l, b_l, delta_l
+                        ) - nnoc
+                    vals = np.asarray(imps, dtype=val_dtype)
                     ub = float(vals.max()) if vals.size else 0.0
                     for e_q, mult in entries:
                         per_query.setdefault(e_q, []).append(
@@ -633,7 +600,7 @@ def retrieve_sharded(
                 # vectors (a full memset + full-array nonzero per
                 # (query, shard) is pure memory-bandwidth waste, the
                 # resource that stops scaling first on a many-core host)
-                acc = np.zeros(dps, dtype=np.float64 if exact else np.float32)
+                acc = np.zeros(dps, dtype=val_dtype)
                 touched = np.zeros(dps, dtype=bool)
                 # pruning is only safe with nonnegative impacts and no
                 # doc weights >1; masks disable it.  round_to (gate
@@ -727,10 +694,10 @@ def retrieve_sharded(
                 })
 
             for pdf in batches:
-                for shard_id, term, gaps, vals, tfs, dls, is_mask in zip(
+                for shard_id, term, gaps, tfs, dls, imps, is_mask in zip(
                     pdf["shard_id"].values, pdf["term"].values,
-                    pdf["doc_gaps"].values, pdf["imps"].values,
-                    pdf["tfs"].values, pdf["dls"].values,
+                    pdf["doc_gaps"].values, pdf["tfs"].values,
+                    pdf["dls"].values, pdf["imps"].values,
                     pdf["is_mask"].values,
                 ):
                     if cur_shard is not None and shard_id != cur_shard:
@@ -743,18 +710,10 @@ def retrieve_sharded(
                     if is_mask:
                         cur_mask = (
                             np.asarray(gaps, dtype=np.int64),
-                            np.asarray(vals, dtype=np.float32),
+                            np.asarray(imps, dtype=np.float32),
                         )
                         continue
-                    cur_rows.append((
-                        term,
-                        np.asarray(gaps, dtype=np.int64),
-                        np.asarray(
-                            vals, dtype=np.float64 if exact else np.float32
-                        ),
-                        None if tfs is None else np.asarray(tfs, dtype=np.int64),
-                        None if dls is None else np.asarray(dls, dtype=np.int64),
-                    ))
+                    cur_rows.append((term, gaps, tfs, dls, imps))
             if cur_shard is not None:
                 out = flush(int(cur_shard), cur_rows, cur_mask)
                 if out is not None:

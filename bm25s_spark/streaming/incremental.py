@@ -123,10 +123,9 @@ class IncrementalIndexer:
     def to_index(self, k1: float = 1.5, b: float = 0.75, delta: float = 0.5):
         """Score the accumulated raw postings under the *current* global
         stats → a queryable BM25Index (the epoch-refresh pass)."""
-        from bm25s_spark import scoring
-        from bm25s_spark.ids import assign_dense_ids
-        from bm25s_spark.indexer import BM25Index, IMPACT_COLS, NNOC_COLS
-        from bm25s_spark.scoring import METHODS
+        from bm25s_spark.indexer import (
+            BM25Index, auto_docs_per_shard, corpus_term_stats, with_impacts,
+        )
 
         spark = self.spark
         doc_lens = spark.read.parquet(self._p("doc_lens"))
@@ -135,31 +134,14 @@ class IncrementalIndexer:
         ).collect()[0]
         num_docs, avgdl = int(agg["n"]), float(agg["avgdl"] or 0.0)
         tf = spark.read.parquet(self._p("raw_postings"))
-        dfreq = tf.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
-        empty_row = spark.range(1).select(
-        F.lit("").alias("term"), F.lit(0).cast("long").alias("df")
-    )  # JVM-native one-row relation: createDataFrame(rows) would put a
-    # Python-worker scan into every downstream postings/save plan
-        vocab = dfreq.unionByName(empty_row).groupBy("term").agg(F.max("df").alias("df"))
-        term_stats = assign_dense_ids(vocab, ["term"], "term_id")
-        for m, col in NNOC_COLS.items():
-            term_stats = term_stats.withColumn(
-                col,
-                F.when(
-                    F.col("df") > 0,
-                    scoring.nnoc_expr(m, m, F.col("df"), num_docs, avgdl, k1, b, delta),
-                ).otherwise(F.lit(0.0)),
-            )
-        postings = tf.join(term_stats.select("term", "term_id", "df"), "term")
-        for m in METHODS:
-            postings = postings.withColumn(
-                IMPACT_COLS[m],
-                scoring.impact_expr(
-                    m, m, F.col("tf"), F.col("dl"), F.col("df"),
-                    num_docs, avgdl, k1, b, delta,
-                ).cast("double"),
-            )
-        from bm25s_spark.indexer import auto_docs_per_shard
+        term_stats = corpus_term_stats(
+            spark, tf.groupBy("term").agg(F.count(F.lit(1)).alias("df")),
+            num_docs, avgdl, k1, b, delta,
+        )
+        postings = with_impacts(
+            tf.join(term_stats.select("term", "term_id", "df"), "term"),
+            num_docs, avgdl, k1, b, delta,
+        )
 
         return BM25Index(
             spark=spark, postings=postings, term_stats=term_stats,

@@ -203,3 +203,26 @@ def test_imported_index_is_method_pinned(spark, built_index, tmp_path):
         score_all(imp, qdf, method="atire")
     # the stored combination still works
     assert retrieve(imp, qdf, k=2, method="bm25l").count() == 2 * len(QUERIES)
+
+
+def test_saved_import_keeps_method_pin(spark, built_index, tmp_path):
+    """save_index/load_index of an import keeps its method pin and its
+    stored impacts: join and sharded results equal the import's, and
+    any other method still raises instead of scoring placeholders."""
+    from bm25s_spark.index_io import load_index, save_index
+
+    d = str(tmp_path / "idx32")
+    export_bm25s(built_index, d, method="bm25l")  # float32, the default
+    imp = import_bm25s(spark, d)
+    save_index(imp, str(tmp_path / "saved"))
+    loaded = load_index(spark, str(tmp_path / "saved"))
+    assert loaded.compat_import == imp.compat_import
+    qdf = _queries_df(spark)
+    for kw in ({"strategy": "join"}, {"strategy": "sharded"}):
+        a = retrieve(imp, qdf, k=3, method="bm25l", **kw) \
+            .orderBy("query_id", "rank").collect()
+        b = retrieve(loaded, qdf, k=3, method="bm25l", **kw) \
+            .orderBy("query_id", "rank").collect()
+        assert a == b, kw
+    with pytest.raises(ValueError, match="imported"):
+        retrieve(loaded, qdf, k=2, method="lucene", strategy="sharded")

@@ -7,9 +7,14 @@ import json
 import os
 import shutil
 
+import pytest
+from pyspark.sql import functions as F
+
 from bm25s_spark.checkpoint import build_index_checkpointed
 from bm25s_spark.index_io import load_index, save_index
-from bm25s_spark.indexer import SparkBM25
+from bm25s_spark.indexer import IMPACT_COLS, SparkBM25, build_index
+from bm25s_spark.retrieval import score_all
+from bm25s_spark.scoring import METHOD_SLUGS, METHODS
 from bm25s_spark.transcripts import queries_for, transcripts_df
 
 from tests.conftest import assert_rank_identical, rows_to_arrays
@@ -62,6 +67,73 @@ def test_save_load_roundtrip(spark, tmp_path):
     # params + layout files exist
     assert os.path.exists(os.path.join(path, "params.json"))
     assert os.path.isdir(os.path.join(path, "postings_terms"))
+
+
+@pytest.fixture(scope="module")
+def saved_t2(spark, tmp_path_factory):
+    """A fresh t2 index, its query batch and its saved copy."""
+    tdf = transcripts_df(spark, "t2")
+    idx = build_index(tdf, order_cols=["conv_id", "turn_idx"]).persist()
+    idx.docs_per_shard = 512
+    texts = [r["text"] for r in
+             idx.doc_map.orderBy("doc_id").select("text").collect()]
+    qdf = spark.createDataFrame(queries_for(texts, 12, seed=5),
+                                "query_id string, text string")
+    path = str(tmp_path_factory.mktemp("t2") / "index")
+    save_index(idx, path)
+    yield idx, qdf, path
+    idx.unpersist()
+
+
+def test_loaded_index_scores_exactly_like_fresh(spark, saved_t2):
+    """load_index rebuilds the flat impacts from (tf, dl, df) with the
+    build's own expressions: no float32 round trip, so the loaded flat
+    table equals the fresh build's exactly.  Every method's scores match
+    to the last few bits: the per-doc sums may add the same impacts in
+    another order, since Spark's aggregation follows the partitioning."""
+    idx, qdf, path = saved_t2
+    loaded = load_index(spark, path)
+    cols = ["term", "doc_id", "tf", "dl", "df"] + list(IMPACT_COLS.values())
+
+    def rows(p):
+        return sorted(tuple(r) for r in p.select(cols).collect())
+
+    assert rows(loaded.postings) == rows(idx.postings)
+    for m in METHODS:
+        a = score_all(idx, qdf, method=m).orderBy("query_id", "doc_id").collect()
+        b = score_all(loaded, qdf, method=m).orderBy("query_id", "doc_id").collect()
+        assert [r[:2] for r in a] == [r[:2] for r in b], m
+        assert [r[2] for r in b] == pytest.approx([r[2] for r in a], rel=1e-12), m
+
+
+def test_older_layout_with_impact_arrays_loads(spark, saved_t2, tmp_path):
+    """A layout in the older format, which also stored per-method impact
+    arrays and df on every row, still loads: columns are chosen by name.
+    The extra arrays are filled with -1 so that reading any of them
+    would change the results."""
+    idx, qdf, path = saved_t2
+    old = str(tmp_path / "old")
+    shutil.copytree(path, old, ignore=shutil.ignore_patterns("postings_sharded"))
+    layout = spark.read.parquet(os.path.join(path, "postings_sharded")).join(
+        spark.read.parquet(os.path.join(path, "term_stats"))
+        .select("term_id", "df"), "term_id",
+    )
+    for slug in METHOD_SLUGS.values():
+        layout = layout.withColumn(
+            f"impacts_{slug}",
+            F.transform("tfs", lambda t: F.lit(-1.0).cast("float")),
+        )
+    layout.write.partitionBy("shard_bucket").parquet(
+        os.path.join(old, "postings_sharded")
+    )
+    loaded = load_index(spark, old)
+    assert {"df", "impacts_lucene"} <= set(loaded.sharded.columns)
+    fresh = _rows(idx.retrieve(qdf, k=8, method="bm25l", strategy="join"))
+    for strategy in ("join", "sharded"):
+        _tie_aware_equal(
+            _rows(loaded.retrieve(qdf, k=8, method="bm25l", strategy=strategy)),
+            fresh,
+        )
 
 
 def test_checkpoint_resume_identity(spark, tmp_path):

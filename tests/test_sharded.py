@@ -39,21 +39,44 @@ def test_sharded_matches_reference(spark, ref_bm25s, method):
     assert_rank_identical(ours, docs, scores)
 
 
-def test_sharded_equals_join_strategy(spark):
-    tdf = transcripts_df(spark, "t2").persist()
-    texts = [r["text"] for r in tdf.orderBy("conv_id", "turn_idx").select("text").collect()]
+def _assert_sharded_equals_join(spark, idx, **kw):
+    """Sharded top-8 scores equal the join strategy's, query by query."""
+    from bm25s_spark.retrieval import retrieve
+
+    texts = [r["text"] for r in
+             idx.doc_map.orderBy("doc_id").select("text").collect()]
     queries = queries_for(texts, 20, seed=7)
-    engine = SparkBM25(method="atire", idf_method="robertson")
-    idx = engine.index(tdf)
-    idx.docs_per_shard = 300
     qdf = spark.createDataFrame(queries, "query_id string, text string")
-    a = _normalize(_rows(engine.retrieve(qdf, k=8, strategy="join")))
-    b = _normalize(_rows(engine.retrieve(qdf, k=8, strategy="sharded")))
+    a = _normalize(_rows(retrieve(idx, qdf, k=8, strategy="join", **kw)))
+    b = _normalize(_rows(retrieve(idx, qdf, k=8, strategy="sharded", **kw)))
     assert set(a) == set(b)
     for q in a:
         sa = [x[2] for x in a[q]]
         sb = [x[2] for x in b[q]]
         assert sa == sb, (q, a[q], b[q])
+
+
+def test_sharded_equals_join_strategy(spark, pad_index):
+    _assert_sharded_equals_join(spark, pad_index, method="atire",
+                                idf_method="robertson")
+
+
+@pytest.mark.parametrize("method,allow_negative", [
+    ("robertson", False), ("lucene", False), ("atire", False),
+    ("bm25l", False), ("bm25+", False), ("robertson", True),
+])
+def test_sharded_equals_join_each_method(spark, pad_index, method,
+                                         allow_negative):
+    """Every method's matched combination through the kernel's one
+    scoring expression (impacts computed from the layout's tf/dl) equals
+    the join strategy over the flat table's stored impacts.  Negative
+    scores run unpadded: the join strategy pads only queries with fewer
+    than k matches, while the sharded pad pool's 0-score rows outrank
+    negative matches (as in the reference's dense score vector)."""
+    _assert_sharded_equals_join(spark, pad_index, method=method,
+                                idf_method=method,
+                                allow_negative=allow_negative,
+                                pad=not allow_negative)
 
 
 def test_determinism_across_partitions(spark):
