@@ -32,7 +32,7 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from bm25s_spark.indexer import BM25Index, corpus_term_stats, with_impacts
+from bm25s_spark.indexer import BM25Index, corpus_term_stats
 from bm25s_spark.scoring import DEFAULT_B, DEFAULT_DELTA, DEFAULT_K1
 from bm25s_spark.ids import assign_doc_ids
 from bm25s_spark.tokenization import make_tokenizer_udf
@@ -235,16 +235,12 @@ def build_index_checkpointed(
     def s_term_stats():
         return corpus_term_stats(
             spark, tf.groupBy("term").agg(F.count(F.lit(1)).alias("df")),
-            num_docs, avgdl, k1, b, delta,
         )
 
     term_stats = ck.stage("term_stats", s_term_stats)
 
     def s_postings():
-        return with_impacts(
-            tf.join(term_stats.select("term", "term_id", "df"), "term"),
-            num_docs, avgdl, k1, b, delta,
-        )
+        return tf.join(term_stats, "term")
 
     postings = ck.stage(
         "postings", s_postings,

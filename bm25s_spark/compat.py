@@ -18,11 +18,12 @@ layout so the reference's ``BM25.load()`` (and any tool speaking its
 format) can read it; ``import_bm25s`` reads such a directory back into
 the Spark engine so an existing reference user can migrate indexes
 without re-tokenizing.  Both directions round-trip bit-exactly at
-``dtype="float64"`` because the engine stores the same per-posting
-impact convention the reference does: ``idf·tfc(tf)`` with the
+``dtype="float64"`` because the engine scores with the same per-posting
+impact convention the reference stores: ``idf·tfc(tf)`` with the
 non-occurrence constant already subtracted for bm25l/bm25+
 (``reference/bm25s/scoring.py:254-311``), added back per query at
-retrieval time.
+retrieval time.  The export computes those impacts and nnoc values with
+the scorer's own expressions.
 
 Scale notes
 -----------
@@ -45,7 +46,9 @@ Scale notes
   file stores — tf/dl are not part of the reference format — so
   retrieval on it is pinned to that combination (a loud ``ValueError``
   otherwise, see ``check_compat``).  ``save_index``/``load_index`` keep
-  the pin and the stored impacts.
+  the pin and the stored values: one ``imps`` column on ``postings``
+  and, for bm25l/bm25+, the file's nnoc array as ``term_stats``'
+  ``nnoc_<method>`` column.
 """
 
 from __future__ import annotations
@@ -60,13 +63,12 @@ import pandas as pd
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
-from bm25s_spark.indexer import (
-    BM25Index,
-    IMPACT_COLS,
-    NNOC_COLS,
-    auto_docs_per_shard,
-)
-from bm25s_spark.scoring import METHODS, METHODS_REQUIRING_NNOC
+from bm25s_spark.indexer import BM25Index, auto_docs_per_shard
+from bm25s_spark.retrieval import _scoring_cols
+from bm25s_spark.scoring import METHOD_SLUGS, METHODS, METHODS_REQUIRING_NNOC
+
+# term_stats column holding an import's stored per-term nnoc array
+NNOC_COLS = {m: f"nnoc_{METHOD_SLUGS[m]}" for m in METHODS_REQUIRING_NNOC}
 
 # Exact file names the reference's save()/load() default to
 # (reference/bm25s/__init__.py:945-951).
@@ -97,14 +99,16 @@ def _part_files(parquet_dir: str) -> list[str]:
     )
 
 
-def _collect_vocab(index: BM25Index) -> pd.DataFrame:
-    """term_stats → pandas ordered by term_id, validated dense 0..V-1.
+def _collect_vocab(index: BM25Index, method: str) -> pd.DataFrame:
+    """term_stats → pandas (term, term_id, df, nnoc) ordered by term_id,
+    validated dense 0..V-1; ``nnoc`` is ``method``'s per-term
+    nonoccurrence constant, as the scorer computes it.
 
     Vocab-bounded (NOT corpus-bounded) driver state — the reference
     holds the same dict in RAM to use the index at all."""
+    _, nnoc = _scoring_cols(index, method, method)
     vocab = (
-        index.term_stats.select("term", "term_id", "df",
-                                *[NNOC_COLS[m] for m in METHODS_REQUIRING_NNOC])
+        index.term_stats.select("term", "term_id", "df", nnoc.alias("nnoc"))
         .orderBy("term_id")
         .toPandas()
     )
@@ -130,13 +134,13 @@ def export_bm25s(
 ) -> dict:
     """Write ``index`` into the reference's save-directory layout.
 
-    ``method`` picks which stored impact column becomes the CSC data
-    array (the reference stores exactly one method per index);
-    ``idf_method`` is recorded equal to ``method`` because the engine's
-    eager impact columns are the matched combinations.  ``dtype`` /
-    ``int_dtype`` mirror the reference's constructor defaults
-    ("float32"/"int32"); pass "float64" for a bit-exact round trip with
-    the engine's double-precision flat impacts.  ``corpus_text_col``:
+    ``method`` picks whose impacts become the CSC data array (the
+    reference stores exactly one method per index), computed with the
+    engine's scoring expression; ``idf_method`` is recorded equal to
+    ``method``.  An import exports only its stored combination.
+    ``dtype`` / ``int_dtype`` mirror the reference's constructor
+    defaults ("float32"/"int32"); pass "float64" for a bit-exact round
+    trip with the engine's double-precision scores.  ``corpus_text_col``:
     when ``index.doc_map`` carries that column, ``corpus.jsonl`` +
     ``corpus.mmindex.json`` are written too (reference
     ``save(corpus=...)`` shape: one ``{"id", "text"}`` object per line).
@@ -145,9 +149,10 @@ def export_bm25s(
     """
     if method not in METHODS:
         raise ValueError(f"Invalid method {method!r}")
+    check_compat(index, method, method)
     os.makedirs(save_dir, exist_ok=True)
 
-    vocab = _collect_vocab(index)
+    vocab = _collect_vocab(index, method)
     n_vocab = len(vocab)
     df_per_term = vocab["df"].to_numpy(dtype=np.int64)
     nnz = int(df_per_term.sum())
@@ -167,7 +172,7 @@ def export_bm25s(
         f.write(json.dumps(vocab_dict, ensure_ascii=False))
 
     if method in METHODS_REQUIRING_NNOC:
-        nnoc = vocab[NNOC_COLS[method]].to_numpy(dtype=np.dtype(dtype))
+        nnoc = vocab["nnoc"].to_numpy(dtype=np.dtype(dtype))
         np.save(os.path.join(save_dir, NNOC_NAME), nnoc)
 
     # --- posting arrays: one range-shuffle to global (term_id, doc_id)
@@ -180,7 +185,7 @@ def export_bm25s(
         index.postings.select(
             F.col("term_id").cast("long").alias("term_id"),
             F.col("doc_id").cast("long").alias("doc_id"),
-            F.col(IMPACT_COLS[method]).cast("double").alias("score"),
+            _scoring_cols(index, method, method)[0].cast("double").alias("score"),
         )
         .repartitionByRange(n_parts, "term_id", "doc_id")
         .sortWithinPartitions("term_id", "doc_id")
@@ -373,22 +378,15 @@ def import_bm25s(
         terms[int(i)] = t
     stats_pd = pd.DataFrame({
         "term": terms,
-        "df": df_per_term,
         "term_id": np.arange(n_vocab, dtype=np.int64),
+        "df": df_per_term,
     })
-    for m in METHODS_REQUIRING_NNOC:
-        if method not in METHODS_REQUIRING_NNOC:
-            stats_pd[NNOC_COLS[m]] = 0.0  # never consulted by this method
-        elif m == method:
-            if nnoc_arr is None:
-                raise ValueError(
-                    f"method {method!r} needs {NNOC_NAME} but it is absent"
-                )
-            stats_pd[NNOC_COLS[m]] = nnoc_arr
-        else:
-            # the other nnoc variant is unknowable from this file;
-            # check_compat keeps it unread
-            stats_pd[NNOC_COLS[m]] = np.nan
+    if method in METHODS_REQUIRING_NNOC:
+        if nnoc_arr is None:
+            raise ValueError(
+                f"method {method!r} needs {NNOC_NAME} but it is absent"
+            )
+        stats_pd[NNOC_COLS[method]] = nnoc_arr
     term_stats = spark.createDataFrame(stats_pd)
 
     # --- distributed posting scan over balanced term ranges ----------
@@ -435,7 +433,7 @@ def import_bm25s(
             "term", "doc_id",
             F.lit(0).cast("int").alias("dl"),
             F.lit(0).cast("int").alias("tf"),
-            "term_id", "df", *imported_impacts(method, F.col("score")),
+            "term_id", "df", F.col("score").alias("imps"),
         )
     )
 
@@ -467,20 +465,6 @@ def import_bm25s(
         ),
         compat_import={"method": method, "idf_method": idf_method},
     )
-
-
-def imported_impacts(method: str, score) -> list:
-    """The five flat ``impact_*`` columns of an imported index: ``score``
-    (the file's stored impact) under ``method``.  Other-method impacts
-    are unknowable from the file: 0.0 placeholders, kept unread by the
-    :func:`check_compat` guard (not NaN — the pandas→Arrow passes
-    downstream treat NaN as NULL, and the sharded assembly declares
-    non-nullable float fields)."""
-    return [
-        (score.cast("double") if m == method else F.lit(0.0).cast("double"))
-        .alias(IMPACT_COLS[m])
-        for m in METHODS
-    ]
 
 
 def check_compat(index: BM25Index, method: str, idf_method: str,

@@ -6,12 +6,15 @@ Replaces the reference's ``.npy`` triple + JSON vocab/params save/load
     <path>/params.json            scalars: num_docs, avgdl, k1, b, delta,
                                   tokenizer config, docs_per_shard, version,
                                   the method pin of a reference-format import
-    <path>/term_stats/            (term, term_id, df, nnoc_*)
+    <path>/term_stats/            (term, term_id, df[, nnoc_<method>
+                                  of a reference-format import])
     <path>/doc_lens/              (doc_id, dl)
     <path>/doc_map/               (doc_id, conv_id, turn_idx, ...) [optional]
-    <path>/postings/              term-ordered flat postings (term-sorted —
+    <path>/postings_terms/        term-ordered postings (term-sorted —
                                   the CSC analog; built via the salted
-                                  two-phase merge)
+                                  two-phase merge): doc ids, tfs and
+                                  float32 impact arrays of all five
+                                  methods, computed at write time
     <path>/postings_sharded/      doc-sharded blocked layout (doc gaps,
                                   tf, dl), partitioned by shard bucket
                                   (the query-path layout)
@@ -32,8 +35,11 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from bm25s_spark.indexer import BM25Index
+from bm25s_spark.scoring import METHOD_SLUGS, METHODS
 
 FORMAT_VERSION = 1
+# per-method impact arrays of the term-ordered layout (postings_terms)
+IMPACT_COLS = {m: f"impact_{METHOD_SLUGS[m]}" for m in METHODS}
 _SHARD_BUCKETS = 64  # write-partitioning granularity for the sharded layout
 
 
@@ -62,13 +68,19 @@ def salted_term_postings(index: BM25Index, n_salts: int = 16) -> DataFrame:
     the reference's COO→CSC counting sort
     (``reference/bm25s/scoring.py:371-432``).
     """
-    from bm25s_spark.indexer import IMPACT_COLS
-    from bm25s_spark.scoring import METHODS
+    from bm25s_spark.retrieval import _scoring_cols
 
     span = max(1, (index.num_docs + n_salts - 1) // n_salts)
     p = index.postings.withColumn("salt", (F.col("doc_id") / span).cast("int"))
+    # the layout has no dls, so its per-method impact arrays are
+    # computed here at write time; a reference-format import knows only
+    # its stored method's impacts, the others are 0.0 placeholders
+    info = index.compat_import
     struct_cols = [F.col("doc_id")] + [
-        F.col(IMPACT_COLS[m]).cast("float").alias(IMPACT_COLS[m]) for m in METHODS
+        (F.lit(0.0) if info and m != info["method"]
+         else _scoring_cols(index, m, m)[0])
+        .cast("float").alias(IMPACT_COLS[m])
+        for m in METHODS
     ] + [F.col("tf").cast("int").alias("tf")]
     phase1 = p.groupBy("term_id", "term", "salt").agg(
         F.sort_array(F.collect_list(F.struct(*struct_cols))).alias("sub")
@@ -250,21 +262,23 @@ def _reassemble_index(spark: SparkSession, params: dict, term_stats: DataFrame,
 
     from pyspark.sql import Window
 
-    from bm25s_spark.compat import imported_impacts
-    from bm25s_spark.indexer import with_impacts
+    from bm25s_spark.compat import NNOC_COLS
+    from bm25s_spark.scoring import METHODS_REQUIRING_NNOC
 
     # reconstruct the flat postings view lazily from the sharded layout
     # (doc_gaps → absolute ids) plus term_stats.df; only the join
-    # strategy and the operators read it.  Its impacts come from the
-    # build's own expressions over (tf, dl, df), so a loaded index scores
-    # exactly like a fresh one; an import's come from its stored
-    # ``imps``.  Layout columns are chosen by name, so layouts that still
-    # carry per-method impact arrays and df load the same way.
+    # strategy and the operators read it.  Columns are chosen by name,
+    # so older saves — whose layout carried per-method impact arrays and
+    # df, and whose term_stats carried nnoc_* columns — load to the same
+    # tables.  An import keeps its stored ``imps`` and nnoc.
     dps = int(params["docs_per_shard"])
-    num_docs, avgdl = int(params["num_docs"]), float(params["avg_doc_len"])
-    k1, b, delta = float(params["k1"]), float(params["b"]), float(params["delta"])
     compat_import = params.get("compat_import")
-    imp = ["imps"] if compat_import is not None else []
+    imp, stored_nnoc = [], []
+    if compat_import is not None:
+        imp = ["imps"]
+        if compat_import["method"] in METHODS_REQUIRING_NNOC:
+            stored_nnoc = [NNOC_COLS[compat_import["method"]]]
+    term_stats = term_stats.select("term", "term_id", "df", *stored_nnoc)
     ex = sharded.select(
         "term_id", "term", "shard_id",
         F.posexplode(F.arrays_zip("doc_gaps", "tfs", "dls", *imp)).alias("pos", "e"),
@@ -274,20 +288,15 @@ def _reassemble_index(spark: SparkSession, params: dict, term_stats: DataFrame,
         .orderBy("pos")
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     )
-    flat = ex.select(
+    postings = ex.select(
         "term_id", "term",
         (F.col("shard_id") * dps + F.sum("e.doc_gaps").over(w)).alias("doc_id"),
-        F.col("e.tfs").alias("tf"),
         F.col("e.dls").alias("dl"),
+        F.col("e.tfs").alias("tf"),
         *[F.col(f"e.{c}").alias(c) for c in imp],
-    ).join(term_stats.select("term_id", "df"), "term_id")
-    if compat_import is None:
-        postings = with_impacts(flat, num_docs, avgdl, k1, b, delta)
-    else:
-        postings = flat.select(
-            "term_id", "term", "doc_id", "tf", "dl", "df",
-            *imported_impacts(compat_import["method"], F.col("imps")),
-        )
+    ).join(term_stats.select("term_id", "df"), "term_id").select(
+        "term", "doc_id", "dl", "tf", "term_id", "df", *imp,
+    )
 
     idx = BM25Index(
         spark=spark,
@@ -295,11 +304,11 @@ def _reassemble_index(spark: SparkSession, params: dict, term_stats: DataFrame,
         term_stats=term_stats,
         doc_lens=doc_lens,
         doc_map=doc_map,
-        num_docs=num_docs,
-        avg_doc_len=avgdl,
-        k1=k1,
-        b=b,
-        delta=delta,
+        num_docs=int(params["num_docs"]),
+        avg_doc_len=float(params["avg_doc_len"]),
+        k1=float(params["k1"]),
+        b=float(params["b"]),
+        delta=float(params["delta"]),
         tokenizer_kwargs=params.get("tokenizer", {}),
         docs_per_shard=dps,
         compat_import=compat_import,

@@ -1,16 +1,22 @@
-"""Index construction: the "eager sparse BM25 index" as Spark tables.
+"""Index construction: the BM25 index as Spark tables.
 
 The reference builds a CSC sparse matrix of precomputed BM25 impacts
 (``reference/bm25s/__init__.py:326-438``).  Our equivalent index is a set
-of DataFrames/tables:
+of DataFrames/tables that hold only corpus facts:
 
-- ``doc_lens``   (doc_id, dl)                       — per-doc token count
-- ``term_stats`` (term, term_id, df, nnoc_*)        — vocab + doc freq
-- ``postings``   (term, doc_id, tf, dl, impact_*)   — the flat inverted
-  index with **eagerly precomputed float64 impacts for all five variants**
-  (north_star requirement), equivalent to the reference's CSC ``data``/
-  ``indices`` arrays (``reference/bm25s/__init__.py:432-438``)
+- ``doc_lens``   (doc_id, dl)                          — per-doc token count
+- ``term_stats`` (term, term_id, df)                   — vocab + doc freq
+- ``postings``   (term, doc_id, dl, tf, term_id, df)   — the flat inverted
+  index, the analog of the reference's CSC ``data``/``indices`` arrays
+  (``reference/bm25s/__init__.py:432-438``) with (tf, dl) in place of
+  the impacts
 - ``stats``      scalars: num_docs, avg_doc_len, k1, b, delta
+
+No impact is stored.  Every reader computes ``idf·tfc(tf, dl) − nnoc``
+from the postings and two per-term scalars taken from ``df``
+(``retrieval._scoring_cols`` for the flat table, ``shards.py`` for the
+doc-sharded layout), so every ``method × idf_method`` combination is
+exact from one index and a merge only adds facts.
 
 The build is a pure DataFrame pipeline (SURVEY.md §3.1 lifecycle):
 
@@ -22,15 +28,11 @@ The build is a pure DataFrame pipeline (SURVEY.md §3.1 lifecycle):
 3. DF per term via ``count`` (map-side partial aggregation bounds each
    reducer's input at n_partitions rows per term — no skew)
    (reference: ``reference/bm25s/scoring.py:28-57``)
-4. join TF × term_stats (vocab-sized → broadcast/AQE) + the impact
-   column expressions (reference: ``reference/bm25s/scoring.py:246-309``)
+4. join TF × term_stats (vocab-sized → broadcast/AQE) for term_id/df
 
 ``k1/b/delta`` are pinned at index time like the reference
 (``reference/bm25s/__init__.py:144-152``); ``method``/``idf_method`` stay
-query-time choices: the flat table stores every variant's impact, and
-every ``method × idf_method`` combination is recoverable exactly from
-``tf``/``dl``/``df``.  The doc-sharded query layout (``shards.py``)
-stores only ``tf``/``dl`` and scores every combination from them.
+query-time choices.
 """
 
 from __future__ import annotations
@@ -41,20 +43,10 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
-from bm25s_spark import scoring
 from bm25s_spark.ids import assign_dense_ids, assign_doc_ids
-from bm25s_spark.scoring import (
-    DEFAULT_B,
-    DEFAULT_DELTA,
-    DEFAULT_K1,
-    METHOD_SLUGS,
-    METHODS,
-)
+from bm25s_spark.scoring import DEFAULT_B, DEFAULT_DELTA, DEFAULT_K1, METHODS
 from bm25s_spark.tokenization import make_tokenizer_udf
 
-
-IMPACT_COLS = {m: f"impact_{METHOD_SLUGS[m]}" for m in METHODS}
-NNOC_COLS = {m: f"nnoc_{METHOD_SLUGS[m]}" for m in scoring.METHODS_REQUIRING_NNOC}
 
 # docs_per_shard clamp for auto_docs_per_shard: the cap keeps the query
 # kernel's dense per-shard score vector cache-bounded (65536 float32 =
@@ -100,8 +92,8 @@ class BM25Index:
     """Handle to the index tables plus the global scalars."""
 
     spark: SparkSession
-    postings: DataFrame          # (term, doc_id, tf, dl, term_id, df, impact_* ×5)
-    term_stats: DataFrame        # (term, term_id, df, nnoc_bm25l, nnoc_bm25plus)
+    postings: DataFrame          # (term, doc_id, dl, tf, term_id, df)
+    term_stats: DataFrame        # (term, term_id, df)
     doc_lens: DataFrame          # (doc_id, dl)
     doc_map: DataFrame | None    # (doc_id, <original key/payload columns>)
     num_docs: int
@@ -384,16 +376,10 @@ def _index_from_tokenized(
 def corpus_term_stats(
     spark: SparkSession,
     dfreq: DataFrame,
-    num_docs: int,
-    avgdl: float,
-    k1: float,
-    b: float,
-    delta: float,
     persisted_out: list | None = None,
 ) -> DataFrame:
-    """(term, df) → ``term_stats`` (term, term_id, df, nnoc_*): the
-    vocabulary with the empty-token patch, dense term ids and the
-    per-term nonoccurrence constants under the given corpus scalars."""
+    """(term, df) → ``term_stats`` (term, term_id, df): the vocabulary
+    with the empty-token patch and dense term ids."""
     # vocab with the empty-token patch (reference/bm25s/__init__.py:562-564):
     # "" joins the vocab (df=0 → contributes nothing, but OOV lookups hit it)
     empty_row = spark.range(1).select(
@@ -409,38 +395,10 @@ def corpus_term_stats(
     # VOCAB_LOCALIZE_MAX terms (one bounded Arrow pull + a pandas sort →
     # pure-JVM local relation) instead of the 3-job range-partitioner
     # path; web-scale vocabularies past the cap stay distributed
-    term_stats = assign_dense_ids(vocab, ["term"], "term_id",
-                                  persisted_out=persisted_out,
-                                  localize_max=VOCAB_LOCALIZE_MAX)
-    for m, col in NNOC_COLS.items():
-        term_stats = term_stats.withColumn(
-            col,
-            F.when(
-                F.col("df") > 0,
-                scoring.nnoc_expr(m, m, F.col("df"), num_docs, avgdl, k1, b, delta),
-            ).otherwise(F.lit(0.0)),
-        )
-    return term_stats
-
-
-def with_impacts(postings: DataFrame, num_docs: int, avgdl: float,
-                 k1: float, b: float, delta: float) -> DataFrame:
-    """Add the five float64 ``impact_*`` columns to (tf, dl, df) rows.
-
-    impacts: reference/bm25s/scoring.py:246-309 — idf*tfc (− nnoc for
-    bm25l/bm25+), the paper's eager impacts.  The flat table is their
-    only store: the sharded layout keeps (tf, dl) and its kernel scores
-    from those with the same formulas (``shards.py``)."""
-    for m in METHODS:
-        postings = postings.withColumn(
-            IMPACT_COLS[m],
-            scoring.impact_expr(
-                m, m,
-                F.col("tf"), F.col("dl"), F.col("df"),
-                num_docs, avgdl, k1, b, delta,
-            ).cast("double"),
-        )
-    return postings
+    return assign_dense_ids(vocab, ["term"], "term_id",
+                            persisted_out=persisted_out,
+                            localize_max=VOCAB_LOCALIZE_MAX
+                            ).select("term", "term_id", "df")
 
 
 def _index_from_tf(
@@ -478,15 +436,11 @@ def _index_from_tf(
         dfreq = tf.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
 
     term_stats = corpus_term_stats(
-        spark, dfreq, num_docs, avgdl, k1, b, delta,
-        persisted_out=aux_persisted,
+        spark, dfreq, persisted_out=aux_persisted,
     ).persist()
     # term_stats is vocab-sized → broadcast when small; Catalyst/AQE
     # picks the strategy
-    postings = with_impacts(
-        tf.join(term_stats.select("term", "term_id", "df"), "term"),
-        num_docs, avgdl, k1, b, delta,
-    )
+    postings = tf.join(term_stats, "term")
 
     return BM25Index(
         spark=spark,
@@ -608,9 +562,8 @@ def merge_indexes(
     the natural pattern is instead *partitioned builds* — index each
     ingest batch (or each corpus partition) independently, then merge.
     The merge is cheap because the per-(doc, term) facts (``tf``, ``dl``)
-    are corpus-independent: only the corpus-level statistics (``df``,
-    ``num_docs``, ``avg_doc_len`` → idf/impacts) change, and those are
-    recomputed exactly:
+    are corpus-independent: only the corpus-level statistics change, and
+    those are recomputed exactly:
 
     - ``df``       = sum of the sides' per-term df (vocab-sized shuffle,
       NOT a posting re-aggregation — doc sets are disjoint so the counts
@@ -618,16 +571,18 @@ def merge_indexes(
     - ``num_docs`` / ``avg_doc_len`` = one tiny agg over the unioned
       ``doc_lens`` (integer token counts sum exactly, so the mean is
       bit-identical to the full build's)
-    - impacts      = the standard impact expressions over the unioned
-      (doc_id, dl, term, tf) rows with the merged scalars — deterministic
-      double arithmetic, so every posting matches a from-scratch build
-      bit for bit (asserted in tests)
+
+    No impact is stored, so the merged postings are the unioned
+    (doc_id, dl, term, tf) rows joined to the merged ``term_stats``, and
+    every score equals a from-scratch build's (asserted in tests).
 
     Scale shape: no tokenization re-run, no posting-sized groupBy; the
     only posting-sized work is the narrow union + the vocab join that
     every build already does.  ``check_disjoint`` (one doc-sized
     aggregation) guards against overlapping doc ids — disable it when
-    the partitioning scheme guarantees disjointness.
+    the partitioning scheme guarantees disjointness.  A reference-format
+    import (``compat.import_bm25s``) has no real (tf, dl) to rebuild
+    from and raises ``ValueError``.
 
     Reference scope: the reference has no index merge (a corpus change
     re-runs ``index()``, ``reference/bm25s/__init__.py:326-438``); this
@@ -637,6 +592,13 @@ def merge_indexes(
         raise ValueError("merge_indexes needs at least one index")
     if len(indexes) == 1:
         return indexes[0]
+    for i, idx in enumerate(indexes):
+        if idx.compat_import is not None:
+            raise ValueError(
+                f"index {i} was imported from a reference-format save "
+                "(compat.import_bm25s): it stores no tf/dl, so merge_indexes "
+                "cannot rescore it; merge the source indexes instead"
+            )
     head = indexes[0]
     for i, idx in enumerate(indexes[1:], start=1):
         if (idx.k1, idx.b, idx.delta) != (head.k1, head.b, head.delta):

@@ -26,8 +26,8 @@ from pyspark.sql import functions as F
 
 from bm25s_spark.indexer import BM25Index
 from bm25s_spark.retrieval import (
-    _impact_col,
     _nnoc_per_query,
+    _scoring_cols,
     tokenize_queries,
 )
 from bm25s_spark.scoring import METHODS
@@ -87,7 +87,7 @@ def retrieve_min_match(
         qside = qterms.join(F.broadcast(qn), "query_id")
     else:
         qside = qterms.withColumn("_req", F.lit(int(min_match)).cast("long"))
-    impact = _impact_col(index, method, idf_method)
+    impact, _ = _scoring_cols(index, method, idf_method)
     grouped = (
         F.broadcast(qside)
         .join(index.postings, "term")
@@ -161,7 +161,7 @@ def retrieve_excluding(
             )
         )
     )
-    impact = _impact_col(index, method, idf_method)
+    impact, _ = _scoring_cols(index, method, idf_method)
     grouped = (
         F.broadcast(qall)
         .join(index.postings, "term")

@@ -14,7 +14,7 @@ not an option, so this module adds the Lucene-style two-phase lifecycle:
 2. :func:`compact_index` — the "merge": statistics are *re-derived*
    from the surviving postings, producing an index bit-identical to a
    fresh build over the surviving corpus — WITHOUT re-tokenizing (the
-   flat postings retain (tf, dl), which is all the impact formulas
+   flat postings hold (tf, dl), which is all the scoring formulas
    need; re-running the one Python stage of the build would be the
    dominant cost at scale).
 
@@ -55,11 +55,11 @@ def with_tombstones(
 
     Deleted docs are removed from ``postings`` / ``doc_lens`` /
     ``doc_map`` via anti-join; ``num_docs``, ``avg_doc_len`` and
-    ``term_stats`` (df, nnoc) are left untouched, so the scores of
-    surviving documents are bit-identical to the pre-delete index —
-    exactly what an incrementally-maintained serving index must
-    guarantee between merges.  The blocked sharded layout (if built) is
-    dropped from the view: block arrays pack many docs per row, so
+    ``term_stats`` (df, hence every idf and nnoc) are left untouched, so
+    the scores of surviving documents are bit-identical to the
+    pre-delete index — exactly what an incrementally-maintained serving
+    index must guarantee between merges.  The blocked sharded layout
+    (if built) is dropped from the view: block arrays pack many docs per row, so
     masking inside them would rewrite the blocks anyway — re-shard from
     the view's postings (``shards.build_sharded_postings``) when the
     kernel path is needed, or :func:`compact_index` first.
@@ -90,12 +90,20 @@ def compact_index(
 
     ``tombstones_df=None`` compacts an existing :func:`with_tombstones`
     view (its postings/doc_lens are already filtered).  Doc ids are
-    preserved: compaction changes statistics, not identity.  All five
-    impact variants, the vocabulary (including the ``""`` patch), dense
-    term ids and the nonoccurrence constants are re-derived by the same
-    ``_index_from_tf`` back half the build uses, so compacted and
-    freshly-built indexes cannot drift.
+    preserved: compaction changes statistics, not identity.  The
+    vocabulary (including the ``""`` patch), df and dense term ids are
+    re-derived by the same ``_index_from_tf`` back half the build uses,
+    so compacted and freshly-built indexes cannot drift.  A
+    reference-format import (``compat.import_bm25s``) has no real
+    (tf, dl) to re-derive from and raises ``ValueError``; its
+    :func:`with_tombstones` view still serves queries.
     """
+    if index.compat_import is not None:
+        raise ValueError(
+            "this index was imported from a reference-format save "
+            "(compat.import_bm25s): it stores no tf/dl, so compact_index "
+            "cannot rescore it; use with_tombstones for a live-docs view"
+        )
     live = (
         with_tombstones(index, tombstones_df, doc_id_col, broadcast)
         if tombstones_df is not None else index

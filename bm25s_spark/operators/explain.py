@@ -1,11 +1,11 @@
 """Score explanation: per-(query, doc, term) contribution breakdown.
 
-Lucene's ``explain()`` for the eager-impact engine: because the
-reference precomputes the complete BM25 contribution of every (doc,
-term) pair at index time (``reference/bm25s/scoring.py:246-309``), a
-document's score decomposes exactly into one stored impact per matched
-term (times query multiplicity) plus the per-query nonoccurrence
-constant — no tf/idf re-derivation needed at explain time.
+Lucene's ``explain()`` for the BM25 engine: as in the reference's
+precomputed impacts (``reference/bm25s/scoring.py:246-309``), a
+document's score decomposes exactly into one impact per matched term
+(times query multiplicity) plus the per-query nonoccurrence constant.
+Each impact comes from the scorer's own expression
+(``retrieval._scoring_cols``), so the breakdown sums to the score.
 
 Scale shape: identical to the scoring join itself — ONE broadcast join
 of the tiny query-term table against the postings, optionally
@@ -20,7 +20,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from bm25s_spark.indexer import BM25Index
-from bm25s_spark.retrieval import _impact_col, tokenize_queries
+from bm25s_spark.retrieval import _scoring_cols, tokenize_queries
 from bm25s_spark.scoring import METHODS
 
 
@@ -48,7 +48,7 @@ def explain_scores(
         raise ValueError(f"Invalid method {method!r}")
     idf_method = idf_method or method
     qterms = tokenize_queries(index, queries_df, query_id_col, text_col)
-    impact = _impact_col(index, method, idf_method)
+    impact, _ = _scoring_cols(index, method, idf_method)
     rows = (
         F.broadcast(qterms)
         .join(index.postings, "term")

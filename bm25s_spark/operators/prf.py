@@ -35,9 +35,9 @@ from pyspark.sql import functions as F
 
 from bm25s_spark.index_io import BM25Index
 from bm25s_spark.retrieval import (
-    _impact_col,
     _matched_scores,
     _nnoc_per_query,
+    _scoring_cols,
     _with_pad_candidates,
     retrieve,
     tokenize_queries,
@@ -244,7 +244,7 @@ def prf_score_delta(
 
     eterms = local_relation(spark, erows, eterms_plan.schema)
 
-    impact = _impact_col(index, method, idf_method)
+    impact, _ = _scoring_cols(index, method, idf_method)
     postings = index.postings
     # IN-list pushdown capped at IN_LIST_CAP (see its comment): above
     # the cap the broadcast hash join alone prunes the scan.

@@ -47,7 +47,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from bm25s_spark.indexer import BM25Index
-from bm25s_spark.retrieval import _impact_col, _nnoc_per_query
+from bm25s_spark.retrieval import _nnoc_per_query, _scoring_cols
 from bm25s_spark.scoring import METHODS
 from bm25s_spark.tokenization import make_tokenizer_udf
 from bm25s_spark.util import local_relation
@@ -664,7 +664,7 @@ def retrieve_parsed(
         F.sum("must").cast("long").alias("_nmust")
     )
     qall = q.join(F.broadcast(qn), "query_id")
-    impact = _impact_col(index, method, idf_method)
+    impact, _ = _scoring_cols(index, method, idf_method)
     grouped = (
         F.broadcast(qall)
         .join(index.postings, "term")

@@ -42,11 +42,11 @@ from __future__ import annotations
 from collections import Counter
 
 import pandas as pd
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from bm25s_spark import scoring
-from bm25s_spark.indexer import IMPACT_COLS, NNOC_COLS, BM25Index
+from bm25s_spark.indexer import BM25Index
 from bm25s_spark.scoring import METHODS, METHODS_REQUIRING_NNOC
 from bm25s_spark.tokenization import make_tokenizer_udf
 
@@ -139,29 +139,38 @@ def tokenize_queries(index: BM25Index, queries_df: DataFrame,
     return toks.groupBy("query_id", "term").agg(F.count(F.lit(1)).alias("mult"))
 
 
-def _impact_col(index: BM25Index, method: str, idf_method: str,
-                allow_negative: bool = False):
-    """Column expression for the effective per-posting impact.
+def _scoring_cols(index: BM25Index, method: str, idf_method: str,
+                  allow_negative: bool = False) -> tuple[Column, Column]:
+    """(impact, nnoc) column expressions over rows that carry a term's
+    ``df``: a ``postings`` row for the impact, which also reads its
+    (tf, dl), or a ``term_stats`` row for nnoc.
 
-    Standard combos (idf_method == method) read the eagerly-stored impact
-    column; cross combos (e.g. atire+robertson — the rank-bm25 equivalence
-    setting, ``reference/tests/__init__.py:92-98``) recompute exactly from
-    (tf, dl, df), which the flat postings retain.  ``allow_negative``
-    (robertson idf, ``reference/bm25s/scoring.py:178-187``) also takes the
-    recompute path — the stored impacts are clamped, but the flat postings
-    keep (tf, dl, df), so no index rebuild is needed to flip the knob
-    (the reference requires a rebuild: its impacts are baked at build).
-    """
-    neg = allow_negative and idf_method == "robertson"
-    if idf_method == method and not neg:
-        return F.col(IMPACT_COLS[method])
-    return scoring.impact_expr(
-        method, idf_method,
-        F.col("tf"), F.col("dl"), F.col("df"),
-        index.num_docs, index.avg_doc_len,
-        index.k1, index.b, index.delta,
-        allow_negative=neg,
-    ).cast("double")
+    The impact is the sharded kernel's ``idf·tfc(tf, dl) − nnoc``, with
+    the per-term (idf, nnoc) computed from the row's own df.  Taking them
+    from a ``qterms ⨝ term_stats`` side instead would add a broadcast
+    of that join, and its Spark jobs, to every query.  Every
+    ``method × idf_method`` combination and ``allow_negative`` (robertson
+    idf without its ≥0 clamp, ``reference/bm25s/scoring.py:178-187``)
+    scores exactly from one index; the reference bakes both into its
+    stored impacts.  A reference-format import has no real (tf, dl): it
+    scores with its stored ``imps`` and per-term ``nnoc_<method>``
+    (``check_compat`` pins the combination)."""
+    from bm25s_spark.compat import NNOC_COLS
+
+    if index.compat_import is not None:
+        nnoc = (F.col(NNOC_COLS[method]) if method in METHODS_REQUIRING_NNOC
+                else F.lit(0.0))
+        return F.col("imps"), nnoc
+    idf, nnoc = scoring.term_scalar_exprs(
+        method, idf_method, F.col("df"),
+        index.num_docs, index.avg_doc_len, index.k1, index.b, index.delta,
+        allow_negative=allow_negative and idf_method == "robertson",
+    )
+    impact = scoring.impact_expr(
+        method, F.col("tf"), F.col("dl"), idf, nnoc,
+        index.avg_doc_len, index.k1, index.b, index.delta,
+    )
+    return impact, nnoc
 
 
 def _nnoc_per_query(index: BM25Index, qterms: DataFrame,
@@ -174,26 +183,13 @@ def _nnoc_per_query(index: BM25Index, qterms: DataFrame,
         return qterms.select("query_id").distinct().withColumn(
             "nnoc_sum", F.lit(0.0)
         )
-    ts = index.term_stats
-    neg = allow_negative and idf_method == "robertson"
-    if idf_method == method and not neg:
-        nnoc = F.col(NNOC_COLS[method])
-    else:
-        nnoc = F.when(
-            F.col("df") > 0,
-            scoring.nnoc_expr(
-                method, idf_method, F.col("df"),
-                index.num_docs, index.avg_doc_len,
-                index.k1, index.b, index.delta,
-                allow_negative=neg,
-            ),
-        ).otherwise(F.lit(0.0))
+    _, nnoc = _scoring_cols(index, method, idf_method, allow_negative)
     # inner join: OOV terms contribute 0, and every consumer left-joins
     # this aggregate with coalesce(nnoc_sum, 0) — so dropping all-OOV
     # queries here is equivalent AND keeps the join broadcastable from
     # the tiny qterms side (a left-outer from qterms could only
     # broadcast the vocab-sized term_stats)
-    joined = F.broadcast(qterms).join(ts, "term")
+    joined = F.broadcast(qterms).join(index.term_stats, "term")
     return joined.groupBy("query_id").agg(
         F.sum(
             F.coalesce(F.col("mult") * nnoc, F.lit(0.0))
@@ -209,7 +205,7 @@ def _matched_scores(index: BM25Index, qterms: DataFrame,
     """(query_id, doc_id, score) for docs sharing ≥1 term with the query
     (``require_all=True``: docs containing EVERY distinct query term).
     Scores include mask and nnoc add-back."""
-    impact = _impact_col(index, method, idf_method, allow_negative)
+    impact, _ = _scoring_cols(index, method, idf_method, allow_negative)
     joined = F.broadcast(qterms).join(index.postings, "term")
     matched = joined.groupBy("query_id", "doc_id").agg(
         F.sum(F.col("mult").cast("double") * impact.cast("double")).alias("raw"),
@@ -286,9 +282,9 @@ def retrieve(
     Padding is skipped (padding would inject docs that fail the AND).
     ``allow_negative=True`` with robertson idf skips the ≥0 IDF clamp
     (``reference/bm25s/scoring.py:178-187``) — terms with df > N/2 score
-    negatively.  Applied at query time from the retained (tf, dl, df)
-    columns, so the same index serves both settings (the reference bakes
-    the flag into its stored impacts at build).
+    negatively.  Every impact is computed at query time from the
+    postings' (tf, dl, df), so the same index serves both settings (the
+    reference bakes the flag into its stored impacts at build).
     """
     if method not in METHODS:
         raise ValueError(f"Invalid method {method!r}")

@@ -21,9 +21,10 @@ Defaults k1=1.5, b=0.75, delta=0.5, method="lucene"
 bm25l / bm25+ additionally need the per-term *nonoccurrence* constant
 ``nnoc(t) = idf(df_t) * tfc(tf=0, dl=avgdl)``
 (``reference/bm25s/scoring.py:76-112`` — note it evaluates the TFC at
-``l_d = l_avg``); the stored per-posting impact is ``idf*tfc - nnoc(t)``
-(``:295-298``) and ``Σ_{t∈q} nnoc(t)`` is added back per query
-(``reference/bm25s/__init__.py:614-618``).
+``l_d = l_avg``); the per-posting impact is ``idf*tfc - nnoc(t)``
+(the reference stores it, ``:295-298``; this engine computes it at
+query time from tf, dl and df) and ``Σ_{t∈q} nnoc(t)`` is added back
+per query (``reference/bm25s/__init__.py:614-618``).
 
 Everything here is a pure ``pyspark.sql.Column`` expression — JVM-side,
 whole-stage-codegen'd; no UDFs.
@@ -111,53 +112,55 @@ def tfc_expr(
     return ((k1 + 1.0) * tf) / (k1 * norm + tf) + delta
 
 
+def term_scalar_exprs(
+    method: str,
+    idf_method: str,
+    df_col: Column,
+    n_docs: Column | int,
+    avgdl: Column | float,
+    k1: float = DEFAULT_K1,
+    b: float = DEFAULT_B,
+    delta: float = DEFAULT_DELTA,
+    allow_negative: bool = False,
+) -> tuple[Column, Column]:
+    """Per-term ``(idf, nnoc)`` over a document-frequency column — the
+    column twin of the sharded kernel's per-term scalar pair.  nnoc is
+    the nonoccurrence constant (``reference/bm25s/scoring.py:76-112``:
+    idf times the tfc at tf=0, dl=avgdl; 0.0 for variants whose tfc(0)
+    is 0).
+
+    Both are 0.0 where ``df`` is 0 (the ``""`` vocab patch row): that
+    term has no postings, and under ANSI mode the ``n/df`` division of
+    atire/bm25+ would raise ``DIVIDE_BY_ZERO`` for it."""
+    has_df = df_col > 0
+    idf = idf_expr(idf_method, df_col, n_docs, allow_negative)
+    nnoc = F.lit(0.0)
+    if method in METHODS_REQUIRING_NNOC:
+        avg = F.lit(avgdl) if not isinstance(avgdl, Column) else avgdl
+        nnoc = F.when(
+            has_df, idf * tfc_expr(method, F.lit(0), avg, avg, k1, b, delta)
+        ).otherwise(F.lit(0.0))
+    return F.when(has_df, idf).otherwise(F.lit(0.0)), nnoc
+
+
 def impact_expr(
     method: str,
-    idf_method: str,
     tf_col: Column,
     dl_col: Column,
-    df_col: Column,
-    n_docs: Column | int,
+    idf_col: Column,
+    nnoc_col: Column,
     avgdl: Column | float,
     k1: float = DEFAULT_K1,
     b: float = DEFAULT_B,
     delta: float = DEFAULT_DELTA,
-    subtract_nnoc: bool = True,
-    allow_negative: bool = False,
 ) -> Column:
-    """Eager per-(doc, term) impact: ``idf * tfc`` (minus the
-    nonoccurrence constant for bm25l/bm25+ when ``subtract_nnoc``,
-    matching the reference's stored representation,
-    ``reference/bm25s/scoring.py:295-298``)."""
-    imp = idf_expr(idf_method, df_col, n_docs, allow_negative) * tfc_expr(
-        method, tf_col, dl_col, avgdl, k1, b, delta
-    )
-    if subtract_nnoc and method in METHODS_REQUIRING_NNOC:
-        imp = imp - nnoc_expr(method, idf_method, df_col, n_docs, avgdl,
-                              k1, b, delta, allow_negative)
-    return imp
-
-
-def nnoc_expr(
-    method: str,
-    idf_method: str,
-    df_col: Column,
-    n_docs: Column | int,
-    avgdl: Column | float,
-    k1: float = DEFAULT_K1,
-    b: float = DEFAULT_B,
-    delta: float = DEFAULT_DELTA,
-    allow_negative: bool = False,
-) -> Column:
-    """Per-term nonoccurrence constant as a column expression
-    (``reference/bm25s/scoring.py:76-112``: tfc evaluated at tf=0,
-    dl=avgdl; zero for variants whose tfc(0)=0)."""
-    if method not in METHODS_REQUIRING_NNOC:
-        return F.lit(0.0)
-    avg = F.lit(avgdl) if not isinstance(avgdl, Column) else avgdl
-    return idf_expr(idf_method, df_col, n_docs, allow_negative) * tfc_expr(
-        method, F.lit(0), avg, avg, k1, b, delta
-    )
+    """Per-(doc, term) impact ``idf·tfc(tf, dl) − nnoc`` from the
+    per-term scalars of :func:`term_scalar_exprs` — the reference's
+    stored representation (``reference/bm25s/scoring.py:295-298``) and
+    the sharded kernel's formula.  nnoc is 0.0 for the variants whose
+    tfc(0) is 0, so subtracting it leaves their impact unchanged."""
+    return idf_col * tfc_expr(method, tf_col, dl_col, avgdl, k1, b, delta) \
+        - nnoc_col
 
 
 def nnoc_value(
@@ -171,8 +174,8 @@ def nnoc_value(
     delta: float = DEFAULT_DELTA,
     allow_negative: bool = False,
 ) -> float:
-    """Driver-side scalar twin of :func:`nnoc_expr` (used by the sharded
-    query kernel, which receives plain floats)."""
+    """Driver-side scalar twin of :func:`term_scalar_exprs`' nnoc (used
+    by the sharded query kernel, which receives plain floats)."""
     if method not in METHODS_REQUIRING_NNOC:
         return 0.0
     return idf_value(idf_method, df, n_docs, allow_negative) * tfc_value(

@@ -10,9 +10,8 @@ delta-encoded local doc gaps (``reference`` stores raw int32 ids,
 ``reference/bm25s/__init__.py:432-438`` — delta encoding is our
 compression addition) plus the postings' ``tf`` and ``dl``.  No impact
 is stored: impacts depend on the corpus statistics (N, avgdl, df), and
-the kernel computes them from (tf, dl) and two scalars per term.  The
-paper's eager impacts live in the flat ``postings`` table, which the
-join strategy and the reference-format export read.  A reference-format
+the kernel computes them from (tf, dl) and two scalars per term, as the
+join strategy does over the flat ``postings`` table.  A reference-format
 import (``compat.import_bm25s``) has no real (tf, dl), so its layout
 adds one ``imps`` array of the file's stored impacts, scored verbatim.
 No block-max column is stored: the kernel takes each loaded list's
@@ -56,7 +55,8 @@ from pyspark.sql.types import (
 )
 
 from bm25s_spark import scoring
-from bm25s_spark.indexer import IMPACT_COLS, NNOC_COLS, BM25Index
+from bm25s_spark.compat import NNOC_COLS
+from bm25s_spark.indexer import BM25Index
 from bm25s_spark.scoring import METHODS_REQUIRING_NNOC
 from bm25s_spark.retrieval import count_query_terms, tokenize_queries
 from bm25s_spark.tokenization import make_local_tokenizer
@@ -106,8 +106,7 @@ def build_sharded_postings(index: BM25Index, docs_per_shard: int | None = None) 
         F.col("doc_id").cast("long").alias("doc_id"),
         F.col("tf").cast("int").alias("tf"),
         F.col("dl").cast("int").alias("dl"),
-        *([F.col(IMPACT_COLS[index.compat_import["method"]])
-           .cast("float").alias("imp")] if imported else []),
+        *([F.col("imps").cast("float").alias("imp")] if imported else []),
     )
     n_parts = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
     flat = flat.repartition(n_parts, "shard_id", "term_id").sortWithinPartitions(

@@ -8,13 +8,12 @@ UDF, assigned doc_ids *after* the current high-water mark, and appended
 to the postings/doc_lens tables; the vocab table grows (or not)
 according to ``update_vocab``.
 
-Impact staleness: BM25 impacts depend on the global ``avg_doc_len``/
-``df``/``num_docs``, so appended postings store (tf, dl) and the
-*stats epoch* they were scored under; a ``reindex_impacts`` pass
-(cheap column arithmetic, no re-tokenization) refreshes impacts when
-drift exceeds a threshold.  The reference has the same limitation —
-its index is immutable after ``index()`` (SURVEY.md §7 hard-part 5);
-we document and manage the drift instead of silently ignoring it.
+Statistics: BM25 scores depend on the global ``avg_doc_len``/``df``/
+``num_docs``, so appended postings store only (tf, dl) and
+:meth:`IncrementalIndexer.to_index` derives the statistics of
+everything ingested so far; queries compute impacts from them, so no
+stored value goes stale.  The reference's index is immutable after
+``index()`` (SURVEY.md §7 hard-part 5).
 """
 
 from __future__ import annotations
@@ -121,10 +120,10 @@ class IncrementalIndexer:
 
     # finalize ---------------------------------------------------------
     def to_index(self, k1: float = 1.5, b: float = 0.75, delta: float = 0.5):
-        """Score the accumulated raw postings under the *current* global
+        """The accumulated raw postings under the *current* global
         stats → a queryable BM25Index (the epoch-refresh pass)."""
         from bm25s_spark.indexer import (
-            BM25Index, auto_docs_per_shard, corpus_term_stats, with_impacts,
+            BM25Index, auto_docs_per_shard, corpus_term_stats,
         )
 
         spark = self.spark
@@ -136,12 +135,8 @@ class IncrementalIndexer:
         tf = spark.read.parquet(self._p("raw_postings"))
         term_stats = corpus_term_stats(
             spark, tf.groupBy("term").agg(F.count(F.lit(1)).alias("df")),
-            num_docs, avgdl, k1, b, delta,
         )
-        postings = with_impacts(
-            tf.join(term_stats.select("term", "term_id", "df"), "term"),
-            num_docs, avgdl, k1, b, delta,
-        )
+        postings = tf.join(term_stats, "term")
 
         return BM25Index(
             spark=spark, postings=postings, term_stats=term_stats,

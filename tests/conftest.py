@@ -107,3 +107,20 @@ def assert_rank_identical(ours_rows, ref_docs, ref_scores, rtol=1e-4, atol=1e-5)
             if j < n:
                 assert og == rg, f"{qid}: tie group docs differ at ranks [{i},{j}): {og} vs {rg}"
             i = j
+
+
+def assert_scores_equal(index_a, index_b, queries_df, rel=1e-12):
+    """``score_all`` of two indexes agrees for all five methods: the same
+    (query, doc) pairs, and scores equal to ``rel``.  The tolerance only
+    absorbs Spark summing a doc's identical impacts in another order,
+    which follows the partitioning."""
+    from bm25s_spark.retrieval import score_all
+    from bm25s_spark.scoring import METHODS
+
+    for m in METHODS:
+        a = score_all(index_a, queries_df, method=m) \
+            .orderBy("query_id", "doc_id").collect()
+        b = score_all(index_b, queries_df, method=m) \
+            .orderBy("query_id", "doc_id").collect()
+        assert [r[:2] for r in a] == [r[:2] for r in b], m
+        assert [r[2] for r in b] == pytest.approx([r[2] for r in a], rel=rel), m

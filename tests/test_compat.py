@@ -226,3 +226,39 @@ def test_saved_import_keeps_method_pin(spark, built_index, tmp_path):
         assert a == b, kw
     with pytest.raises(ValueError, match="imported"):
         retrieve(loaded, qdf, k=2, method="lucene", strategy="sharded")
+
+
+def test_merge_and_compact_reject_imports(spark, built_index, tmp_path):
+    """An import has no real (tf, dl) to rescore from: merging or
+    compacting it raises instead of rescoring its docs from placeholder
+    zeros, while a tombstone view keeps the import's own scores."""
+    from bm25s_spark.indexer import build_index_from_tokens, merge_indexes
+    from bm25s_spark.operators.deletes import compact_index, with_tombstones
+
+    d = str(tmp_path / "idxm")
+    export_bm25s(built_index, d, method="bm25l", dtype="float64")
+    imp = import_bm25s(spark, d)
+    other = build_index_from_tokens(
+        spark.createDataFrame([(100, ["quick", "fox"])],
+                              "doc_id long, tokens array<string>"),
+        doc_id_col="doc_id",
+    )
+    with pytest.raises(ValueError, match="imported"):
+        merge_indexes(imp, other)
+    with pytest.raises(ValueError, match="imported"):
+        merge_indexes(other, imp)
+    tomb = spark.createDataFrame([(1,)], "doc_id long")
+    with pytest.raises(ValueError, match="imported"):
+        compact_index(imp, tomb)
+    view = with_tombstones(imp, tomb)
+    with pytest.raises(ValueError, match="imported"):
+        compact_index(view)
+    qdf = _queries_df(spark)
+    full = {(r.query_id, r.doc_id): r.score
+            for r in score_all(imp, qdf, method="bm25l").collect()}
+    live = {(r.query_id, r.doc_id): r.score
+            for r in score_all(view, qdf, method="bm25l").collect()}
+    assert live == {k: v for k, v in full.items() if k[1] != 1}
+    for kw in ({"strategy": "join"}, {"strategy": "sharded"}):
+        got = retrieve(view, qdf, k=3, method="bm25l", **kw).collect()
+        assert got and all(r.doc_id != 1 for r in got), kw

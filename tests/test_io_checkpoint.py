@@ -12,12 +12,13 @@ from pyspark.sql import functions as F
 
 from bm25s_spark.checkpoint import build_index_checkpointed
 from bm25s_spark.index_io import load_index, save_index
-from bm25s_spark.indexer import IMPACT_COLS, SparkBM25, build_index
-from bm25s_spark.retrieval import score_all
-from bm25s_spark.scoring import METHOD_SLUGS, METHODS
+from bm25s_spark.indexer import SparkBM25, build_index
+from bm25s_spark.scoring import METHOD_SLUGS
 from bm25s_spark.transcripts import queries_for, transcripts_df
 
-from tests.conftest import assert_rank_identical, rows_to_arrays
+from tests.conftest import (
+    assert_rank_identical, assert_scores_equal, rows_to_arrays,
+)
 
 
 def _rows(df):
@@ -86,34 +87,36 @@ def saved_t2(spark, tmp_path_factory):
 
 
 def test_loaded_index_scores_exactly_like_fresh(spark, saved_t2):
-    """load_index rebuilds the flat impacts from (tf, dl, df) with the
-    build's own expressions: no float32 round trip, so the loaded flat
-    table equals the fresh build's exactly.  Every method's scores match
-    to the last few bits: the per-doc sums may add the same impacts in
+    """load_index rebuilds the flat (tf, dl, df) facts from the layout
+    and term_stats: no float32 round trip, so the loaded flat table
+    equals the fresh build's exactly.  Every method's scores match to
+    the last few bits: the per-doc sums may add the same impacts in
     another order, since Spark's aggregation follows the partitioning."""
     idx, qdf, path = saved_t2
     loaded = load_index(spark, path)
-    cols = ["term", "doc_id", "tf", "dl", "df"] + list(IMPACT_COLS.values())
+    cols = ["term", "doc_id", "tf", "dl", "df"]
 
     def rows(p):
         return sorted(tuple(r) for r in p.select(cols).collect())
 
     assert rows(loaded.postings) == rows(idx.postings)
-    for m in METHODS:
-        a = score_all(idx, qdf, method=m).orderBy("query_id", "doc_id").collect()
-        b = score_all(loaded, qdf, method=m).orderBy("query_id", "doc_id").collect()
-        assert [r[:2] for r in a] == [r[:2] for r in b], m
-        assert [r[2] for r in b] == pytest.approx([r[2] for r in a], rel=1e-12), m
+    assert_scores_equal(idx, loaded, qdf)
 
 
 def test_older_layout_with_impact_arrays_loads(spark, saved_t2, tmp_path):
-    """A layout in the older format, which also stored per-method impact
-    arrays and df on every row, still loads: columns are chosen by name.
-    The extra arrays are filled with -1 so that reading any of them
-    would change the results."""
+    """A save in the older format, whose layout also stored per-method
+    impact arrays and df on every row and whose term_stats stored nnoc
+    columns, still loads: columns are chosen by name.  The extra values
+    are filled with -1 so that reading any of them would change the
+    results."""
     idx, qdf, path = saved_t2
     old = str(tmp_path / "old")
-    shutil.copytree(path, old, ignore=shutil.ignore_patterns("postings_sharded"))
+    shutil.copytree(path, old, ignore=shutil.ignore_patterns(
+        "postings_sharded", "term_stats"))
+    ts = spark.read.parquet(os.path.join(path, "term_stats"))
+    for slug in ("bm25l", "bm25plus"):
+        ts = ts.withColumn(f"nnoc_{slug}", F.lit(-1.0))
+    ts.write.parquet(os.path.join(old, "term_stats"))
     layout = spark.read.parquet(os.path.join(path, "postings_sharded")).join(
         spark.read.parquet(os.path.join(path, "term_stats"))
         .select("term_id", "df"), "term_id",
@@ -128,6 +131,7 @@ def test_older_layout_with_impact_arrays_loads(spark, saved_t2, tmp_path):
     )
     loaded = load_index(spark, old)
     assert {"df", "impacts_lucene"} <= set(loaded.sharded.columns)
+    assert loaded.term_stats.columns == ["term", "term_id", "df"]
     fresh = _rows(idx.retrieve(qdf, k=8, method="bm25l", strategy="join"))
     for strategy in ("join", "sharded"):
         _tie_aware_equal(

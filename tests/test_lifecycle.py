@@ -7,6 +7,8 @@ import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
+from tests.conftest import assert_scores_equal
+
 CORPUS = [
     "spark merge sort join table scan",
     "fast key order sort merge window",
@@ -75,7 +77,8 @@ def test_tombstone_view_doc_map_and_lens(spark, small_index):
 
 def test_compacted_equals_fresh_build(spark, small_index):
     """compact_index must be indistinguishable from a fresh build over
-    the surviving corpus — postings impacts, term stats, and scalars."""
+    the surviving corpus — postings facts, term stats, scalars, and
+    every method's scores."""
     from bm25s_spark.indexer import build_index
     from bm25s_spark.operators.deletes import compact_index
 
@@ -92,14 +95,16 @@ def test_compacted_equals_fresh_build(spark, small_index):
     assert compacted.num_docs == fresh.num_docs
     assert compacted.avg_doc_len == pytest.approx(fresh.avg_doc_len, abs=0)
 
-    cols = ["term", "doc_id", "tf", "dl", "impact_lucene", "impact_bm25l"]
+    cols = ["term", "doc_id", "tf", "dl", "df"]
     a = sorted(map(tuple, compacted.postings.select(*cols).collect()))
     b = sorted(map(tuple, fresh.postings.select(*cols).collect()))
     assert a == b
 
-    ts_cols = ["term", "df", "nnoc_bm25l", "nnoc_bm25plus"]
+    ts_cols = ["term", "term_id", "df"]
     assert sorted(map(tuple, compacted.term_stats.select(*ts_cols).collect())) \
         == sorted(map(tuple, fresh.term_stats.select(*ts_cols).collect()))
+    qdf = spark.createDataFrame(QUERIES, "query_id string, text string")
+    assert_scores_equal(fresh, compacted, qdf)
 
 
 def test_compact_after_view(spark, small_index):

@@ -1,6 +1,6 @@
 """merge_indexes: partitioned builds over disjoint doc-id sets must
 merge into an index exactly equal to a from-scratch full-corpus build
-(same scalars, same term_stats, bit-identical impacts, same retrieval)."""
+(same scalars, same term_stats, bit-identical postings, same retrieval)."""
 
 from __future__ import annotations
 
@@ -11,6 +11,7 @@ from pyspark.sql import functions as F
 from bm25s_spark.ids import assign_doc_ids
 from bm25s_spark.indexer import build_index, merge_indexes
 from bm25s_spark.transcripts import queries_for, transcripts_df
+from tests.conftest import assert_scores_equal
 
 
 def _sorted_rows(df, *order):
@@ -49,9 +50,8 @@ def test_merge_tables_equal(merge_setup):
     assert _sorted_rows(merged.term_stats.select(cols), "term") == _sorted_rows(
         full.term_stats.select(cols), "term"
     )
-    # postings: tf/dl are corpus-independent facts; the impacts are
-    # deterministic double expressions of (tf, dl, df, N, avgdl), so the
-    # merged rows must be BIT-identical to the full build's
+    # postings: tf/dl are corpus-independent facts and df sums exactly,
+    # so the merged rows must be BIT-identical to the full build's
     pcols = full.postings.columns
     assert _sorted_rows(
         merged.postings.select(pcols), "term", "doc_id"
@@ -135,10 +135,10 @@ def test_merge_empty_side(spark, merge_setup):
 
 
 def test_merge_loaded_indexes(spark, merge_setup, tmp_path):
-    """merge_indexes composes with save/load: two halves saved to disk
-    (float32 impact storage), loaded back, and merged must reproduce the
-    FRESH full build bit-for-bit — the merge recomputes impacts from the
-    exact (tf, dl, df) ints, so it doubles as an impact-refresh pass."""
+    """merge_indexes composes with save/load: two halves saved to disk,
+    loaded back, and merged must reproduce the FRESH full build — the
+    exact (tf, dl, df) ints bit-for-bit, and every method's scores, which
+    are computed from them."""
     from bm25s_spark.index_io import load_index, save_index
 
     docs, full, _ = merge_setup
@@ -150,9 +150,11 @@ def test_merge_loaded_indexes(spark, merge_setup, tmp_path):
     merged = merge_indexes(*loaded)
     assert merged.num_docs == full.num_docs
     assert merged.avg_doc_len == full.avg_doc_len
-    pcols = ["term", "doc_id", "tf", "dl"] + [
-        c for c in full.postings.columns if c.startswith("impact_")
-    ]
+    pcols = ["term", "doc_id", "tf", "dl", "df"]
     assert _sorted_rows(
         merged.postings.select(pcols), "term", "doc_id"
     ) == _sorted_rows(full.postings.select(pcols), "term", "doc_id")
+    texts = [r["text"] for r in docs.orderBy("doc_id").select("text").collect()]
+    qdf = spark.createDataFrame(queries_for(texts, 12, seed=5),
+                                "query_id string, text string")
+    assert_scores_equal(full, merged, qdf)

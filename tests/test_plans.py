@@ -82,17 +82,25 @@ def test_sharded_kernel_prunes_terms_before_scan(spark, idx):
 
 
 def test_impact_expressions_are_jvm_side(spark, idx):
-    """BM25 impact arithmetic must be JVM column expressions — the only
-    Python in the postings lineage is the Arrow-batched tokenizer UDF,
+    """BM25 impact arithmetic must be JVM column expressions — the
+    join-strategy scorer computes every method's impacts at query time,
+    and the only Python in its plan is the Arrow-batched tokenizer UDF,
     never row-at-a-time BatchEvalPython.  (WholeStageCodegen spans aren't
     visible through an unexecuted AdaptiveSparkPlan, so the assertion is
     on the absence of Python nodes.)"""
-    plan = _plan(idx.postings)
-    assert "BatchEvalPython" not in plan
-    import re
+    from bm25s_spark.scoring import METHODS
 
-    arrow_nodes = re.findall(r"ArrowEvalPython \[([^\]]*)\]", plan)
-    assert all("tokenize" in a for a in arrow_nodes) or len(arrow_nodes) <= 1
+    qdf = spark.createDataFrame(
+        [("q0", "telemetry checkpoint shuffle")], "query_id string, text string"
+    )
+    for m in METHODS:
+        plan = _plan(idx.retrieve(qdf, k=5, method=m, strategy="join"))
+        assert "BatchEvalPython" not in plan, m
+        # the impact is computed in the plan, as a JVM expression
+        assert "ln(" in plan, m
+        arrow_nodes = re.findall(r"ArrowEvalPython \[([^\]]*)\]", plan)
+        assert all("tokenize" in a for a in arrow_nodes) \
+            or len(arrow_nodes) <= 1, m
 
 
 def test_retrieve_has_no_python_row_udfs(spark, idx):

@@ -239,6 +239,7 @@ def test_sqlstem_build_exact_parity_realistic_vocab(spark):
     one doc sharing a stem → summed tf) is actually exercised."""
     from bm25s_spark.indexer import build_index
     from bm25s_spark.retrieval import retrieve
+    from tests.conftest import assert_scores_equal
     from tests.test_stemmer import _morph_corpus
 
     docs, queries = _morph_corpus(n_docs=400, seed=23)
@@ -258,10 +259,10 @@ def test_sqlstem_build_exact_parity_realistic_vocab(spark):
     tb = sorted((r.term, r.df) for r in
                 b.term_stats.select("term", "df").collect())
     assert ta == tb
-    cols = ["term", "doc_id", "tf", "dl", "impact_lucene", "impact_bm25l"]
+    cols = ["term", "doc_id", "tf", "dl", "df"]
     pa = sorted(tuple(r) for r in a.postings.select(*cols).collect())
     pb = sorted(tuple(r) for r in b.postings.select(*cols).collect())
-    assert pa == pb  # exact, including float64 impacts
+    assert pa == pb  # exact: every score is a function of these facts
 
     # conflation actually happened (some doc holds 2+ surface forms of
     # one stem), otherwise this test proves nothing about the tf fold
@@ -272,6 +273,7 @@ def test_sqlstem_build_exact_parity_realistic_vocab(spark):
     assert a.postings.count() < n_surface_pairs
 
     qdf = spark.createDataFrame(queries[:8], "query_id string, text string")
+    assert_scores_equal(a, b, qdf)
     ra = [(r.query_id, r.rank, r.doc_id, round(r.score, 9))
           for r in retrieve(a, qdf, k=5).collect()]
     rb = [(r.query_id, r.rank, r.doc_id, round(r.score, 9))
