@@ -13,8 +13,9 @@ Two physical strategies over the same semantics:
    ``shards.py``): doc-sharded postings scored per shard with a NumPy
    scatter-add + local top-k inside ``mapInPandas`` (the distributed twin
    of the reference's ``np.add.at`` kernel,
-   ``reference/bm25s/__init__.py:272-324``), then a tiny final merge of
-   ``shards × k`` candidates per query.
+   ``reference/bm25s/__init__.py:272-324``), then a final merge of the
+   ``shards × k`` candidates per query: one vectorized NumPy top-k pass
+   per partition, all queries at once, in a second ``mapInPandas``.
 
 Reference semantics reproduced exactly:
 - duplicate query terms score multiple times (``get_tokens_ids`` keeps
@@ -376,12 +377,16 @@ def _with_pad_candidates(index, queries_df, qterms, scores, k, method,
     which also preserves rank identity when scores can dip below the
     nnoc floor, e.g. negative mask weights or ``allow_negative``).
 
-    Documented deviation in the negative-score corner: the reference's
-    dense score vector ranks EVERY unmatched doc (score 0/nnoc) above a
-    negatively-scored matched doc; the scalable pad pool only carries
-    the 2·k lowest doc_ids, so when all of those matched negatively, the
-    zero-score docs outside the pool are not surfaced.  For dense-vector
-    semantics at test scale use ``score_all(dense=True)``."""
+    The sharded strategy keeps the same contract: a pad row is always an
+    unmatched doc, and every row carries its doc's true score.
+
+    Documented deviation in the negative-score corner, on both
+    strategies: the reference's dense score vector ranks EVERY unmatched
+    doc (score 0/nnoc) above a negatively-scored matched doc; the
+    scalable pad pool only carries the 2·k lowest doc_ids, so when all
+    of those matched negatively, the zero-score docs outside the pool
+    are not surfaced.  For dense-vector semantics at test scale use
+    ``score_all(dense=True)``."""
     all_q = queries_df.select(F.col(query_id_col).alias("query_id")).distinct()
     pool = index.doc_lens.select("doc_id").orderBy("doc_id").limit(2 * k)
     nnoc = _nnoc_per_query(index, qterms, method, idf_method, allow_negative)

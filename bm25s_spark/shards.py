@@ -38,9 +38,12 @@ elements — the *same* kernel as the reference's
 ``np.add.at`` at ``:318``) but over a bounded doc range — followed by a
 local ``argpartition`` top-k (``reference/bm25s/selection.py:14-37``).
 Each shard emits ≤k candidates per query, so the only shuffle after the
-postings scan is ``n_queries × k × n_shards`` rows; the final exact top-k
-merge re-ranks those candidates with the identical NumPy routine for tie
-parity.
+postings scan is ``n_queries × k × n_shards`` rows, hashed on the query
+index.  The final exact top-k merge is one vectorized NumPy pass over
+each partition of those candidates (``_merge_topk``): it adds every
+query's nnoc sum, sorts all queries at once by (query, score desc,
+doc_id asc) with one ``lexsort``, cuts k rows per query and maps the
+query index back to its id.
 """
 
 from __future__ import annotations
@@ -181,41 +184,97 @@ def ensure_sharded(index: BM25Index) -> DataFrame:
 
 
 def _query_payload(index: BM25Index, qpdf: pd.DataFrame, method: str,
-                   idf_method: str, qidx: dict,
+                   idf_method: str, lo: int, ids: np.ndarray,
                    allow_negative: bool = False):
     """Driver-side broadcast payload for one chunk of queries.
 
-    ``qpdf``: pandas frame of (query_id, term, mult, df) for the chunk's
-    in-vocab terms (an Arrow ``toPandas`` slice — columnar, ~10× denser
-    than collected Row objects); ``qidx`` maps query_id → *global* query
-    index.  Returns ({term: [(q_idx, mult)]}, {term: (idf, nnoc)}): the
-    kernel scores each posting as ``idf·tfc_method(tf, dl) − nnoc``, the
-    same formula for every ``method × idf_method`` combination (robust
-    even where the matched combination's idf is zero, e.g. robertson's
-    clamp or atire with df=N).  A reference-format import maps every
-    term to None: it scores from its stored impacts and has no avgdl
-    to compute nnoc from.
+    ``qpdf``: pandas frame of (query_id, term, mult, df[, _nnoc]) for
+    the chunk's in-vocab terms (an Arrow ``toPandas`` slice — columnar,
+    ~10× denser than collected Row objects); ``ids`` is the chunk's
+    slice of the sorted query ids, whose *global* query indexes start at
+    ``lo``.  Returns ({term: [(q_idx, mult)]}, {term: (idf, nnoc)},
+    q_nnoc): the kernel scores each posting as
+    ``idf·tfc_method(tf, dl) − nnoc``, the same formula for every
+    ``method × idf_method`` combination (robust even where the matched
+    combination's idf is zero, e.g. robertson's clamp or atire with
+    df=N).  A reference-format import maps every term to None: it
+    scores from its stored impacts and has no avgdl to compute nnoc
+    from.  ``q_nnoc`` holds each query's nonoccurrence add-back
+    ``Σ mult·nnoc(t)`` (reference/bm25s/__init__.py:614-618) at
+    ``q_idx − lo`` — an import's stored ``_nnoc`` verbatim — or is None
+    for methods without one.
     """
     n, avgdl = index.num_docs, index.avg_doc_len
     k1, b, delta = index.k1, index.b, index.delta
     imported = index.compat_import is not None
+    qidx = {q: lo + i for i, q in enumerate(ids)}
     per_term: dict[str, list[tuple[int, float]]] = {}
     scalars: dict[str, tuple[float, float] | None] = {}
-    for qid, term, mult, df in zip(
+    q_nnoc = (
+        np.zeros(len(ids)) if method in METHODS_REQUIRING_NNOC else None
+    )
+    stored = qpdf["_nnoc"].values if "_nnoc" in qpdf.columns else None
+    for i, (qid, term, mult, df) in enumerate(zip(
         qpdf["query_id"].values, qpdf["term"].values,
         qpdf["mult"].values, qpdf["df"].values,
-    ):
+    )):
         df = float(df)
-        if df <= 0:
-            continue  # the "" patch token: no postings, contributes via nnoc only
-        if term not in scalars:
+        q = qidx[qid]
+        if df > 0 and term not in scalars:
             scalars[term] = None if imported else (
                 scoring.idf_value(idf_method, df, n, allow_negative),
                 scoring.nnoc_value(method, idf_method, df, n, avgdl, k1, b,
                                    delta, allow_negative),
             )
-        per_term.setdefault(term, []).append((qidx[qid], float(mult)))
-    return per_term, scalars
+        if q_nnoc is not None:
+            if stored is not None:
+                v = float(stored[i]) if pd.notna(stored[i]) else 0.0
+            else:
+                v = scalars[term][1] if df > 0 else 0.0
+            q_nnoc[q - lo] += float(mult) * v
+        if df > 0:
+            # the "" patch token has no postings
+            per_term.setdefault(term, []).append((q, float(mult)))
+    return per_term, scalars, q_nnoc
+
+
+def _merge_topk(pdf: pd.DataFrame, k: int, round_to: int | None, lo: int,
+                ids: np.ndarray, q_nnoc: np.ndarray | None) -> pd.DataFrame:
+    """Final exact top-k of one partition's candidates, all queries at
+    once: (q_idx, doc_id, score[, is_pad]) → (query_id, rank, doc_id,
+    score).
+
+    One vectorized pass: add each query's nnoc sum, drop a pad row whose
+    (q_idx, doc_id) also has a real row, order by (q_idx, score desc,
+    doc_id asc) — the documented tie contract, on the rounded score in
+    gate mode (``round_to``) — cut the first k rows of every q_idx and
+    map q_idx to its query id.  Every row of a q_idx must be in
+    ``pdf``."""
+    q = pdf["q_idx"].to_numpy()
+    doc = pdf["doc_id"].to_numpy()
+    score = pdf["score"].to_numpy()
+    if q_nnoc is not None:
+        score = score + q_nnoc[q - lo]
+    if "is_pad" in pdf.columns:
+        # a real row sorts right before its pad twin
+        o = np.lexsort((pdf["is_pad"].to_numpy(), doc, q))
+        twin = np.zeros(len(o), dtype=bool)
+        twin[o[1:]] = (q[o[1:]] == q[o[:-1]]) & (doc[o[1:]] == doc[o[:-1]])
+        q, doc, score = q[~twin], doc[~twin], score[~twin]
+    key = score if round_to is None else np.round(score, round_to)
+    o = np.lexsort((doc, -key, q))
+    q, doc, score = q[o], doc[o], score[o]
+    starts = np.flatnonzero(np.r_[True, q[1:] != q[:-1]])
+    rank = np.arange(1, len(q) + 1) - np.repeat(
+        starts, np.diff(np.r_[starts, len(q)])
+    )
+    top = rank <= k
+    return pd.DataFrame({
+        "query_id": ids[q[top] - lo],
+        "rank": rank[top].astype(np.int32),
+        "doc_id": doc[top],
+        "score": score[top],
+    })
 
 
 def _mask_shard_rows(weight_mask_df: DataFrame, docs_per_shard: int) -> DataFrame:
@@ -355,22 +414,28 @@ def retrieve_sharded(
     long as the returned DataFrame.
 
     **Chunks.** A larger batch is streamed through the kernel in chunks
-    of ``query_chunk_size`` query ids: each chunk pulls *only its own*
-    (query_id, term, mult, df) metadata to the driver (Arrow ``toPandas``
-    on a chunk filter), broadcasts it, materializes its candidate set
-    (``localCheckpoint``), and destroys its broadcast before the next
-    chunk starts.  Driver peak is therefore O(chunk) for the metadata
-    and broadcasts; the only O(batch) driver-side structures left are
-    the sorted query-id list (ids only — the reference holds the full
-    query set in RAM, ``reference/bm25s/__init__.py:759-803``) and the
-    per-query nnoc sums.
+    of ``query_chunk_size`` consecutive sorted query ids: each chunk
+    pulls *only its own* (query_id, term, mult, df) metadata to the
+    driver (Arrow ``toPandas`` on the chunk's query-id range),
+    broadcasts it with the chunk's id slice and per-query nnoc sums,
+    runs the kernel and its own final merge, materializes the merged
+    top-k (``eager_checkpoint``, n_chunk × k rows) and destroys its
+    broadcast.  Chunks split the query ids, so the batch's result is the
+    union of theirs.  Driver peak is therefore O(chunk) for the metadata
+    and broadcasts; the only O(batch) driver-side structure left is the
+    sorted query-id list (ids only — the reference holds the full query
+    set in RAM, ``reference/bm25s/__init__.py:759-803``).
 
     **Pad.** ``pad=True`` returns exactly k rows per query.  The 2·k
-    lowest doc ids are unioned as score-0 candidates against every query
-    id of the batch (all-OOV and empty queries included) before the
-    final merge, which adds the query's nnoc constant and drops a pad
-    row whose doc already has a real candidate; the merge's single
-    top-k cut then serves both real and pad rows.
+    lowest doc ids are unioned as score-0 candidates against every
+    query index of the chunk (all-OOV and empty queries included)
+    before the final merge, which adds the query's nnoc constant and
+    drops a pad row whose doc already has a real candidate; the merge's
+    single top-k cut then serves both real and pad rows.  A pad row is
+    therefore always an unmatched doc, and every row carries its doc's
+    true score: when scores can be negative (``allow_negative``
+    robertson idf, or a weight mask), each shard also emits its 2·k
+    lowest-id touched docs, which include every matched pool doc.
     """
     idf_method = idf_method or method
     if k > index.num_docs:
@@ -389,7 +454,8 @@ def retrieve_sharded(
         )
     # MaxScore needs nonnegative impacts: its in-shard kth score only
     # grows as terms add up.  Unclamped robertson idf breaks that.
-    prune = prune and not (allow_negative and idf_method == "robertson")
+    negative_idf = allow_negative and idf_method == "robertson"
+    prune = prune and not negative_idf
     spark = index.spark
     sharded = ensure_sharded(index)
     docs_per_shard = index.docs_per_shard
@@ -467,8 +533,12 @@ def retrieve_sharded(
         qpdf = qstats_of(tokenize_queries(
             index, probed, query_id_col, text_col, localize_max=0
         )).toPandas()
-    qidx = {q: i for i, q in enumerate(query_ids)}
     has_mask = weight_mask_df is not None
+    # with negative scores (unclamped robertson idf, or mask weights)
+    # a matched pool doc can fall out of its shard's top-k; the pool's
+    # 2·k docs are the lowest ids, so each shard also emits its 2·k
+    # lowest-id touched docs and every pool doc keeps its real score
+    pool_n = 2 * k if pad and (has_mask or negative_idf) else 0
     val_dtype = np.float64 if exact else np.float32
 
     acc_shards = acc_postings = acc_cands = acc_scored = None
@@ -490,9 +560,10 @@ def retrieve_sharded(
         "imps" if imported else F.lit(None).cast("array<float>").alias("imps"),
     )
     mask_rows_df = (
-        _mask_shard_rows(weight_mask_df, docs_per_shard).persist()
-        if has_mask else None
+        _mask_shard_rows(weight_mask_df, docs_per_shard) if has_mask else None
     )
+    if mask_rows_df is not None and not bounded:
+        mask_rows_df.persist()  # every chunk's kernel reads it
 
     # one task ≈ one shard: explicit numPartitions (AQE won't coalesce an
     # explicit repartition) sized to the shard count so the kernel gets
@@ -507,17 +578,29 @@ def retrieve_sharded(
         StructField("doc_id", LongType(), False),
         StructField("score", DoubleType(), False),
     ])
+    # query ids keep their native type (string, int, …): schema is built
+    # from the queries_df column type, never forced to string
+    final_schema = StructType([
+        StructField("query_id", qid_type, False),
+        StructField("rank", IntegerType(), False),
+        StructField("doc_id", LongType(), False),
+        StructField("score", DoubleType(), False),
+    ])
 
-    def run_chunk(chunk_pdf: pd.DataFrame):
-        per_term, scalars = _query_payload(
-            index, chunk_pdf, method, idf_method, qidx,
+    def run_chunk(chunk_pdf: pd.DataFrame, lo: int, hi: int):
+        """Final top-k of the queries ``query_ids[lo:hi]`` (whose
+        metadata rows are ``chunk_pdf``) and the broadcast it reads."""
+        ids = pd.Series(query_ids[lo:hi]).to_numpy()
+        per_term, scalars, q_nnoc = _query_payload(
+            index, chunk_pdf, method, idf_method, lo, ids,
             allow_negative=allow_negative,
         )
-        bc = spark.sparkContext.broadcast(
+        bc = spark.sparkContext.broadcast((
             (per_term, scalars, docs_per_shard, k,
              (method, index.avg_doc_len, index.k1, index.b, index.delta),
-             prune, has_mask, round_to)
-        )
+             prune, has_mask, round_to, pool_n),
+            (k, round_to, lo, ids, q_nnoc),
+        ))
         # only shards containing query terms matter; prune with a
         # broadcast semi join on term before the scan-heavy kernel
         terms_df = local_relation(
@@ -535,13 +618,43 @@ def retrieve_sharded(
             needed.repartition(n_parts, "shard_id")
             .sortWithinPartitions("shard_id")
         )
-        return needed.mapInPandas(_make_kernel(bc, out_schema), out_schema), bc
+        candidates = needed.mapInPandas(_make_kernel(bc), out_schema)
+        if pad:
+            # pad rows: the 2·k lowest doc ids at score 0 for every q_idx
+            # of the chunk (all-OOV and empty queries included); the
+            # merge lifts them to the nnoc floor the reference's dense
+            # vector assigns unmatched docs, and drops a pad row whose
+            # doc has a real candidate
+            pool = index.doc_lens.select("doc_id").orderBy("doc_id").limit(2 * k)
+            q_range = spark.range(lo, hi, numPartitions=1)
+            pad_rows = q_range.crossJoin(F.broadcast(pool)).select(
+                F.col("id").cast("int").alias("q_idx"),
+                F.col("doc_id").cast("long").alias("doc_id"),
+                F.lit(0.0).alias("score"),
+                F.lit(True).alias("is_pad"),
+            )
+            candidates = candidates.withColumn(
+                "is_pad", F.lit(False)
+            ).unionByName(pad_rows)
 
-    def _make_kernel(bc, _schema):
+        def merge_partition(batches):
+            frames = [pdf for pdf in batches if len(pdf)]
+            if frames:
+                k_l, round_l, lo_l, ids_l, nnoc_l = bc.value[1]
+                yield _merge_topk(pd.concat(frames, ignore_index=True),
+                                  k_l, round_l, lo_l, ids_l, nnoc_l)
+
+        # ≤ shards×k candidates (+ 2·k pad rows) per query — tiny
+        merged = candidates.repartition("q_idx").mapInPandas(
+            merge_partition, final_schema
+        )
+        return merged, bc
+
+    def _make_kernel(bc):
         def score_partition(batches):
             (per_term_l, scalars_l, dps, k_l,
              (method_l, avgdl_l, k1_l, b_l, delta_l),
-             prune_l, has_mask_l, round_l) = bc.value
+             prune_l, has_mask_l, round_l, pool_l) = bc.value[0]
             # per-query term lists within the current shard
             cur_shard = None
             cur_rows: list[tuple] = []
@@ -674,6 +787,10 @@ def retrieve_sharded(
                         part = np.argpartition(sc, -kk)[-kk:]
                     else:
                         part = np.arange(sc.shape[0])
+                    if pool_l:
+                        part = np.union1d(
+                            part, np.arange(min(pool_l, sc.shape[0]))
+                        )
                     rows_q.append(np.full(part.shape[0], q_i, dtype=np.int32))
                     rows_d.append(base + idx[part].astype(np.int64))
                     rows_s.append(sc[part].astype(np.float64))
@@ -720,196 +837,55 @@ def retrieve_sharded(
 
         return score_partition
 
-    # query ids keep their native type (string, int, …): schema is built
-    # from the queries_df column type, never forced to string
-    qid_schema = StructType([
-        StructField("q_idx", IntegerType(), False),
-        StructField("query_id", qid_type, False),
-    ])
-    qid_df = local_relation(
-        spark, [(i, q) for i, q in enumerate(query_ids)], qid_schema
-    )
-
-    # per-query nnoc sums (reference/bm25s/__init__.py:614-618) are
-    # accumulated driver-side chunk by chunk — no second
-    # query-tokenization job, and no join at all for methods without a
-    # nonoccurrence term (robertson/lucene/atire)
-    nnoc_sums: dict = {}
-
-    def accum_nnoc(pdf: pd.DataFrame) -> None:
-        if method not in METHODS_REQUIRING_NNOC:
-            return
-        if "_nnoc" in pdf.columns:
-            # compat import: use the file's stored per-term nnoc verbatim
-            for qid, mult, nv in zip(
-                pdf["query_id"].values, pdf["mult"].values, pdf["_nnoc"].values
-            ):
-                v = float(nv) if pd.notna(nv) else 0.0
-                nnoc_sums[qid] = nnoc_sums.get(qid, 0.0) + float(mult) * v
-            return
-        for qid, mult, dfv in zip(
-            pdf["query_id"].values, pdf["mult"].values, pdf["df"].values
-        ):
-            dfv = float(dfv)
-            v = (
-                scoring.nnoc_value(
-                    method, idf_method, dfv, index.num_docs,
-                    index.avg_doc_len, index.k1, index.b, index.delta,
-                    allow_negative,
-                )
-                if dfv > 0 else 0.0
-            )
-            nnoc_sums[qid] = nnoc_sums.get(qid, 0.0) + float(mult) * v
-
-    # chunk the query batch: each chunk is one bounded metadata pull +
-    # one bounded broadcast + one kernel pass, materialized before the
-    # next chunk starts so per-chunk broadcasts can be destroyed eagerly
     if bounded:
-        accum_nnoc(qpdf)
         # single chunk: fully lazy (one job); the broadcast lives as
         # long as the returned plan does
-        candidates, _bc = run_chunk(qpdf)
-    else:
-        n_chunks = (len(query_ids) + query_chunk_size - 1) // query_chunk_size
-        chunked = qstats.join(F.broadcast(qid_df), "query_id").withColumn(
-            "_chunk", (F.col("q_idx") / query_chunk_size).cast("int")
-        )
+        return run_chunk(qpdf, 0, len(query_ids))[0]
 
-        def process_chunk(ci: int):
-            # pull ONLY this chunk's (query_id, term, mult, df) rows —
-            # driver metadata peak is O(in-flight chunks), not O(batch)
-            cpdf = (
-                chunked.where(F.col("_chunk") == ci)
-                .select("query_id", "term", "mult", "df",
-                        *(["_nnoc"] if compat_nnoc else []))
-                .toPandas()
-            )
-            part, bc = run_chunk(cpdf)
-            # materialize this chunk's candidates (≤ shards×k rows per
-            # query — tiny) so its broadcast can be destroyed NOW; a
-            # lazy union would keep every chunk's broadcast referenced
-            # until the final action, accumulating ~the full batch in
-            # the driver/block manager for 10^6-query jobs.  With a
-            # checkpoint dir configured (cluster deployments), use the
-            # RELIABLE checkpoint: localCheckpoint blocks die with their
-            # executor and the destroyed broadcast leaves no recompute
-            # path, so an executor loss mid-batch would fail the job
-            from bm25s_spark.util import eager_checkpoint
+    # chunk the query batch: each chunk is one bounded metadata pull +
+    # one bounded broadcast + one kernel pass + its own final merge,
+    # materialized before the broadcast is destroyed.  Chunks split the
+    # sorted query ids, so the batch's result is the union of theirs
+    from bm25s_spark.util import eager_checkpoint
 
-            part = eager_checkpoint(part)
-            bc.destroy()
-            # reduce the chunk's metadata to its per-query nnoc partial
-            # HERE so the full (query_id, term, mult, df) frame dies with
-            # this call — returning it would re-accumulate O(batch) rows
-            # on the driver across the pool results.  Chunks partition
-            # the query ids, so concurrent accum_nnoc calls write
-            # disjoint keys (single atomic dict stores under the GIL)
-            accum_nnoc(cpdf)
-            return part
+    def process_chunk(lo: int):
+        hi = min(lo + query_chunk_size, len(query_ids))
+        # pull ONLY this chunk's (query_id, term, mult, df) rows — driver
+        # metadata peak is O(in-flight chunks), not O(batch).  query_ids
+        # come from Spark's orderBy, so Spark's comparison selects
+        # exactly the slice's ids
+        cpdf = qstats.where(
+            F.col("query_id").between(query_ids[lo], query_ids[hi - 1])
+        ).toPandas()
+        part, bc = run_chunk(cpdf, lo, hi)
+        # materialize this chunk's top-k (n_chunk × k rows) so its
+        # broadcast can be destroyed NOW; a lazy union would keep every
+        # chunk's broadcast referenced until the final action,
+        # accumulating ~the full batch in the driver/block manager for
+        # 10^6-query jobs.  With a checkpoint dir configured (cluster
+        # deployments), use the RELIABLE checkpoint: localCheckpoint
+        # blocks die with their executor and the destroyed broadcast
+        # leaves no recompute path, so an executor loss mid-batch would
+        # fail the job
+        part = eager_checkpoint(part)
+        bc.destroy()
+        return part
 
-        # a 2-deep thread pool overlaps consecutive chunks (Spark
-        # schedules jobs from separate threads concurrently), recovering
-        # the stage pipelining a strictly sequential materialize-barrier
-        # loop gives up, while broadcast + metadata memory stays bounded
-        # by the in-flight window instead of the whole batch
-        from concurrent.futures import ThreadPoolExecutor
+    # a 2-deep thread pool overlaps consecutive chunks (Spark schedules
+    # jobs from separate threads concurrently), recovering the stage
+    # pipelining a strictly sequential materialize-barrier loop gives
+    # up, while broadcast + metadata memory stays bounded by the
+    # in-flight window instead of the whole batch
+    from concurrent.futures import ThreadPoolExecutor
 
-        with ThreadPoolExecutor(max_workers=2) as pool:
-            parts = list(pool.map(process_chunk, range(n_chunks)))
-        candidates = parts[0]
-        for part in parts[1:]:
-            candidates = candidates.unionByName(part)
-        qstats.unpersist()
-        if mask_rows_df is not None:
-            mask_rows_df.unpersist()
-
-    if pad:
-        # pad folded INTO the final merge: union the 2·k-lowest-doc pool
-        # (score 0 — the nnoc add below lifts pads to the same nnoc-floor
-        # value the reference's dense vector assigns unmatched docs)
-        # against every query id before the merge, so one top-k cut
-        # serves real and pad rows alike.  Matched pool docs keep their
-        # real score — the merge drops their pad twin.
-        pool = index.doc_lens.select("doc_id").orderBy("doc_id").limit(2 * k)
-        pad_rows = (
-            F.broadcast(qid_df.select("q_idx")).crossJoin(pool)
-            .select(
-                "q_idx", F.col("doc_id").cast("long").alias("doc_id"),
-                F.lit(0.0).alias("score"),
-                F.lit(True).alias("is_pad"),
-            )
-        )
-        candidates = candidates.withColumn(
-            "is_pad", F.lit(False)
-        ).unionByName(pad_rows)
-
-    # final exact merge: ≤ shards×k candidates per query — tiny
-    merged = candidates.join(F.broadcast(qid_df), "q_idx").drop("q_idx")
-
-    if method in METHODS_REQUIRING_NNOC:
-        if nnoc_sums:
-            nnoc_schema = StructType([
-                StructField("query_id", qid_type, False),
-                StructField("nnoc_sum", DoubleType(), False),
-            ])
-            nnoc = local_relation(
-                spark,
-                [
-                    (q.item() if hasattr(q, "item") else q, s)
-                    for q, s in nnoc_sums.items()
-                ],
-                nnoc_schema,
-            )
-            merged = (
-                merged.join(F.broadcast(nnoc), "query_id", "left")
-                .withColumn(
-                    "score",
-                    F.col("score") + F.coalesce(F.col("nnoc_sum"), F.lit(0.0)),
-                )
-                .drop("nnoc_sum")
-            )
-
-    final_schema = StructType([
-        StructField("query_id", qid_type, False),
-        StructField("rank", IntegerType(), False),
-        StructField("doc_id", LongType(), False),
-        StructField("score", DoubleType(), False),
-    ])
-
-    def final_topk(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
-        # the reference's numpy top-k routine on the candidate set for tie
-        # parity (reference/bm25s/selection.py:14-37): argpartition then
-        # descending argsort of the k-partition
-        if "is_pad" in pdf.columns:
-            # pad rows: a doc with a real (kernel) candidate row keeps
-            # that row only — its pad twin is dropped here
-            isp = pdf["is_pad"].to_numpy()
-            if isp.any():
-                real_docs = pdf["doc_id"].to_numpy()[~isp]
-                drop = isp & pdf["doc_id"].isin(real_docs).to_numpy()
-                if drop.any():
-                    pdf = pdf[~drop]
-        sc = pdf["score"].to_numpy()
-        kk = min(k, sc.shape[0])
-        if round_to is not None:
-            # gate mode: candidate row order after the shuffle is
-            # arbitrary, so a rounded tie group spanning the k boundary
-            # needs the oracle's full (score desc, doc_id asc) order —
-            # lexsort mirrors the per-shard stable selection
-            rs = np.round(sc, round_to)
-            order = np.lexsort((pdf["doc_id"].to_numpy(), -rs))[:kk]
-        else:
-            # deterministic (score desc, doc_id asc) — the documented
-            # tie contract; argpartition + stable argsort would break
-            # cross-shard ties by shuffle arrival order, and a full
-            # lexsort over the ≤ shards×k candidate sliver is just as
-            # cheap
-            order = np.lexsort((pdf["doc_id"].to_numpy(), -sc))[:kk]
-        return pd.DataFrame({
-            "query_id": np.full(kk, key[0]),
-            "rank": np.arange(1, kk + 1, dtype=np.int32),
-            "doc_id": pdf["doc_id"].to_numpy()[order],
-            "score": sc[order],
-        })
-
-    return merged.groupBy("query_id").applyInPandas(final_topk, final_schema)
+    with ThreadPoolExecutor(max_workers=2) as pool:
+        parts = list(pool.map(
+            process_chunk, range(0, len(query_ids), query_chunk_size)
+        ))
+    qstats.unpersist()
+    if mask_rows_df is not None:
+        mask_rows_df.unpersist()
+    result = parts[0]
+    for part in parts[1:]:
+        result = result.unionByName(part)
+    return result

@@ -52,7 +52,7 @@ def main():
         _formatted(idx.retrieve(qdf, k=5, pad=False)),
     ))
     sections.append((
-        "top-k retrieval, sharded strategy (semi-join prune → mapInPandas kernel → final merge)",
+        "top-k retrieval, sharded strategy (semi-join prune → mapInPandas kernel → mapInPandas final merge)",
         _formatted(idx.retrieve(qdf, k=5, strategy="sharded", pad=False)),
     ))
 

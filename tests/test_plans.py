@@ -64,8 +64,8 @@ def test_parquet_filter_pushdown(spark):
 def test_sharded_kernel_prunes_terms_before_scan(spark, idx):
     """The sharded path must semi-join the postings on the query terms
     BEFORE the Python kernel (only shards×terms touched by the batch are
-    scanned), and the final candidate merge must broadcast the tiny
-    q_idx→query_id map."""
+    scanned), and the final candidate merge must be one vectorized
+    ``mapInPandas`` pass, not a per-query grouped map."""
     from bm25s_spark.shards import ensure_sharded, retrieve_sharded
 
     idx.docs_per_shard = 256
@@ -75,8 +75,11 @@ def test_sharded_kernel_prunes_terms_before_scan(spark, idx):
     )
     plan = _plan(retrieve_sharded(idx, qdf, k=5, pad=False))
     assert "LeftSemi" in plan, "term pruning semi-join missing"
-    assert "MapInPandas" in plan          # the scatter-add kernel
-    assert "FlatMapGroupsInPandas" in plan  # the final exact merge
+    # the final exact merge is a MapInPandas over the q_idx exchange of
+    # the scatter-add kernel's MapInPandas
+    assert re.search(r"MapInPandas \(\d+\)\n\s*\+- Exchange \(\d+\)\n"
+                     r"\s*\+- MapInPandas \(\d+\)", plan), plan
+    assert "FlatMapGroupsInPandas" not in plan
     assert "BroadcastHashJoin" in plan
     assert "SortMergeJoin" not in plan
 

@@ -69,14 +69,13 @@ def test_sharded_equals_join_each_method(spark, pad_index, method,
                                          allow_negative):
     """Every method's matched combination through the kernel's one
     scoring expression (impacts computed from the layout's tf/dl) equals
-    the join strategy over the flat table's stored impacts.  Negative
-    scores run unpadded: the join strategy pads only queries with fewer
-    than k matches, while the sharded pad pool's 0-score rows outrank
-    negative matches (as in the reference's dense score vector)."""
-    _assert_sharded_equals_join(spark, pad_index, method=method,
-                                idf_method=method,
-                                allow_negative=allow_negative,
-                                pad=not allow_negative)
+    the join strategy's.  Negative scores run padded and unpadded: on
+    both strategies a pad row is always an unmatched doc, and a matched
+    pool doc keeps its true (negative) score."""
+    for pad in ((False, True) if allow_negative else (True,)):
+        _assert_sharded_equals_join(spark, pad_index, method=method,
+                                    idf_method=method,
+                                    allow_negative=allow_negative, pad=pad)
 
 
 def test_determinism_across_partitions(spark):
@@ -95,19 +94,32 @@ def test_determinism_across_partitions(spark):
 
 def test_chunked_query_batches(spark):
     """A query batch streamed through the kernel in chunks must equal the
-    single-broadcast run (chunking only bounds driver/broadcast memory)."""
+    single-broadcast run (chunking only bounds driver/broadcast memory):
+    per-chunk nnoc sums (bm25l) and a native ``long`` query id (mapped
+    back from q_idx in each chunk's merge) included."""
     tdf = transcripts_df(spark, "t2").persist()
     texts = [r["text"] for r in tdf.orderBy("conv_id", "turn_idx").select("text").collect()]
     queries = queries_for(texts, 50, seed=13)
     engine = SparkBM25()
     idx = engine.index(tdf)
     idx.docs_per_shard = 512
-    qdf = spark.createDataFrame(queries, "query_id string, text string")
-    one = _normalize(_rows(engine.retrieve(qdf, k=5, strategy="sharded")))
-    chunked = _normalize(_rows(engine.retrieve(
-        qdf, k=5, strategy="sharded", query_chunk_size=7
-    )))
-    assert one == chunked
+    by_str = spark.createDataFrame(queries, "query_id string, text string")
+    # descending ids: q_idx order is the reverse of the row order
+    by_long = spark.createDataFrame(
+        [(10_000 - i, text) for i, (_, text) in enumerate(queries)],
+        "query_id long, text string",
+    )
+    for method in ("lucene", "bm25l"):
+        for qdf, id_type in ((by_str, str), (by_long, int)):
+            one = _rows(engine.retrieve(qdf, k=5, method=method,
+                                        strategy="sharded"))
+            chunked = _rows(engine.retrieve(
+                qdf, k=5, method=method, strategy="sharded",
+                query_chunk_size=7,
+            ))
+            assert _normalize(one) == _normalize(chunked), method
+            assert len(one) == len(queries) * 5
+            assert {type(r["query_id"]) for r in chunked} == {id_type}
 
 
 def test_chunked_all_oov_batch(spark):
@@ -435,15 +447,24 @@ def _cached_rdds(spark) -> set:
 
 
 def test_padded_chunked_retrieve_caches_nothing(spark, pad_index):
-    """A padded, chunked sharded retrieve leaves no DataFrame cache
-    behind once its result is consumed."""
+    """A padded sharded retrieve leaves no DataFrame cache behind once
+    its result is consumed: chunked or bounded, with or without a doc
+    weight mask."""
     from bm25s_spark.retrieval import retrieve
     from bm25s_spark.shards import ensure_sharded
 
     ensure_sharded(pad_index).count()
     qdf = _padded_batch(spark, pad_index, 5)
-    before = _cached_rdds(spark)
-    rows = retrieve(pad_index, qdf, k=5, strategy="sharded", pad=True,
-                    query_chunk_size=3).collect()
-    assert len(rows) == qdf.count() * 5
-    assert _cached_rdds(spark) - before == set()
+    n_rows = qdf.count() * 5
+    mask = spark.createDataFrame(
+        [(d, 0.5) for d in range(0, pad_index.num_docs, 3)],
+        "doc_id long, weight double",
+    )
+    for chunk_size, mask_df in ((3, None), (16384, None), (3, mask),
+                                (16384, mask)):
+        before = _cached_rdds(spark)
+        rows = retrieve(pad_index, qdf, k=5, strategy="sharded", pad=True,
+                        weight_mask_df=mask_df,
+                        query_chunk_size=chunk_size).collect()
+        assert len(rows) == n_rows
+        assert _cached_rdds(spark) - before == set(), (chunk_size, mask_df)
