@@ -24,6 +24,8 @@ from bm25s_spark.compat import (
 from bm25s_spark.indexer import build_index
 from bm25s_spark.retrieval import retrieve, score_all
 
+from tests.conftest import import_ref_bm25s
+
 # doc lengths (after stopword filtering) are all DISTINCT so that no
 # two docs can ever score identically on a shared term — boundary ties
 # would make top-k doc identity arbitrary in both engines
@@ -161,7 +163,7 @@ def test_mmindex_matches_reference_builder(built_index, ref_bm25s, tmp_path):
             assert json.loads(f.readline())["id"] == i
 
 
-def test_csc_invariants_and_params_keys(built_index, ref_bm25s, tmp_path):
+def test_csc_invariants_and_params_keys(built_index, tmp_path):
     """CSC structure: indptr is the df cumsum, indices ascend within
     each term; params.index.json round-trips through the reference
     constructor (exactly the keys its load() feeds to BM25S(**params))."""
@@ -179,10 +181,11 @@ def test_csc_invariants_and_params_keys(built_index, ref_bm25s, tmp_path):
         seg = ind[iptr[j]:iptr[j + 1]]
         assert np.all(np.diff(seg) > 0)
     assert os.path.exists(os.path.join(d, NNOC_NAME))  # bm25+ stores nnoc
-    sig = set(inspect.signature(ref_bm25s.BM25.__init__).parameters) - {"self"}
-    assert set(params) - {"version", "num_docs"} <= sig
     stored = json.load(open(os.path.join(d, PARAMS_NAME)))
     assert stored == params
+    ref_bm25s = import_ref_bm25s()
+    sig = set(inspect.signature(ref_bm25s.BM25.__init__).parameters) - {"self"}
+    assert set(params) - {"version", "num_docs"} <= sig
 
 
 def test_imported_index_is_method_pinned(spark, built_index, tmp_path):

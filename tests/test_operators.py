@@ -583,12 +583,12 @@ def test_multimodal_plumbing(spark):
         multimodal.extract_features(media, decoder="librosa").collect()
 
 
-def test_incremental_indexer(spark, tmp_path, ref_bm25s):
+def test_incremental_indexer(spark, tmp_path):
     """Two micro-batches ingested incrementally == one batch build, and
     matches the reference oracle on the full corpus."""
     from bm25s_spark.streaming.incremental import IncrementalIndexer
     from bm25s_spark.transcripts import ANIMAL_CORPUS
-    from tests.conftest import assert_rank_identical, ref_topk
+    from tests.conftest import assert_rank_identical, import_ref_bm25s, ref_topk
 
     rows = [(f"conv-{i:06d}", 0, "user", t, "", None) for i, t in enumerate(ANIMAL_CORPUS)]
     schema = "conv_id string, turn_idx int, role string, text string, tool string, ts timestamp"
@@ -602,6 +602,7 @@ def test_incremental_indexer(spark, tmp_path, ref_bm25s):
         "query_id string, text string",
     )
     ours = [r.asDict() for r in idx.retrieve(qdf, k=2).collect()]
+    ref_bm25s = import_ref_bm25s()
     docs_r, scores_r = ref_topk(ref_bm25s, ANIMAL_CORPUS, [qdf.collect()[0]["text"]], 2)
     assert_rank_identical(ours, docs_r, scores_r)
 

@@ -10,7 +10,7 @@ import pytest
 from bm25s_spark.indexer import SparkBM25, build_index
 from bm25s_spark.transcripts import ANIMAL_CORPUS, queries_for, transcripts_df
 
-from tests.conftest import assert_rank_identical, ref_topk
+from tests.conftest import assert_rank_identical, import_ref_bm25s, ref_topk
 
 METHODS = ["robertson", "lucene", "atire", "bm25l", "bm25+"]
 
@@ -49,7 +49,7 @@ def test_animal_corpus_all_methods(spark, ref_bm25s, method):
     assert_rank_identical(ours, docs, scores)
 
 
-def test_animal_golden_expectations(spark, ref_bm25s):
+def test_animal_golden_expectations(spark):
     """The reference's own golden doc-id expectations
     (reference/tests/core/test_retrieve.py:39-50): top-2 for the feline
     query is [cat, bird] = docs [0, 2]."""
@@ -60,7 +60,7 @@ def test_animal_golden_expectations(spark, ref_bm25s):
     assert got == [0, 2], got
 
 
-def test_weight_mask_golden(spark, ref_bm25s):
+def test_weight_mask_golden(spark):
     """Weight-mask golden (reference/tests/core/test_retrieve.py:98-114):
     'cat feline dog bird fish' with mask [1,0,0,1] → docs [0, 3]."""
     tdf = transcripts_df(spark, "t1")
@@ -69,6 +69,7 @@ def test_weight_mask_golden(spark, ref_bm25s):
     ours = _run_ours(spark, tdf, queries, 2, "lucene", weight_mask=mask)
     got = sorted(r["doc_id"] for r in ours)
     assert got == [0, 3], got
+    ref_bm25s = import_ref_bm25s()
     docs, scores = ref_topk(
         ref_bm25s, ANIMAL_CORPUS, [queries[0][1]], 2, "lucene", weight_mask=mask
     )
@@ -103,7 +104,7 @@ def test_cross_idf_combos(spark, ref_bm25s, method, idf_method):
     assert_rank_identical(ours, docs, scores)
 
 
-def test_k_edge_cases(spark, ref_bm25s):
+def test_k_edge_cases(spark):
     tdf = transcripts_df(spark, "t1")
     queries = [("q-0000", "cat")]
     # k == num_docs works
@@ -114,7 +115,7 @@ def test_k_edge_cases(spark, ref_bm25s):
         _run_ours(spark, tdf, queries, 5, "lucene")
 
 
-def test_empty_and_oov_queries(spark, ref_bm25s):
+def test_empty_and_oov_queries(spark):
     tdf = transcripts_df(spark, "t1")
     queries = [
         ("q-0000", ""),                 # empty
@@ -130,7 +131,7 @@ def test_empty_and_oov_queries(spark, ref_bm25s):
         assert all(abs(r["score"]) < 1e-12 for r in rows), (qid, rows)
 
 
-def test_require_all_terms_boolean_and(spark, ref_bm25s):
+def test_require_all_terms_boolean_and(spark):
     """require_all_terms=True: boolean-AND doc filtering with unchanged
     BM25 scores on the qualifying set; OOV / all-stopword queries match
     nothing; sharded strategy rejects the flag."""

@@ -152,7 +152,7 @@ def test_retrieval_parity_stemmed(spark, ref_bm25s, method):
     assert_rank_identical(ours, docs, scores)
 
 
-def test_sharded_retrieval_stemmed(spark, ref_bm25s):
+def test_sharded_retrieval_stemmed(spark):
     """The sharded kernel with a stemmed index agrees with the join
     strategy (stemming changes the vocab, not the kernel contract)."""
     from bm25s_spark.indexer import SparkBM25

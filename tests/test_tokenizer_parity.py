@@ -157,7 +157,7 @@ def test_multilang_stopword_parity(lang, spark, ref_bm25s):
     assert ours == ref, lang
 
 
-def test_full_language_alias_names(spark, ref_bm25s):
+def test_full_language_alias_names(spark):
     from bm25s_spark.tokenization import resolve_stopwords
 
     for alias, code in [
