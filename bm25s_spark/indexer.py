@@ -109,6 +109,11 @@ class BM25Index:
     # {"method", "idf_method"} of a reference-format import
     # (compat.import_bm25s): scoring is pinned to that stored combination
     compat_import: dict | None = None
+    # driver-side query metadata (shards.py: the term dictionary and the
+    # pad pool), each entry keyed on the identity of the table it was
+    # read from; a ``dataclasses.replace`` view starts empty
+    driver_cache: dict = field(default_factory=dict, init=False,
+                               repr=False, compare=False)
 
     def persist(self) -> "BM25Index":
         self.postings = self.postings.persist()
@@ -123,6 +128,7 @@ class BM25Index:
                 df.unpersist()
             except Exception:
                 pass
+        self.driver_cache.clear()
 
     # ---- query API (delegates) -------------------------------------
     def retrieve(self, queries_df: DataFrame, k: int = 10, **kw) -> DataFrame:

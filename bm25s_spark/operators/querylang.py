@@ -252,8 +252,14 @@ _ExpandClause = namedtuple(
 )
 
 
+# query rows the clause probe collects; a larger batch collects only its
+# clause rows, through the standalone parse_* functions
+CLAUSE_PROBE_MAX = 16384
+
+
 def _probe_clauses(unquoted: DataFrame, with_terms: bool = False):
-    """All driver-side clause probes in ONE Spark job.
+    """All driver-side clause probes in ONE Spark job, or None when the
+    batch has more than ``CLAUSE_PROBE_MAX`` queries.
 
     ``with_terms=True`` additionally extracts the term-operator tokens
     (word/must/neg/boost — the ``parse_query_terms`` pre-tokenizer
@@ -351,23 +357,14 @@ def _probe_clauses(unquoted: DataFrame, with_terms: bool = False):
                 tok,
             ).alias("_toks")
         )
-    rows = base.select(*sel).collect()
-    ranges = sorted(
-        {
-            _RangeClause(r["_qid"], s["field"], s["lo"], s["hi"], s["neg"])
-            for r in rows
-            for s in r["_ranges"]
-        },
-        # open bounds ('*') are None: a plain tuple sort would compare
-        # None against str when two clauses tie on (query_id, field)
-        key=lambda c: (c.query_id, c.field, c.lo or "", c.hi or "", c.neg),
-    )
-    filters = sorted(
-        {
-            _FilterClause(r["_qid"], s["field"], s["value"], s["neg"])
-            for r in rows
-            for s in r["_filters"]
-        }
+    rows = base.select(*sel).limit(CLAUSE_PROBE_MAX + 1).collect()
+    if len(rows) > CLAUSE_PROBE_MAX:
+        return None
+    ranges, filters = _sorted_clauses(
+        (_RangeClause(r["_qid"], s["field"], s["lo"], s["hi"], s["neg"])
+         for r in rows for s in r["_ranges"]),
+        (_FilterClause(r["_qid"], s["field"], s["value"], s["neg"])
+         for r in rows for s in r["_filters"]),
     )
     exps = [  # multiset: a repeated clause adds its weight again
         _ExpandClause(
@@ -386,6 +383,35 @@ def _probe_clauses(unquoted: DataFrame, with_terms: bool = False):
         ]
         return ranges, filters, exps, has_phrases, term_toks
     return ranges, filters, exps, has_phrases
+
+
+def _sorted_clauses(ranges, filters):
+    """Deduplicated, sorted range and filter clauses."""
+    return (
+        sorted(
+            set(ranges),
+            # open bounds ('*') are None: a plain tuple sort would compare
+            # None against str when two clauses tie on (query_id, field)
+            key=lambda c: (c.query_id, c.field, c.lo or "", c.hi or "",
+                           c.neg),
+        ),
+        sorted(set(filters)),
+    )
+
+
+def _collect_clauses(unquoted: DataFrame, phrases: DataFrame):
+    """``_probe_clauses``' answer for a batch above its cap: each clause
+    family from its standalone distributed parse over the same
+    quote-stripped text, collecting only clause rows."""
+    ranges, filters = _sorted_clauses(
+        (_RangeClause(*r)
+         for r in parse_range_filters(unquoted, "_qid", "_t").collect()),
+        (_FilterClause(*r)
+         for r in parse_filters(unquoted, "_qid", "_t").collect()),
+    )
+    exps = [_ExpandClause(*r)
+            for r in parse_expansions(unquoted, "_qid", "_t").collect()]
+    return ranges, filters, exps, bool(phrases.take(1))
 
 
 def parse_phrases(
@@ -487,12 +513,17 @@ def retrieve_parsed(
     from bm25s_spark.tokenization import make_local_tokenizer
 
     local_tok = make_local_tokenizer(**index.tokenizer_kwargs)
-    if local_tok is not None:
-        ranges, filters, exps, has_phrases, term_toks = _probe_clauses(
-            unquoted, with_terms=True
+    probed = _probe_clauses(unquoted, with_terms=local_tok is not None)
+    if probed is None:
+        # above the probe cap the term bag stays distributed too
+        local_tok = None
+        ranges, filters, exps, has_phrases = _collect_clauses(
+            unquoted, phrases
         )
+    elif local_tok is not None:
+        ranges, filters, exps, has_phrases, term_toks = probed
     else:
-        ranges, filters, exps, has_phrases = _probe_clauses(unquoted)
+        ranges, filters, exps, has_phrases = probed
     unquoted = unquoted.select(
         "_qid", F.regexp_replace("_t", _RANGE_RE_PY, " ").alias("_t")
     )

@@ -11,11 +11,17 @@ Two physical strategies over the same semantics:
 
 2. ``strategy="sharded"`` — the scalable scatter-gather kernel (see
    ``shards.py``): doc-sharded postings scored per shard with a NumPy
-   scatter-add + local top-k inside ``mapInPandas`` (the distributed twin
-   of the reference's ``np.add.at`` kernel,
-   ``reference/bm25s/__init__.py:272-324``), then a final merge of the
-   ``shards × k`` candidates per query: one vectorized NumPy top-k pass
-   per partition, all queries at once, in a second ``mapInPandas``.
+   scatter-add + local top-k (the distributed twin of the reference's
+   ``np.add.at`` kernel, ``reference/bm25s/__init__.py:272-324``), then a
+   final merge of the ``shards × k`` candidates per query: one
+   vectorized NumPy top-k pass, all queries at once.  A batch of at most
+   ``query_chunk_size`` queries executes inside the call and comes back
+   as a local relation: its query metadata comes from a driver-side
+   term dictionary, its kernel runs in the driver process when its
+   scatter-add work is small (in one ``mapInPandas`` stage otherwise),
+   and its merge runs on the driver.  A larger batch streams through
+   the ``mapInPandas`` kernel in chunks, each merged in a second
+   ``mapInPandas``.
 
 Reference semantics reproduced exactly:
 - duplicate query terms score multiple times (``get_tokens_ids`` keeps

@@ -23,11 +23,14 @@ Doc-sharding also *structurally* bounds term skew: the per-group
 reducer.  (The term-ordered save layout still uses an explicit salted
 two-phase merge — see ``index_io.py``.)
 
-**Query kernel.** Queries are tokenized, joined to ``term_stats``
-(OOV drop), collected into one small broadcast payload
-``{term -> [(query_idx, mult)]}`` plus ``{term -> (idf, nnoc)}``, then a
-single ``mapInPandas`` pass over the sharded postings scores every query
-against every shard.  Each loaded posting list is scored once as
+**Query kernel.** Queries are tokenized, looked up in the term
+dictionary (OOV drop) and turned into one small payload
+``{term -> [(query_idx, mult)]}`` plus ``{term -> (idf, nnoc)}``; one
+kernel pass over the sharded postings of those terms then scores every
+query against every shard.  It runs in a ``mapInPandas`` stage, or, for
+a bounded batch with little scatter-add work, in the driver process
+over the pulled layout rows (``IN_PROCESS_WORK_MAX``).  Each loaded
+posting list is scored once as
 ``idf·tfc(tf, dl) − nnoc`` (``scoring.tfc_numpy``, the NumPy twin of the
 build's impact expressions) — one expression for every
 ``method × idf_method`` combination, float64 with ``exact=True`` and
@@ -37,13 +40,14 @@ elements — the *same* kernel as the reference's
 ``_compute_relevance_from_scores`` (``reference/bm25s/__init__.py:272-324``,
 ``np.add.at`` at ``:318``) but over a bounded doc range — followed by a
 local ``argpartition`` top-k (``reference/bm25s/selection.py:14-37``).
-Each shard emits ≤k candidates per query, so the only shuffle after the
-postings scan is ``n_queries × k × n_shards`` rows, hashed on the query
-index.  The final exact top-k merge is one vectorized NumPy pass over
-each partition of those candidates (``_merge_topk``): it adds every
+Each shard emits ≤k candidates per query, so the kernel's output is
+``n_queries × k × n_shards`` rows.  The final exact top-k merge is one
+vectorized NumPy pass over candidates (``_merge_topk``): it adds every
 query's nnoc sum, sorts all queries at once by (query, score desc,
 doc_id asc) with one ``lexsort``, cuts k rows per query and maps the
-query index back to its id.
+query index back to its id.  A bounded batch merges on the driver; a
+chunked batch hashes each chunk's candidates on the query index and
+merges every partition.
 """
 
 from __future__ import annotations
@@ -59,7 +63,7 @@ from pyspark.sql.types import (
 
 from bm25s_spark import scoring
 from bm25s_spark.compat import NNOC_COLS
-from bm25s_spark.indexer import BM25Index
+from bm25s_spark.indexer import VOCAB_LOCALIZE_MAX, BM25Index
 from bm25s_spark.scoring import METHODS_REQUIRING_NNOC
 from bm25s_spark.retrieval import count_query_terms, tokenize_queries
 from bm25s_spark.tokenization import make_local_tokenizer
@@ -77,6 +81,15 @@ SHARD_SCHEMA_FIELDS = [
 ]
 # only in the layout of a reference-format import: its stored impacts
 IMPS_FIELD = StructField("imps", ArrayType(FloatType()), False)
+
+# Scatter-add work (Σ df over a bounded batch's (query, term) rows) up to
+# which the kernel runs in the driver process instead of a mapInPandas
+# stage.  A Python-worker stage costs ~0.3 s of fixed overhead; at 2^18
+# the driver pulls at most ~3 MB of layout arrays (12 B per posting) and
+# scores them in a few tens of ms on one core.  More work goes to the
+# executors, where the kernel scales with cores and the driver's
+# footprint stays bounded.
+IN_PROCESS_WORK_MAX = 1 << 18
 
 
 def build_sharded_postings(index: BM25Index, docs_per_shard: int | None = None) -> DataFrame:
@@ -310,27 +323,67 @@ def _mask_shard_rows(weight_mask_df: DataFrame, docs_per_shard: int) -> DataFram
     )
 
 
-def _local_qstats(
-    index: BM25Index,
-    probe_pdf: pd.DataFrame,
-    query_id_col: str,
-    text_col: str,
-    local_tok,
-    nnoc_cols,
-) -> pd.DataFrame:
-    """Driver-side twin of the ``tokenize_queries ⨝ term_stats`` metadata
-    pull for a ≤chunk batch already resident as ``probe_pdf``.
+def _driver_cached(index: BM25Index, key, source: DataFrame, build):
+    """``build()``, computed once per ``source`` table of ``index``.
 
-    Tokenization runs on the driver (``count_query_terms``; ``local_tok``
-    ``None`` means pre-tokenized arrays).  Only the per-term df lookup
-    touches Spark: the batch's distinct terms (bounded by chunk × query
-    length) broadcast-join into the vocab-sized ``term_stats`` — one
-    JVM-only job, no Python workers, no explode/groupBy shuffle.  Output
-    columns/dtypes match the distributed ``qstats.toPandas()`` frame:
-    (query_id, term, mult, df[, _nnoc]) with inner-join semantics (OOV
-    and null terms and empty-token queries drop here, exactly as the
-    distributed join drops them)."""
-    qt = count_query_terms(probe_pdf, query_id_col, text_col, local_tok)
+    An entry is keyed on the identity of the table it was read from, so
+    a merged index or a ``dataclasses.replace`` view with a new table
+    never reads a stale one; ``BM25Index.unpersist`` drops them all."""
+    hit = index.driver_cache.get(key)
+    if hit is None or hit[0] is not source:
+        hit = index.driver_cache[key] = (source, build())
+    return hit[1]
+
+
+def _term_dict(index: BM25Index) -> pd.DataFrame | None:
+    """The vocabulary as a driver-side frame indexed by term: ``df`` plus
+    an import's stored ``nnoc_*`` columns.  One Arrow pull per
+    ``term_stats``; None when the vocabulary has more than
+    ``VOCAB_LOCALIZE_MAX`` terms."""
+    def pull():
+        ts = index.term_stats
+        cols = ["term", "df"] + [c for c in NNOC_COLS.values()
+                                 if c in ts.columns]
+        pdf = ts.select(*cols).limit(VOCAB_LOCALIZE_MAX + 1).toPandas()
+        if len(pdf) > VOCAB_LOCALIZE_MAX:
+            return None
+        return pdf.set_index("term")
+
+    return _driver_cached(index, "term_dict", index.term_stats, pull)
+
+
+def _pad_pool(index: BM25Index, k: int) -> np.ndarray:
+    """The 2·k lowest doc ids, pulled once per (``doc_lens``, k)."""
+    return _driver_cached(
+        index, ("pad_pool", k), index.doc_lens,
+        lambda: index.doc_lens.select("doc_id").orderBy("doc_id")
+        .limit(2 * k).toPandas()["doc_id"].to_numpy(np.int64),
+    )
+
+
+def _with_term_stats(index: BM25Index, qt: pd.DataFrame,
+                     nnoc_cols: list[str]) -> pd.DataFrame:
+    """(query_id, term, mult) → (query_id, term, mult, df[, _nnoc]) with
+    inner-join semantics on term (OOV and null terms drop, as the
+    distributed ``⨝ term_stats`` drops them).  ``nnoc_cols`` names the
+    ``term_stats`` column read as ``_nnoc`` (an import's stored nnoc),
+    if any.
+
+    The lookup runs in pandas against the driver term dictionary.
+    Above its cap, the batch's distinct terms broadcast-join into
+    ``term_stats`` instead: one JVM-only job, no Python workers."""
+    out_cols = ["query_id", "term", "mult", "df"] + (
+        ["_nnoc"] if nnoc_cols else []
+    )
+    vocab = _term_dict(index)
+    if vocab is not None:
+        pos = vocab.index.get_indexer(qt["term"])
+        hit = pos >= 0
+        out = qt[hit].reset_index(drop=True)
+        out["df"] = vocab["df"].to_numpy()[pos[hit]]
+        for c in nnoc_cols:
+            out["_nnoc"] = vocab[c].to_numpy()[pos[hit]]
+        return out[out_cols]
     distinct_terms = sorted(t for t in qt["term"].unique() if t is not None)
     if distinct_terms:
         tdf = local_relation(
@@ -338,7 +391,8 @@ def _local_qstats(
         )
         stats = (
             index.term_stats.join(F.broadcast(tdf), "term")
-            .select("term", "df", *nnoc_cols)
+            .select("term", "df",
+                    *[F.col(c).alias("_nnoc") for c in nnoc_cols])
             .toPandas()
         )
     else:
@@ -346,10 +400,28 @@ def _local_qstats(
                               "df": pd.Series([], dtype="int64")})
         if nnoc_cols:
             stats["_nnoc"] = pd.Series([], dtype="float64")
-    out_cols = ["query_id", "term", "mult", "df"] + (
-        ["_nnoc"] if nnoc_cols else []
-    )
     return qt.merge(stats, on="term", how="inner")[out_cols]
+
+
+def _local_qstats(
+    index: BM25Index,
+    probe_pdf: pd.DataFrame,
+    query_id_col: str,
+    text_col: str,
+    local_tok,
+    nnoc_cols: list[str],
+) -> pd.DataFrame:
+    """Driver-side twin of the ``tokenize_queries ⨝ term_stats`` metadata
+    pull for a ≤chunk batch already resident as ``probe_pdf``.
+
+    Tokenization runs on the driver (``count_query_terms``; ``local_tok``
+    ``None`` means pre-tokenized arrays) and the df lookup in
+    ``_with_term_stats``.  Output columns/dtypes match the distributed
+    ``qstats.toPandas()`` frame: (query_id, term, mult, df[, _nnoc]) with
+    inner-join semantics (OOV and null terms and empty-token queries
+    drop here, exactly as the distributed join drops them)."""
+    qt = count_query_terms(probe_pdf, query_id_col, text_col, local_tok)
+    return _with_term_stats(index, qt, nnoc_cols)
 
 
 def retrieve_sharded(
@@ -377,13 +449,12 @@ def retrieve_sharded(
     per (query, shard, term) posting — the count MaxScore pruning
     reduces) / ``candidates_emitted``
     (query-side twins of the build's per-partition lineage counters in
-    ``checkpoint.py``).  Accumulators aggregate as tasks complete, so
-    read ``.value`` AFTER consuming the returned DataFrame (the chunked
-    path materializes eagerly, the single-chunk path on the caller's
-    action).  Unlike the build's lineage counters, these update inside a
-    transformation, where Spark does NOT deduplicate task retries or
-    speculative attempts — values are at-least-once and should be read
-    as approximate telemetry, not exact counts.
+    ``checkpoint.py``).  Every path runs its kernel inside this call, so
+    the values are final when it returns.  A kernel run in the driver
+    process adds them exactly once.  A ``mapInPandas`` kernel updates
+    them inside a transformation, where Spark does NOT deduplicate task
+    retries or speculative attempts: those values are at-least-once and
+    should be read as approximate telemetry, not exact counts.
 
     ``prune=True`` enables the TAAT MaxScore pruning inside the kernel
     (each loaded posting list's maximum impact is its upper bound;
@@ -404,38 +475,50 @@ def retrieve_sharded(
     **Probe.** Every call first pulls at most ``query_chunk_size + 1``
     query rows — ids AND text — to the driver (one Arrow job).  A batch
     that fits (≤ ``query_chunk_size`` rows) takes its query metadata
-    from those rows: the driver tokenizer twin counts terms locally and
-    one JVM-only broadcast join fetches their df; the stemmer-less
-    ``engine="sql"`` tokenizer, which has no driver twin, runs over the
-    probed rows as a local relation instead.  With very large per-query
+    from those rows: the driver tokenizer twin counts terms locally (the
+    stemmer-less ``engine="sql"`` tokenizer, which has no driver twin,
+    runs over the probed rows as a local relation instead), and each
+    term's df comes from the driver term dictionary, pulled once per
+    ``term_stats`` (``_with_term_stats``).  With very large per-query
     text (documents-as-queries) lower ``query_chunk_size`` or
-    pre-tokenize to keep the probe byte-bounded.  The returned plan of a
-    fitting batch is fully lazy (one kernel job); its broadcast lives as
-    long as the returned DataFrame.
+    pre-tokenize to keep the probe byte-bounded.
+
+    **Bounded batch.** It executes inside this call and returns a local
+    relation of its top-k.  The batch's scatter-add work, Σ df over its
+    (query, term) rows, decides where the kernel runs.  Up to
+    ``IN_PROCESS_WORK_MAX``, and without a weight mask, the layout rows
+    of the batch's terms are pulled to the driver (one JVM-only job) and
+    the kernel runs there.  Otherwise it runs in one ``mapInPandas``
+    stage over the layout and its candidates are pulled to the driver.
+    Both run the same kernel generator.  The final top-k merge then runs
+    on the driver over at most ``n_queries × k × n_shards`` candidates
+    (plus the pad rows).
 
     **Chunks.** A larger batch is streamed through the kernel in chunks
     of ``query_chunk_size`` consecutive sorted query ids: each chunk
     pulls *only its own* (query_id, term, mult, df) metadata to the
     driver (Arrow ``toPandas`` on the chunk's query-id range),
     broadcasts it with the chunk's id slice and per-query nnoc sums,
-    runs the kernel and its own final merge, materializes the merged
-    top-k (``eager_checkpoint``, n_chunk × k rows) and destroys its
-    broadcast.  Chunks split the query ids, so the batch's result is the
-    union of theirs.  Driver peak is therefore O(chunk) for the metadata
-    and broadcasts; the only O(batch) driver-side structure left is the
-    sorted query-id list (ids only — the reference holds the full query
-    set in RAM, ``reference/bm25s/__init__.py:759-803``).
+    runs the kernel and its own final merge over ``q_idx`` partitions,
+    materializes the merged top-k (``eager_checkpoint``, n_chunk × k
+    rows) and destroys its broadcast.  Chunks split the query ids, so
+    the batch's result is the union of theirs.  Driver peak is therefore
+    O(chunk) for the metadata and broadcasts; the only O(batch)
+    driver-side structure left is the sorted query-id list (ids only —
+    the reference holds the full query set in RAM,
+    ``reference/bm25s/__init__.py:759-803``).
 
     **Pad.** ``pad=True`` returns exactly k rows per query.  The 2·k
-    lowest doc ids are unioned as score-0 candidates against every
-    query index of the chunk (all-OOV and empty queries included)
-    before the final merge, which adds the query's nnoc constant and
-    drops a pad row whose doc already has a real candidate; the merge's
-    single top-k cut then serves both real and pad rows.  A pad row is
-    therefore always an unmatched doc, and every row carries its doc's
-    true score: when scores can be negative (``allow_negative``
-    robertson idf, or a weight mask), each shard also emits its 2·k
-    lowest-id touched docs, which include every matched pool doc.
+    lowest doc ids (pulled once per index, ``_pad_pool``) join the
+    candidates at score 0 for every query index (all-OOV and empty
+    queries included) before the final merge, which adds the query's
+    nnoc constant and drops a pad row whose doc already has a real
+    candidate; the merge's single top-k cut then serves both real and
+    pad rows.  A pad row is therefore always an unmatched doc, and every
+    row carries its doc's true score: when scores can be negative
+    (``allow_negative`` robertson idf, or a weight mask), each shard
+    also emits its 2·k lowest-id touched docs, which include every
+    matched pool doc.
     """
     idf_method = idf_method or method
     if k > index.num_docs:
@@ -465,26 +548,20 @@ def retrieve_sharded(
     # per-term nnoc values but no (avgdl, dl) to recompute them from —
     # ride the stored column along the metadata pull instead
     imported = index.compat_import is not None
-    compat_nnoc = imported and method in METHODS_REQUIRING_NNOC
-    _nnoc_cols = (
-        [F.col(NNOC_COLS[method]).alias("_nnoc")] if compat_nnoc else []
+    nnoc_cols = (
+        [NNOC_COLS[method]]
+        if imported and method in METHODS_REQUIRING_NNOC else []
     )
-
-    def qstats_of(qterms: DataFrame) -> DataFrame:
-        return qterms.join(
-            index.term_stats.select("term", "df", *_nnoc_cols), "term"
-        ).select("query_id", "term", "mult", "df",
-                 *(["_nnoc"] if compat_nnoc else []))
 
     # batch-size probe doubling as the metadata pull: the ≤chunk+1 query
     # rows themselves (one tiny Arrow job).  A ≤chunk batch tokenizes ON
     # THE DRIVER (milliseconds for a few thousand short strings, identical
     # output by construction: make_local_tokenizer shares the UDF's
-    # kernel closure) and only the vocab-side df lookup runs as a Spark
-    # job.  Row count over-approximates distinct ids, which can only push
-    # a duplicated-id batch onto the chunked path — correct either way.
-    # A >chunk batch discards this one bounded pull; an id-only count
-    # first would put a second Spark job on every interactive batch.
+    # kernel closure).  Row count over-approximates distinct ids, which
+    # can only push a duplicated-id batch onto the chunked path — correct
+    # either way.  A >chunk batch discards this one bounded pull; an
+    # id-only count first would put a second Spark job on every
+    # interactive batch.
     pretok = isinstance(queries_df.schema[text_col].dataType, ArrayType)
     local_tok = (
         None if pretok
@@ -516,12 +593,17 @@ def retrieve_sharded(
     if not bounded:
         # the batch is already known to exceed the chunk size — skip
         # tokenize_queries' own driver-localization probe
-        qstats = qstats_of(tokenize_queries(
+        qstats = tokenize_queries(
             index, queries_df, query_id_col, text_col, localize_max=0
-        )).persist()
+        ).join(
+            index.term_stats.select(
+                "term", "df", *[F.col(c).alias("_nnoc") for c in nnoc_cols]
+            ), "term",
+        ).select("query_id", "term", "mult", "df",
+                 *(["_nnoc"] if nnoc_cols else [])).persist()
     elif pretok or local_tok is not None:
         qpdf = _local_qstats(
-            index, probe_pdf, query_id_col, text_col, local_tok, _nnoc_cols,
+            index, probe_pdf, query_id_col, text_col, local_tok, nnoc_cols,
         )
     else:
         # stemmer-less "sql" tokenizer: no driver twin (its regex engine
@@ -530,9 +612,9 @@ def retrieve_sharded(
             spark, list(probe_pdf.itertuples(index=False, name=None)),
             queries_df.select(query_id_col, text_col).schema,
         )
-        qpdf = qstats_of(tokenize_queries(
+        qpdf = _with_term_stats(index, tokenize_queries(
             index, probed, query_id_col, text_col, localize_max=0
-        )).toPandas()
+        ).toPandas(), nnoc_cols)
     has_mask = weight_mask_df is not None
     # with negative scores (unclamped robertson idf, or mask weights)
     # a matched pool doc can fall out of its shard's top-k; the pool's
@@ -587,25 +669,28 @@ def retrieve_sharded(
         StructField("score", DoubleType(), False),
     ])
 
-    def run_chunk(chunk_pdf: pd.DataFrame, lo: int, hi: int):
-        """Final top-k of the queries ``query_ids[lo:hi]`` (whose
-        metadata rows are ``chunk_pdf``) and the broadcast it reads."""
+    def chunk_payload(chunk_pdf: pd.DataFrame, lo: int, hi: int):
+        """The queries ``query_ids[lo:hi]`` (whose metadata rows are
+        ``chunk_pdf``): their ids, nnoc sums and kernel arguments."""
         ids = pd.Series(query_ids[lo:hi]).to_numpy()
         per_term, scalars, q_nnoc = _query_payload(
             index, chunk_pdf, method, idf_method, lo, ids,
             allow_negative=allow_negative,
         )
-        bc = spark.sparkContext.broadcast((
-            (per_term, scalars, docs_per_shard, k,
-             (method, index.avg_doc_len, index.k1, index.b, index.delta),
-             prune, has_mask, round_to, pool_n),
-            (k, round_to, lo, ids, q_nnoc),
-        ))
+        kernel_args = (
+            per_term, scalars, docs_per_shard, k,
+            (method, index.avg_doc_len, index.k1, index.b, index.delta),
+            prune, has_mask, round_to, pool_n,
+        )
+        return ids, q_nnoc, kernel_args
+
+    def distributed_candidates(terms, kernel_args) -> DataFrame:
+        """The kernel as one ``mapInPandas`` stage over the layout rows of
+        ``terms`` (plus the weight mask's rows); ``kernel_args()`` reads
+        its broadcast."""
         # only shards containing query terms matter; prune with a
         # broadcast semi join on term before the scan-heavy kernel
-        terms_df = local_relation(
-            spark, [(t,) for t in per_term], "term string"
-        )
+        terms_df = local_relation(spark, [(t,) for t in terms], "term string")
         needed = base_needed.join(
             F.broadcast(terms_df), "term", "left_semi"
         ).withColumn("is_mask", F.lit(False))
@@ -618,43 +703,17 @@ def retrieve_sharded(
             needed.repartition(n_parts, "shard_id")
             .sortWithinPartitions("shard_id")
         )
-        candidates = needed.mapInPandas(_make_kernel(bc), out_schema)
-        if pad:
-            # pad rows: the 2·k lowest doc ids at score 0 for every q_idx
-            # of the chunk (all-OOV and empty queries included); the
-            # merge lifts them to the nnoc floor the reference's dense
-            # vector assigns unmatched docs, and drops a pad row whose
-            # doc has a real candidate
-            pool = index.doc_lens.select("doc_id").orderBy("doc_id").limit(2 * k)
-            q_range = spark.range(lo, hi, numPartitions=1)
-            pad_rows = q_range.crossJoin(F.broadcast(pool)).select(
-                F.col("id").cast("int").alias("q_idx"),
-                F.col("doc_id").cast("long").alias("doc_id"),
-                F.lit(0.0).alias("score"),
-                F.lit(True).alias("is_pad"),
-            )
-            candidates = candidates.withColumn(
-                "is_pad", F.lit(False)
-            ).unionByName(pad_rows)
+        return needed.mapInPandas(_make_kernel(kernel_args), out_schema)
 
-        def merge_partition(batches):
-            frames = [pdf for pdf in batches if len(pdf)]
-            if frames:
-                k_l, round_l, lo_l, ids_l, nnoc_l = bc.value[1]
-                yield _merge_topk(pd.concat(frames, ignore_index=True),
-                                  k_l, round_l, lo_l, ids_l, nnoc_l)
-
-        # ≤ shards×k candidates (+ 2·k pad rows) per query — tiny
-        merged = candidates.repartition("q_idx").mapInPandas(
-            merge_partition, final_schema
-        )
-        return merged, bc
-
-    def _make_kernel(bc):
+    def _make_kernel(kernel_args):
+        """The kernel: a generator over batches of layout rows sorted by
+        shard, yielding (q_idx, doc_id, score) candidate frames.
+        ``kernel_args()`` returns its arguments — from a broadcast in a
+        ``mapInPandas`` task, directly in the driver."""
         def score_partition(batches):
             (per_term_l, scalars_l, dps, k_l,
              (method_l, avgdl_l, k1_l, b_l, delta_l),
-             prune_l, has_mask_l, round_l, pool_l) = bc.value[0]
+             prune_l, has_mask_l, round_l, pool_l) = kernel_args()
             # per-query term lists within the current shard
             cur_shard = None
             cur_rows: list[tuple] = []
@@ -676,6 +735,9 @@ def retrieve_sharded(
                 if mask_lw is not None:
                     shard_w = np.ones(dps, dtype=np.float32)
                     shard_w[mask_lw[0]] = mask_lw[1]
+                # a fixed term order: the float sums, hence the scores,
+                # do not depend on the order the rows arrived in
+                rows.sort(key=lambda r: r[0])
                 # invert to per-query posting lists once (not per query
                 # scan); keyed by global q_idx — only queries touching
                 # this shard allocate anything
@@ -838,9 +900,84 @@ def retrieve_sharded(
         return score_partition
 
     if bounded:
-        # single chunk: fully lazy (one job); the broadcast lives as
-        # long as the returned plan does
-        return run_chunk(qpdf, 0, len(query_ids))[0]
+        n_q = len(query_ids)
+        ids, q_nnoc, kernel_args = chunk_payload(qpdf, 0, n_q)
+        terms = list(kernel_args[0])
+        frames = []
+        if has_mask or int(qpdf["df"].sum()) > IN_PROCESS_WORK_MAX:
+            bc = spark.sparkContext.broadcast(kernel_args)
+            frames.append(
+                distributed_candidates(terms, lambda: bc.value).toPandas()
+            )
+            bc.destroy()
+        elif terms:
+            # an IN filter is one JVM-only job; the semi join's broadcast
+            # costs a second
+            rows = base_needed.where(F.col("term").isin(terms)).toPandas()
+            frames.extend(_make_kernel(lambda: kernel_args)([
+                rows.sort_values("shard_id", kind="stable")
+                .assign(is_mask=False)
+            ]))
+        cands = pd.concat(frames, ignore_index=True) if frames else (
+            pd.DataFrame({"q_idx": np.zeros(0, np.int32),
+                          "doc_id": np.zeros(0, np.int64),
+                          "score": np.zeros(0, np.float64)})
+        )
+        if pad:
+            # score-0 pad rows, the pool's docs for every q_idx (all-OOV
+            # and empty queries included); the merge lifts them to the
+            # nnoc floor the reference's dense vector assigns unmatched
+            # docs, and drops a pad row whose doc has a real candidate
+            pool = _pad_pool(index, k)
+            cands = pd.concat([cands.assign(is_pad=False), pd.DataFrame({
+                "q_idx": np.repeat(np.arange(n_q, dtype=np.int32), len(pool)),
+                "doc_id": np.tile(pool, n_q),
+                "score": 0.0,
+                "is_pad": True,
+            })], ignore_index=True)
+        top = _merge_topk(cands, k, round_to, 0, ids, q_nnoc)
+        return spark.createDataFrame(top, final_schema)
+
+    pool_df = None
+    if pad:
+        pool_df = local_relation(
+            spark, [(int(d),) for d in _pad_pool(index, k)], "doc_id long"
+        )
+
+    def run_chunk(chunk_pdf: pd.DataFrame, lo: int, hi: int):
+        """Final top-k of the queries ``query_ids[lo:hi]`` (whose
+        metadata rows are ``chunk_pdf``) and the broadcast it reads."""
+        ids, q_nnoc, kernel_args = chunk_payload(chunk_pdf, lo, hi)
+        bc = spark.sparkContext.broadcast(
+            (kernel_args, (k, round_to, lo, ids, q_nnoc))
+        )
+        candidates = distributed_candidates(kernel_args[0],
+                                            lambda: bc.value[0])
+        if pad:
+            q_range = spark.range(lo, hi, numPartitions=1)
+            candidates = candidates.withColumn(
+                "is_pad", F.lit(False)
+            ).unionByName(q_range.crossJoin(F.broadcast(pool_df)).select(
+                F.col("id").cast("int").alias("q_idx"),
+                F.col("doc_id").cast("long").alias("doc_id"),
+                F.lit(0.0).alias("score"),
+                F.lit(True).alias("is_pad"),
+            ))
+
+        def merge_partition(batches):
+            frames = [pdf for pdf in batches if len(pdf)]
+            if frames:
+                k_l, round_l, lo_l, ids_l, nnoc_l = bc.value[1]
+                yield _merge_topk(pd.concat(frames, ignore_index=True),
+                                  k_l, round_l, lo_l, ids_l, nnoc_l)
+
+        # ≤ shards×k candidates (+ 2·k pad rows) per query — tiny; an
+        # explicit partition count keeps AQE from coalescing the merge
+        # into one task
+        merged = candidates.repartition(n_parts, "q_idx").mapInPandas(
+            merge_partition, final_schema
+        )
+        return merged, bc
 
     # chunk the query batch: each chunk is one bounded metadata pull +
     # one bounded broadcast + one kernel pass + its own final merge,

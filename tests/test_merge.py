@@ -158,3 +158,42 @@ def test_merge_loaded_indexes(spark, merge_setup, tmp_path):
     qdf = spark.createDataFrame(queries_for(texts, 12, seed=5),
                                 "query_id string, text string")
     assert_scores_equal(full, merged, qdf)
+
+
+def test_merge_after_query_reads_fresh_driver_caches(spark, merge_setup):
+    """Querying an index, then merging a delta that holds the lowest doc
+    ids and querying the merged index, ranks exactly like a fresh build
+    of the union: no df of the term dictionary and no pad-pool id is
+    read from the old index.  A cache entry follows the identity of its
+    source table, and ``unpersist`` drops the caches."""
+    from tests.conftest import assert_rank_identical, rows_to_arrays
+
+    docs, full, _ = merge_setup
+    base = build_index(docs.where(F.col("doc_id") >= 100), doc_id_col="doc_id")
+    delta = build_index(docs.where(F.col("doc_id") < 100), doc_id_col="doc_id")
+    texts = [r["text"] for r in docs.orderBy("doc_id").select("text").collect()]
+    qdf = spark.createDataFrame(
+        queries_for(texts, 8, seed=5) + [("q-oov", "zzqx qqzz")],
+        "query_id string, text string",
+    )
+    kw = dict(k=5, method="bm25l", strategy="sharded", round_to=4,
+              prune=False)
+    base.retrieve(qdf, **kw).collect()
+    assert base.driver_cache
+    merged = merge_indexes(base, delta)
+    merged_rows = [r.asDict() for r in merged.retrieve(qdf, **kw).collect()]
+    full_rows = [r.asDict() for r in full.retrieve(qdf, **kw).collect()]
+    assert {r["doc_id"] for r in merged_rows if r["query_id"] == "q-oov"} \
+        == set(range(5))
+    assert_rank_identical(merged_rows, *rows_to_arrays(full_rows), atol=1e-4)
+    # an entry is keyed on the table it was read from: swap the table
+    # and it is read again
+    from bm25s_spark.shards import _pad_pool
+
+    assert list(_pad_pool(base, 5)) == list(range(100, 110))
+    base.doc_lens = merged.doc_lens
+    assert list(_pad_pool(base, 5)) == list(range(10))
+    base.unpersist()
+    assert base.driver_cache == {}
+    for idx in (merged, delta):
+        idx.unpersist()

@@ -20,13 +20,11 @@ from bm25s_spark.transcripts import transcripts_df
 
 
 def _plan(df) -> str:
-    import contextlib
-    import io
-
-    buf = io.StringIO()
-    with contextlib.redirect_stdout(buf):
-        df.explain("formatted")
-    return buf.getvalue()
+    """What ``df.explain("formatted")`` prints, read without redirecting
+    stdout (safe from several threads)."""
+    return df._sc._jvm.PythonSQLUtils.explainString(
+        df._jdf.queryExecution(), "formatted"
+    )
 
 
 @pytest.fixture(scope="module")
@@ -61,27 +59,59 @@ def test_parquet_filter_pushdown(spark):
     assert rs and "text" not in rs.group(1), "projection not pruned"
 
 
-def test_sharded_kernel_prunes_terms_before_scan(spark, idx):
-    """The sharded path must semi-join the postings on the query terms
-    BEFORE the Python kernel (only shards×terms touched by the batch are
-    scanned), and the final candidate merge must be one vectorized
-    ``mapInPandas`` pass, not a per-query grouped map."""
+def test_sharded_kernel_prunes_terms_before_scan(spark, idx, monkeypatch):
+    """The sharded path must restrict the layout to the query terms
+    BEFORE the kernel (only shards×terms touched by the batch are
+    scanned): an IN filter under the in-process kernel's layout pull, a
+    broadcast semi join under the ``mapInPandas`` kernel.  A bounded
+    batch comes back as a local relation; a chunk's final candidate
+    merge must be one vectorized ``mapInPandas`` pass over an
+    explicit-count ``q_idx`` exchange, not a per-query grouped map."""
+    from bm25s_spark import shards
     from bm25s_spark.shards import ensure_sharded, retrieve_sharded
 
     idx.docs_per_shard = 256
     ensure_sharded(idx)
     qdf = spark.createDataFrame(
-        [("q0", "telemetry checkpoint")], "query_id string, text string"
+        [("q0", "telemetry checkpoint"), ("q1", "shuffle skew")],
+        "query_id string, text string",
     )
-    plan = _plan(retrieve_sharded(idx, qdf, k=5, pad=False))
-    assert "LeftSemi" in plan, "term pruning semi-join missing"
-    # the final exact merge is a MapInPandas over the q_idx exchange of
-    # the scatter-add kernel's MapInPandas
-    assert re.search(r"MapInPandas \(\d+\)\n\s*\+- Exchange \(\d+\)\n"
-                     r"\s*\+- MapInPandas \(\d+\)", plan), plan
-    assert "FlatMapGroupsInPandas" not in plan
-    assert "BroadcastHashJoin" in plan
-    assert "SortMergeJoin" not in plan
+    cls = type(qdf)
+    plans: dict = {"toPandas": [], "localCheckpoint": []}
+    for name in plans:
+        def spy(self, *args, _orig=getattr(cls, name), _name=name, **kw):
+            plans[_name].append(_plan(self))
+            return _orig(self, *args, **kw)
+
+        monkeypatch.setattr(cls, name, spy)
+
+    out = retrieve_sharded(idx, qdf, k=5, pad=False)
+    assert "LocalTableScan" in _plan(out)
+    pull = plans["toPandas"][-1]
+    assert re.search(r"Filter \(\d+\)\n\s*\+- InMemoryTableScan", pull), pull
+    assert re.search(r"term#\d+ IN \(", pull), pull
+
+    monkeypatch.setattr(shards, "IN_PROCESS_WORK_MAX", 0)
+    retrieve_sharded(idx, qdf, k=5, pad=False)
+    kernel = plans["toPandas"][-1]
+    assert re.search(r"MapInPandas \(\d+\)\n\s*\+- Sort \(\d+\)\n"
+                     r"\s*\+- Exchange \(\d+\)\n\s*\+- Project \(\d+\)\n"
+                     r"\s*\+- BroadcastHashJoin LeftSemi", kernel), \
+        "term pruning semi-join missing under the kernel"
+    assert "SortMergeJoin" not in kernel
+
+    retrieve_sharded(idx, qdf, k=5, pad=False, query_chunk_size=1)
+    for plan in plans["localCheckpoint"]:
+        # the final exact merge is a MapInPandas over the explicit
+        # q_idx exchange of the scatter-add kernel's MapInPandas
+        assert re.search(r"MapInPandas \(\d+\)\n\s*\+- Exchange \(\d+\)\n"
+                         r"\s*\+- MapInPandas \(\d+\)", plan), plan
+        assert re.search(r"hashpartitioning\(q_idx#\d+, \d+\), "
+                         r"REPARTITION_BY_NUM", plan), plan
+        assert "FlatMapGroupsInPandas" not in plan
+        assert "LeftSemi" in plan
+        assert "SortMergeJoin" not in plan
+    assert len(plans["localCheckpoint"]) == 2
 
 
 def test_impact_expressions_are_jvm_side(spark, idx):

@@ -458,3 +458,45 @@ def test_standalone_parsers_strip_range_clauses(spark):
     assert {(f.field, f.value) for f in filters} == {("role", "user")}
     exps = parse_expansions(qdf).collect()
     assert exps == []
+
+
+def test_clause_probe_cap_falls_back_to_standalone_parses(
+        spark, idx, docs_df, monkeypatch):
+    """A batch above CLAUSE_PROBE_MAX collects only its clause rows,
+    through the standalone parse_* functions, and parses its term bag
+    distributed: the results equal the probed run's."""
+    from bm25s_spark.operators import querylang
+
+    meta = spark.createDataFrame(
+        [(0, "user", 0), (1, "tool", 1), (2, "user", 2),
+         (3, "assistant", 3), (4, "user", 0)],
+        "doc_id long, role string, turn_idx int",
+    )
+    qdf = spark.createDataFrame(
+        [("q1", "role:user spark -window"),
+         ("q2", "shuf* +spark^2 -role:tool"),
+         ("q3", "sprak~1 join turn_idx:[0 TO 2]"),
+         ("q4", '"spark shuffle" merge'),
+         ("q5", "parquet scan -turn_idx:[1 TO 1]")],
+        "query_id string, text string",
+    )
+
+    def run():
+        return sorted(
+            (r.query_id, r.rank, r.doc_id, r.score)
+            for r in retrieve_parsed(idx, qdf, k=5, metadata_df=meta,
+                                     docs_df=docs_df).collect()
+        )
+
+    probed = run()
+    fallbacks: list = []
+    collect = querylang._collect_clauses
+    monkeypatch.setattr(querylang, "CLAUSE_PROBE_MAX", 1)
+    monkeypatch.setattr(querylang, "_collect_clauses",
+                        lambda *a: fallbacks.append(1) or collect(*a))
+    capped = run()
+    assert fallbacks == [1]
+    assert {q for q, *_ in probed} == {"q1", "q2", "q3", "q4", "q5"}
+    assert [r[:3] for r in capped] == [r[:3] for r in probed]
+    assert [r[3] for r in capped] == pytest.approx([r[3] for r in probed],
+                                                   rel=1e-12)

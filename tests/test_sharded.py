@@ -196,10 +196,13 @@ def test_narrow_tf_megadoc_fallback(spark):
     }
 
 
-def test_kernel_metrics_accumulators(spark):
+def test_kernel_metrics_accumulators(spark, monkeypatch):
     """Query-side observability: the kernel fills shards_scored /
     postings_scanned / candidates_emitted accumulators after the action,
-    with values satisfying the structural invariants."""
+    with values satisfying the structural invariants — on both kernel
+    executors, whose counts agree (the driver-side adds of the
+    in-process kernel are exact)."""
+    from bm25s_spark import shards
     from bm25s_spark.indexer import build_index
 
     tdf = transcripts_df(spark, "t2").persist()
@@ -212,24 +215,32 @@ def test_kernel_metrics_accumulators(spark):
         ),
         "query_id string, text string",
     )
-    m: dict = {}
-    res = idx.retrieve(qdf, k=5, strategy="sharded", pad=False, metrics=m)
-    n_rows = res.count()
-    assert m["shards_scored"].value > 0
-    # every candidate came from some scanned posting, and the final
-    # merge only ever discards candidates
-    assert m["postings_scanned"].value >= m["candidates_emitted"].value
-    assert m["candidates_emitted"].value >= n_rows > 0
-    # scatter-adds happened (pruning can only reduce them, never to 0
-    # for a non-empty result), and with prune=False they are EXACTLY
-    # one add per (query, shard, term) posting — ≥ the per-(shard, term)
-    # loaded count whenever any term serves ≥1 query
-    assert m["postings_scored"].value > 0
-    m_off: dict = {}
-    idx.retrieve(qdf, k=5, strategy="sharded", pad=False, prune=False,
-                 metrics=m_off).count()
-    assert m_off["postings_scored"].value >= m["postings_scored"].value
-    assert m_off["postings_scored"].value >= m_off["postings_scanned"].value
+    counts = []
+    for work_max in (shards.IN_PROCESS_WORK_MAX, 0):
+        monkeypatch.setattr(shards, "IN_PROCESS_WORK_MAX", work_max)
+        m: dict = {}
+        res = idx.retrieve(qdf, k=5, strategy="sharded", pad=False,
+                           metrics=m)
+        n_rows = res.count()
+        assert m["shards_scored"].value > 0
+        # every candidate came from some scanned posting, and the final
+        # merge only ever discards candidates
+        assert m["postings_scanned"].value >= m["candidates_emitted"].value
+        assert m["candidates_emitted"].value >= n_rows > 0
+        # scatter-adds happened (pruning can only reduce them, never to 0
+        # for a non-empty result), and with prune=False they are EXACTLY
+        # one add per (query, shard, term) posting — ≥ the per-(shard,
+        # term) loaded count whenever any term serves ≥1 query
+        assert m["postings_scored"].value > 0
+        m_off: dict = {}
+        idx.retrieve(qdf, k=5, strategy="sharded", pad=False, prune=False,
+                     metrics=m_off).count()
+        assert m_off["postings_scored"].value >= m["postings_scored"].value
+        assert (m_off["postings_scored"].value
+                >= m_off["postings_scanned"].value)
+        counts.append([{n: a.value for n, a in mm.items()}
+                       for mm in (m, m_off)])
+    assert counts[0] == counts[1]
 
 
 def test_auto_docs_per_shard_math():
@@ -334,16 +345,19 @@ def test_sharded_null_query_id_rejected(spark):
         engine.retrieve(qdf, k=3, strategy="sharded").collect()
 
 
-def test_local_qstats_equals_distributed_pull(spark):
+def test_local_qstats_equals_distributed_pull(spark, monkeypatch):
     """Frame-level parity: the driver-local metadata pull must produce
     the EXACT (query_id, term, mult, df) relation the distributed
     ``tokenize_queries ⨝ term_stats`` path yields — over messy text
-    (unicode, punctuation, stopword runs, repeats, empties, nulls)."""
+    (unicode, punctuation, stopword runs, repeats, empties, nulls) —
+    from the driver term dictionary and, above its cap, from the
+    broadcast-join lookup."""
     import random
 
     import pandas as pd
     from pyspark.sql import functions as F
 
+    from bm25s_spark import shards
     from bm25s_spark.indexer import build_index
     from bm25s_spark.retrieval import tokenize_queries
     from bm25s_spark.shards import _local_qstats
@@ -369,13 +383,21 @@ def test_local_qstats_equals_distributed_pull(spark):
         .select("query_id", "term", "mult", "df")
         .toPandas()
     )
-    local = _local_qstats(
-        idx, qdf.toPandas(), "query_id", "text",
-        make_local_tokenizer(**idx.tokenizer_kwargs), [],
-    )
+
+    def local():
+        return _local_qstats(
+            idx, qdf.toPandas(), "query_id", "text",
+            make_local_tokenizer(**idx.tokenizer_kwargs), [],
+        )
+
     key = lambda f: sorted(map(tuple, f[["query_id", "term", "mult", "df"]]
                                .itertuples(index=False)))
-    assert key(local) == key(dist)
+    assert key(local()) == key(dist)
+    assert shards._term_dict(idx) is not None
+    monkeypatch.setattr(shards, "VOCAB_LOCALIZE_MAX", 1)
+    idx.driver_cache.clear()
+    assert key(local()) == key(dist)
+    assert shards._term_dict(idx) is None
 
 
 @pytest.fixture(scope="module")
@@ -468,3 +490,120 @@ def test_padded_chunked_retrieve_caches_nothing(spark, pad_index):
                         query_chunk_size=chunk_size).collect()
         assert len(rows) == n_rows
         assert _cached_rdds(spark) - before == set(), (chunk_size, mask_df)
+
+
+@pytest.fixture
+def kernel_stages(spark, monkeypatch):
+    """Counts the ``mapInPandas`` stages retrieve plans (the sharded
+    kernel's, and the chunked path's merge)."""
+    cls = type(spark.range(1))
+    orig = cls.mapInPandas
+    calls: list = []
+
+    def spy(self, *args, **kwargs):
+        calls.append(1)
+        return orig(self, *args, **kwargs)
+
+    monkeypatch.setattr(cls, "mapInPandas", spy)
+    return calls
+
+
+def _sorted_frame(df):
+    return df.toPandas().sort_values(["query_id", "rank"]).reset_index(
+        drop=True
+    )
+
+
+@pytest.fixture(scope="module")
+def import_index(spark, pad_index, tmp_path_factory):
+    from bm25s_spark.compat import export_bm25s, import_bm25s
+
+    d = str(tmp_path_factory.mktemp("bm25s_import"))
+    export_bm25s(pad_index, d, method="bm25l", dtype="float64")
+    imp = import_bm25s(spark, d)
+    imp.docs_per_shard = 300
+    return imp
+
+
+@pytest.mark.parametrize("kw", [
+    dict(method="robertson"), dict(method="lucene"), dict(method="atire"),
+    dict(method="bm25l"), dict(method="bm25+"),
+    dict(method="bm25l", round_to=4, prune=False),
+    dict(method="bm25+", exact=True),
+    dict(method="robertson", allow_negative=True),
+    dict(method="robertson", allow_negative=True, pad=False),
+    dict(method="bm25l", index="import"),
+], ids=lambda kw: "-".join(f"{k}={v}" for k, v in kw.items()))
+def test_in_process_kernel_matches_map_in_pandas(spark, pad_index,
+                                                 import_index, monkeypatch,
+                                                 kernel_stages, kw):
+    """A bounded batch whose scatter-add work fits IN_PROCESS_WORK_MAX
+    runs the kernel in the driver; forcing the mapInPandas stage (work
+    constant 0) gives a bit-identical frame — padded empty, all-OOV and
+    sparse queries included."""
+    import pandas as pd
+
+    from bm25s_spark import shards
+    from bm25s_spark.retrieval import retrieve
+    from bm25s_spark.shards import ensure_sharded
+
+    kw = dict(kw)
+    idx = import_index if kw.pop("index", None) == "import" else pad_index
+    qdf = _padded_batch(spark, pad_index, 10)
+    kw.setdefault("pad", True)
+    ensure_sharded(idx)
+    kernel_stages.clear()  # the layout build's own stage
+    local = _sorted_frame(retrieve(idx, qdf, k=10, strategy="sharded", **kw))
+    assert kernel_stages == []
+    monkeypatch.setattr(shards, "IN_PROCESS_WORK_MAX", 0)
+    dist = _sorted_frame(retrieve(idx, qdf, k=10, strategy="sharded", **kw))
+    assert kernel_stages == [1]
+    if kw["pad"]:
+        assert len(local) == qdf.count() * 10
+    pd.testing.assert_frame_equal(local, dist, check_exact=True)
+
+
+def test_padded_single_query_job_budget(spark, pad_index):
+    """A padded single query on a warm index (term dictionary and pad
+    pool cached) runs at most 4 Spark jobs, retrieve plus toPandas."""
+    import pandas as pd
+
+    from bm25s_spark.retrieval import retrieve
+
+    qdf = spark.createDataFrame(
+        pd.DataFrame({"query_id": ["q1"], "text": ["spark shuffle skew"]}),
+        "query_id string, text string",
+    )
+    retrieve(pad_index, qdf, k=10, strategy="sharded").toPandas()
+    sc = spark.sparkContext
+    sc.setJobGroup("padded-single-query", "job budget")
+    try:
+        out = retrieve(pad_index, qdf, k=10, strategy="sharded").toPandas()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert len(out) == 10
+    jobs = sc.statusTracker().getJobIdsForGroup("padded-single-query")
+    assert 0 < len(jobs) <= 4, jobs
+
+
+def test_sharded_weight_mask_takes_map_in_pandas(spark, kernel_stages):
+    """A weight-mask query keeps the distributed kernel (the mask rows
+    are O(num_docs) and never reach the driver) and still matches the
+    reference's weight-mask golden (reference/tests/core/
+    test_retrieve.py:98-114): docs [0, 3]."""
+    tdf = transcripts_df(spark, "t1")
+    from bm25s_spark.shards import ensure_sharded
+
+    engine = SparkBM25()
+    ensure_sharded(engine.index(tdf))
+    kernel_stages.clear()  # the layout build's own stage
+    mask_df = spark.createDataFrame(
+        [(i, float(w)) for i, w in enumerate([1, 0, 0, 1])],
+        "doc_id long, weight double",
+    )
+    qdf = spark.createDataFrame([("q-0000", "cat feline dog bird fish")],
+                                "query_id string, text string")
+    rows = _rows(engine.retrieve(qdf, k=2, strategy="sharded",
+                                 weight_mask_df=mask_df))
+    assert sorted(r["doc_id"] for r in rows) == [0, 3]
+    assert kernel_stages == [1]
