@@ -27,7 +27,8 @@ from pyspark.storagelevel import StorageLevel
 
 def assign_dense_ids(df: DataFrame, order_cols: list[str], id_col: str,
                      persisted_out: list | None = None,
-                     localize_max: int = 0) -> DataFrame:
+                     localize_max: int = 0,
+                     localized_out: list | None = None) -> DataFrame:
     """Append ``id_col`` = rank of the row in the global ``order_cols``
     order (0-based, contiguous).  Requires ``order_cols`` to be a unique
     key.  Triggers one small job (per-partition counts); the returned
@@ -53,7 +54,10 @@ def assign_dense_ids(df: DataFrame, order_cols: list[str], id_col: str,
     types/NULLs keep Spark's ordering authority); oversized inputs pay
     one discarded bounded pull and fall through to the distributed
     path.  Callers must only enable this when a localized row (all
-    columns) is small — the pull is the whole row, not just the key."""
+    columns) is small — the pull is the whole row, not just the key.
+    When the local path runs, its driver-side frame (the input's columns
+    plus ``id_col``, sorted) is appended to ``localized_out`` (when
+    given)."""
     spark = df.sparkSession
     if localize_max and not df.isStreaming:
         import pandas as pd
@@ -66,6 +70,8 @@ def assign_dense_ids(df: DataFrame, order_cols: list[str], id_col: str,
                 order_cols, kind="mergesort", ignore_index=True
             )
             out_pdf[id_col] = pd.RangeIndex(len(out_pdf)).astype("int64")
+            if localized_out is not None:
+                localized_out.append(out_pdf)
             schema = StructType(
                 list(df.schema.fields) + [StructField(id_col, LongType(), False)]
             )

@@ -60,6 +60,10 @@ SHARD_SIZE_CAP = 65536
 # terms (~tens of MB) assign term_ids on the driver in one bounded
 # Arrow pull; larger vocabularies keep the distributed range partitioner
 VOCAB_LOCALIZE_MAX = 1_000_000
+# BM25Index.driver_cache keys: the term dictionary, and (PAD_POOL, k)
+# for the 2·k lowest doc ids
+TERM_DICT = "term_dict"
+PAD_POOL = "pad_pool"
 
 
 def auto_docs_per_shard(num_docs: int, parallelism: int,
@@ -110,8 +114,10 @@ class BM25Index:
     # (compat.import_bm25s): scoring is pinned to that stored combination
     compat_import: dict | None = None
     # driver-side query metadata (shards.py: the term dictionary and the
-    # pad pool), each entry keyed on the identity of the table it was
-    # read from; a ``dataclasses.replace`` view starts empty
+    # pad pools): key -> (the table it was read from, value); an entry
+    # is read only while that table is still the index's.  A build
+    # seeds the dictionary, a merge carries pools over; a
+    # ``dataclasses.replace`` view starts empty
     driver_cache: dict = field(default_factory=dict, init=False,
                                repr=False, compare=False)
 
@@ -383,9 +389,12 @@ def corpus_term_stats(
     spark: SparkSession,
     dfreq: DataFrame,
     persisted_out: list | None = None,
+    localized_out: list | None = None,
 ) -> DataFrame:
     """(term, df) → ``term_stats`` (term, term_id, df): the vocabulary
-    with the empty-token patch and dense term ids."""
+    with the empty-token patch and dense term ids.  When the ids are
+    assigned on the driver, the (term, df, term_id) frame is appended to
+    ``localized_out`` (when given)."""
     # vocab with the empty-token patch (reference/bm25s/__init__.py:562-564):
     # "" joins the vocab (df=0 → contributes nothing, but OOV lookups hit it)
     empty_row = spark.range(1).select(
@@ -403,7 +412,8 @@ def corpus_term_stats(
     # path; web-scale vocabularies past the cap stay distributed
     return assign_dense_ids(vocab, ["term"], "term_id",
                             persisted_out=persisted_out,
-                            localize_max=VOCAB_LOCALIZE_MAX
+                            localize_max=VOCAB_LOCALIZE_MAX,
+                            localized_out=localized_out,
                             ).select("term", "term_id", "df")
 
 
@@ -441,14 +451,15 @@ def _index_from_tf(
     if dfreq is None:
         dfreq = tf.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
 
+    vocab_local: list = []
     term_stats = corpus_term_stats(
-        spark, dfreq, persisted_out=aux_persisted,
+        spark, dfreq, persisted_out=aux_persisted, localized_out=vocab_local,
     ).persist()
     # term_stats is vocab-sized → broadcast when small; Catalyst/AQE
     # picks the strategy
     postings = tf.join(term_stats, "term")
 
-    return BM25Index(
+    index = BM25Index(
         spark=spark,
         postings=postings,
         term_stats=term_stats,
@@ -465,6 +476,13 @@ def _index_from_tf(
         ),
         aux_persisted=aux_persisted,
     )
+    if vocab_local:
+        # the ids were numbered on the driver: that frame is already the
+        # query path's term dictionary, so no query pulls it again
+        index.driver_cache[TERM_DICT] = (
+            term_stats, vocab_local[0][["term", "df"]].set_index("term"),
+        )
+    return index
 
 
 def build_index_from_tokens(
@@ -641,8 +659,20 @@ def merge_indexes(
                 "index; merge_indexes requires disjoint doc-id sets"
             )
 
+    # a pad pool an input has served is the merged index's pool too when
+    # the union holds no other doc id at or below its largest (the
+    # append pattern: new ids continue past the old ones) — counted in
+    # the same aggregation, so a merge never leaves a pool to re-pull
+    pools = [
+        (key, pool) for idx in indexes
+        for key, (source, pool) in idx.driver_cache.items()
+        if isinstance(key, tuple) and key[0] == PAD_POOL
+        and source is idx.doc_lens and len(pool) == 2 * key[1]
+    ]
     agg = doc_lens.agg(
-        F.count(F.lit(1)).alias("n"), F.avg("dl").alias("avgdl")
+        F.count(F.lit(1)).alias("n"), F.avg("dl").alias("avgdl"),
+        *[F.count(F.when(F.col("doc_id") <= int(pool.max()), 1))
+          .alias(f"_pool{j}") for j, (_, pool) in enumerate(pools)],
     ).collect()[0]
     num_docs, avgdl = int(agg["n"]), float(agg["avgdl"] or 0.0)
 
@@ -665,11 +695,15 @@ def merge_indexes(
     ):
         doc_map = reduce(lambda a, b: a.unionByName(b), doc_maps)
 
-    return _index_from_tf(
+    merged = _index_from_tf(
         spark, tf, doc_lens, doc_map, num_docs, avgdl,
         head.k1, head.b, head.delta, dict(head.tokenizer_kwargs),
         dfreq=dfreq,
     )
+    for j, (key, pool) in enumerate(pools):
+        if agg[f"_pool{j}"] == len(pool):
+            merged.driver_cache[key] = (doc_lens, pool)
+    return merged
 
 
 class SparkBM25:

@@ -40,9 +40,14 @@ def get_spark(
         # pin the heap (-Xms = -Xmx): G1's commit/uncommit cycles cause
         # kernel-side TLB-shootdown storms on many-vCPU VMs (observed:
         # 40% sys time, half the cores idle, runqueue 20+ during pure-JVM
-        # stages); a fixed heap + ParallelGC keeps memory stable
+        # stages); a fixed heap + ParallelGC keeps memory stable.
+        # Every build and merge loads tens of generated classes, and the
+        # default ~21 MB metaspace threshold turns that into a full GC
+        # (40–200 ms, growing with the live heap) every few builds,
+        # landing on whatever call runs next; a 256 MB threshold defers
+        # class unloading until the generated classes take that much
         .config("spark.driver.extraJavaOptions",
-                f"-Xms{mem} -XX:+UseParallelGC")
+                f"-Xms{mem} -XX:+UseParallelGC -XX:MetaspaceSize=256m")
         # 1 MB Tungsten pages, not the 16-64 MB Spark derives from the
         # heap: every sort task and string-keyed broadcast hash relation
         # takes a page, and the pages a query holds get promoted on the

@@ -63,7 +63,9 @@ from pyspark.sql.types import (
 
 from bm25s_spark import scoring
 from bm25s_spark.compat import NNOC_COLS
-from bm25s_spark.indexer import VOCAB_LOCALIZE_MAX, BM25Index
+from bm25s_spark.indexer import (
+    PAD_POOL, TERM_DICT, VOCAB_LOCALIZE_MAX, BM25Index,
+)
 from bm25s_spark.scoring import METHODS_REQUIRING_NNOC
 from bm25s_spark.retrieval import count_query_terms, tokenize_queries
 from bm25s_spark.tokenization import make_local_tokenizer
@@ -337,8 +339,9 @@ def _driver_cached(index: BM25Index, key, source: DataFrame, build):
 
 def _term_dict(index: BM25Index) -> pd.DataFrame | None:
     """The vocabulary as a driver-side frame indexed by term: ``df`` plus
-    an import's stored ``nnoc_*`` columns.  One Arrow pull per
-    ``term_stats``; None when the vocabulary has more than
+    an import's stored ``nnoc_*`` columns.  A build whose term ids were
+    numbered on the driver seeds it; otherwise one Arrow pull per
+    ``term_stats``.  None when the vocabulary has more than
     ``VOCAB_LOCALIZE_MAX`` terms."""
     def pull():
         ts = index.term_stats
@@ -349,13 +352,15 @@ def _term_dict(index: BM25Index) -> pd.DataFrame | None:
             return None
         return pdf.set_index("term")
 
-    return _driver_cached(index, "term_dict", index.term_stats, pull)
+    return _driver_cached(index, TERM_DICT, index.term_stats, pull)
 
 
 def _pad_pool(index: BM25Index, k: int) -> np.ndarray:
-    """The 2·k lowest doc ids, pulled once per (``doc_lens``, k)."""
+    """The 2·k lowest doc ids, pulled once per (``doc_lens``, k);
+    ``merge_indexes`` carries a pool over when the merge leaves it
+    unchanged."""
     return _driver_cached(
-        index, ("pad_pool", k), index.doc_lens,
+        index, (PAD_POOL, k), index.doc_lens,
         lambda: index.doc_lens.select("doc_id").orderBy("doc_id")
         .limit(2 * k).toPandas()["doc_id"].to_numpy(np.int64),
     )
@@ -478,8 +483,9 @@ def retrieve_sharded(
     from those rows: the driver tokenizer twin counts terms locally (the
     stemmer-less ``engine="sql"`` tokenizer, which has no driver twin,
     runs over the probed rows as a local relation instead), and each
-    term's df comes from the driver term dictionary, pulled once per
-    ``term_stats`` (``_with_term_stats``).  With very large per-query
+    term's df comes from the driver term dictionary, which the build
+    keeps from numbering the vocabulary (else pulled once per
+    ``term_stats``; ``_with_term_stats``).  With very large per-query
     text (documents-as-queries) lower ``query_chunk_size`` or
     pre-tokenize to keep the probe byte-bounded.
 
@@ -509,7 +515,8 @@ def retrieve_sharded(
     ``reference/bm25s/__init__.py:759-803``).
 
     **Pad.** ``pad=True`` returns exactly k rows per query.  The 2·k
-    lowest doc ids (pulled once per index, ``_pad_pool``) join the
+    lowest doc ids (pulled once per index and carried through an
+    appending merge, ``_pad_pool``) join the
     candidates at score 0 for every query index (all-OOV and empty
     queries included) before the final merge, which adds the query's
     nnoc constant and drops a pad row whose doc already has a real
@@ -911,9 +918,19 @@ def retrieve_sharded(
             )
             bc.destroy()
         elif terms:
-            # an IN filter is one JVM-only job; the semi join's broadcast
-            # costs a second
-            rows = base_needed.where(F.col("term").isin(terms)).toPandas()
+            # a filter is one JVM-only job; the semi join's broadcast
+            # costs a second.  Its generated code must not depend on the
+            # term count: an IN list at or under the optimizer's InSet
+            # threshold compiles one class set per list length, which a
+            # query would pay whenever its length is new (or evicted
+            # from the codegen cache).  Membership in an array literal
+            # compiles once; a longer list becomes an InSet, also once.
+            few = len(terms) <= int(spark.conf.get(
+                "spark.sql.optimizer.inSetConversionThreshold"))
+            rows = base_needed.where(
+                F.array_contains(F.lit(terms), F.col("term")) if few
+                else F.col("term").isin(terms)
+            ).toPandas()
             frames.extend(_make_kernel(lambda: kernel_args)([
                 rows.sort_values("shard_id", kind="stable")
                 .assign(is_mask=False)

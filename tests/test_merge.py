@@ -197,3 +197,44 @@ def test_merge_after_query_reads_fresh_driver_caches(spark, merge_setup):
     assert base.driver_cache == {}
     for idx in (merged, delta):
         idx.unpersist()
+
+
+def test_merge_carries_query_caches(spark, merge_setup):
+    """A build keeps the vocabulary it numbered on the driver as the
+    term dictionary, and a merge whose new doc ids all sit above a
+    served pad pool (the append pattern) carries that pool over: the
+    first query on the merged index reads neither table again and
+    still ranks exactly like a fresh build of the union."""
+    import pandas as pd
+
+    from bm25s_spark.indexer import PAD_POOL, TERM_DICT
+    from tests.conftest import assert_rank_identical, rows_to_arrays
+
+    docs, full, _ = merge_setup
+    base = build_index(docs.where(F.col("doc_id") < 100), doc_id_col="doc_id")
+    delta = build_index(docs.where(F.col("doc_id") >= 100),
+                        doc_id_col="doc_id")
+    for idx in (base, delta):
+        source, vocab = idx.driver_cache[TERM_DICT]
+        assert source is idx.term_stats
+        pulled = idx.term_stats.select("term", "df").toPandas()
+        pd.testing.assert_frame_equal(
+            vocab.sort_index(), pulled.set_index("term").sort_index())
+    texts = [r["text"] for r in docs.orderBy("doc_id").select("text").collect()]
+    qdf = spark.createDataFrame(
+        queries_for(texts, 8, seed=7) + [("q-oov", "zzqx qqzz")],
+        "query_id string, text string",
+    )
+    kw = dict(k=5, method="bm25l", strategy="sharded", round_to=4,
+              prune=False)
+    base.retrieve(qdf, **kw).collect()
+    merged = merge_indexes(base, delta)
+    assert merged.driver_cache[TERM_DICT][0] is merged.term_stats
+    source, pool = merged.driver_cache[(PAD_POOL, 5)]
+    assert source is merged.doc_lens
+    assert list(pool) == list(range(10))
+    merged_rows = [r.asDict() for r in merged.retrieve(qdf, **kw).collect()]
+    full_rows = [r.asDict() for r in full.retrieve(qdf, **kw).collect()]
+    assert_rank_identical(merged_rows, *rows_to_arrays(full_rows), atol=1e-4)
+    for idx in (base, delta, merged):
+        idx.unpersist()

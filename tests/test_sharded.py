@@ -586,6 +586,36 @@ def test_padded_single_query_job_budget(spark, pad_index):
     assert 0 < len(jobs) <= 4, jobs
 
 
+def test_single_query_code_does_not_depend_on_term_count(spark, pad_index):
+    """Once one padded single query has run, queries with other numbers
+    of terms compile no new classes: the in-process layout pull filters
+    on membership in an array literal, whose generated code is the same
+    for every list length, so no query pays codegen for being the first
+    of its length."""
+    import pandas as pd
+
+    from pyspark.sql import functions as F
+
+    from bm25s_spark.retrieval import retrieve
+
+    terms = [r["term"] for r in pad_index.term_stats.where(F.col("df") > 0)
+             .orderBy(F.desc("df"), "term").limit(6).collect()]
+    qdfs = [
+        spark.createDataFrame(
+            pd.DataFrame({"query_id": ["q1"], "text": [" ".join(terms[:n])]}),
+            "query_id string, text string",
+        )
+        for n in (1, 2, 3, 6)
+    ]
+    retrieve(pad_index, qdfs[0], k=10, strategy="sharded").toPandas()
+    compiles = (spark.sparkContext._jvm.org.apache.spark.metrics.source
+                .CodegenMetrics.METRIC_COMPILATION_TIME())
+    before = compiles.getCount()
+    for qdf in qdfs[1:]:
+        retrieve(pad_index, qdf, k=10, strategy="sharded").toPandas()
+    assert compiles.getCount() == before
+
+
 def test_sharded_weight_mask_takes_map_in_pandas(spark, kernel_stages):
     """A weight-mask query keeps the distributed kernel (the mask rows
     are O(num_docs) and never reach the driver) and still matches the
