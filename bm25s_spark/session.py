@@ -7,8 +7,18 @@ Local testing runs ``local[N]``; the same configs are what we would ship in
 from __future__ import annotations
 
 import os
+import sys
+import tempfile
+import uuid
 
 from pyspark.sql import SparkSession
+
+# the worker daemon (``_daemon/bm25s_spark_daemon.py``): a directory of
+# its own on the workers' PYTHONPATH, see ``_worker_conf``
+DAEMON_DIR = os.path.join(os.path.dirname(os.path.abspath(__file__)), "_daemon")
+DAEMON_MODULE = "bm25s_spark_daemon"
+# longest AF_UNIX socket path, without the terminating NUL
+SUN_PATH_MAX = 103 if sys.platform == "darwin" else 107
 
 
 def get_spark(
@@ -73,12 +83,41 @@ def get_spark(
         local_dir = "/dev/shm/bm25s_spark_local"
         os.makedirs(local_dir, exist_ok=True)
         builder = builder.config("spark.local.dir", local_dir)
+    conf = _worker_conf(tempfile.gettempdir())
     for key, val in (extra_conf or {}).items():
+        if key == "spark.executorEnv.PYTHONPATH" and key in conf:
+            val = os.pathsep.join([conf[key], str(val)])
+        conf[key] = val
+    for key, val in conf.items():
         builder = builder.config(key, str(val))
     spark = builder.getOrCreate()
     _ship_package(spark)
     _warm_python_bridge(spark)
     return spark
+
+
+def _worker_conf(socket_dir: str) -> dict:
+    """Confs that cut the fixed cost of a Python-worker task.
+
+    The worker daemon runs as ``bm25s_spark_daemon``, which stops every
+    task from re-reading the zip archives on ``sys.path`` (see that
+    module); its directory goes on the workers' PYTHONPATH, which
+    reaches them in local mode.  The JVM talks to the daemon, its
+    workers and the driver's accumulator server over Unix sockets, not
+    loopback TCP, when a socket path fits: Spark names the files
+    ``.<uuid4>.sock`` in ``socket_dir`` and fails at SparkContext start
+    if the path is longer than AF_UNIX allows, so a long ``socket_dir``
+    keeps TCP."""
+    conf = {
+        "spark.python.daemon.module": DAEMON_MODULE,
+        "spark.executorEnv.PYTHONPATH": DAEMON_DIR,
+    }
+    socket_dir = os.path.abspath(socket_dir)
+    sock = os.path.join(socket_dir, f".{uuid.uuid4()}.sock")
+    if len(os.fsencode(sock)) <= SUN_PATH_MAX:
+        conf["spark.python.unix.domain.socket.enabled"] = "true"
+        conf["spark.python.unix.domain.socket.dir"] = socket_dir
+    return conf
 
 
 _WARMED: set = set()
@@ -87,21 +126,21 @@ _WARMED: set = set()
 def _warm_python_bridge(spark: SparkSession) -> None:
     """Absorb the Python-bridge first-use cost at session creation.
 
-    The FIRST task that executes a pickled Python relation (a plain
+    The first job over a pickled Python relation (a plain
     ``createDataFrame(rows)`` frame — e.g. a user's interactive query
-    batch) pays ~1.5 s of one-time bridge initialization in this
-    runtime, and the pandas-UDF worker pool does NOT warm that path
-    (measured: first pickled scan costs the same after UDF jobs).
-    Without this, the cost lands on whichever query first consumes such
-    a frame; one 1-row warm job at session start keeps steady-state
-    query latency honest.  Scale-independent (one 1-row task, once per
-    session)."""
+    batch) starts the worker daemon and its first workers: 2.9 s on
+    ``local[4]``, where later such jobs take 0.08-0.11 s (median of 5
+    on a 4-core host).  Without this, the cost lands on whichever query
+    first consumes such a frame; one 1-row warm job at session start
+    keeps steady-state query latency honest.  The job reads its one row
+    to the end; under a ``limit`` the worker would write to a socket
+    the JVM had closed."""
     app = spark.sparkContext.applicationId
     if app in _WARMED:
         return
     _WARMED.add(app)
     try:
-        spark.createDataFrame([(0,)], "warm int").limit(1).toPandas()
+        spark.createDataFrame([(0,)], "warm int").toPandas()
     except Exception:
         pass
 

@@ -33,12 +33,12 @@ def local_relation(spark, rows, schema) -> DataFrame:
 
     ``spark.createDataFrame(rows, schema)`` over a plain Python row list
     plans a pickled-RDD scan (``Scan ExistingRDD``): EVERY consuming job
-    re-deserializes the rows through a Python worker — a broadcast build
-    over such a relation measures ~2× the latency of the Arrow path's
-    pure-JVM ``LocalTableScan`` (~0.2 s extra per consumer job in this
-    runtime), and the hot query paths consume their batch-sized local
-    tables (query terms, expansion terms, id maps) from several
-    broadcast builds per plan.  Routing the rows through a pandas frame
+    re-deserializes the rows through a Python worker — a broadcast join
+    over such a relation took 0.11 s against 0.09 s for the Arrow path's
+    pure-JVM ``LocalTableScan`` (200 rows, 4 cores), and the hot query
+    paths consume their batch-sized local tables (query terms,
+    expansion terms, id maps) from several broadcast builds per plan,
+    each paying that worker task.  Routing the rows through a pandas frame
     (Arrow conversion) plants a ``LocalTableScan`` instead — no Python
     anywhere in the consuming plans (guide §4).
 

@@ -100,6 +100,9 @@ def test_sharded_kernel_prunes_terms_before_scan(spark, idx, monkeypatch):
                      r"\s*\+- Exchange \(\d+\)\n\s*\+- Project \(\d+\)\n"
                      r"\s*\+- BroadcastHashJoin LeftSemi", kernel), \
         "term pruning semi-join missing under the kernel"
+    # shards are placed by range, one shard per kernel task
+    assert re.search(r"rangepartitioning\(shard_id#\d+L? ASC NULLS FIRST, "
+                     r"\d+\), REPARTITION_BY_NUM", kernel), kernel
     assert "SortMergeJoin" not in kernel
 
     retrieve_sharded(idx, qdf, k=5, pad=False, query_chunk_size=1)

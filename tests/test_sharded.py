@@ -563,6 +563,43 @@ def test_in_process_kernel_matches_map_in_pandas(spark, pad_index,
     pd.testing.assert_frame_equal(local, dist, check_exact=True)
 
 
+def test_kernel_gives_each_shard_its_own_task(spark, pad_index,
+                                             monkeypatch):
+    """With no more shards than kernel partitions, no kernel partition
+    receives rows of two shards (a hash exchange put 3 shards into 4
+    partitions two-into-one), and every shard reaches the kernel."""
+    from pyspark.sql import functions as F
+
+    from bm25s_spark import shards
+    from bm25s_spark.retrieval import retrieve
+    from bm25s_spark.shards import ensure_sharded
+
+    ensure_sharded(pad_index)
+    texts = [r["text"] for r in pad_index.doc_map.orderBy("doc_id")
+             .select("text").collect()]
+    qdf = spark.createDataFrame(queries_for(texts, 200, seed=3),
+                                "query_id string, text string")
+    n_shards = -(-pad_index.num_docs // pad_index.docs_per_shard)
+    assert 1 < n_shards <= int(spark.conf.get("spark.sql.shuffle.partitions"))
+    cls = type(qdf)
+    orig = cls.mapInPandas
+    inputs: list = []
+
+    def spy(self, *args, **kwargs):
+        inputs.append(self)
+        return orig(self, *args, **kwargs)
+
+    monkeypatch.setattr(cls, "mapInPandas", spy)
+    monkeypatch.setattr(shards, "IN_PROCESS_WORK_MAX", 0)
+    retrieve(pad_index, qdf, k=10, strategy="sharded", pad=False).count()
+    assert len(inputs) == 1  # the kernel's
+    placed = inputs[0].select(
+        F.spark_partition_id().alias("part"), "shard_id"
+    ).distinct().toPandas()
+    assert placed.groupby("part")["shard_id"].nunique().max() == 1, placed
+    assert sorted(placed["shard_id"]) == list(range(n_shards))
+
+
 def test_padded_single_query_job_budget(spark, pad_index):
     """A padded single query on a warm index (term dictionary and pad
     pool cached) runs at most 4 Spark jobs, retrieve plus toPandas."""
