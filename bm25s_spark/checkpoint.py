@@ -1,8 +1,11 @@
 """Resumable, stage-checkpointed index builds with per-partition lineage
 and metrics (north_rule requirement).
 
-The build pipeline (SURVEY.md §3.1) is cut at its natural shuffle
-boundaries into materialized stages:
+This is the same pipeline as ``indexer.build_index``, staged: the build
+(``indexer.build_pipeline`` and its one index constructor,
+``indexer.index_from_segments``) takes a stage hook, and here each of
+its stages is a :meth:`Checkpointer.stage` — cut at the pipeline's
+natural shuffle boundaries into materialized tables:
 
     doc_ids → tokenized → tf → term_stats → postings → sharded
 
@@ -32,10 +35,8 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from bm25s_spark.indexer import BM25Index, corpus_term_stats
+from bm25s_spark.indexer import BM25Index, build_pipeline, tokenizer_spec
 from bm25s_spark.scoring import DEFAULT_B, DEFAULT_DELTA, DEFAULT_K1
-from bm25s_spark.ids import assign_doc_ids
-from bm25s_spark.tokenization import make_tokenizer_udf
 
 MANIFEST = "_MANIFEST.json"
 
@@ -143,7 +144,8 @@ def build_index_checkpointed(
     docs_per_shard: int | None = None,
     tokenizer_engine: str = "pandas",
 ) -> tuple[BM25Index, Checkpointer]:
-    """Stage-checkpointed twin of ``indexer.build_index``.
+    """``indexer.build_index``'s pipeline, staged: every stage is a
+    :meth:`Checkpointer.stage`, and the sharded layout is the last one.
 
     ``docs_per_shard=None`` (default) resolves adaptively once the doc
     count is known (``indexer.auto_docs_per_shard``); the resolved size
@@ -152,10 +154,10 @@ def build_index_checkpointed(
     different shard size.  ``tokenizer_engine`` is part of the stage
     fingerprint (it rides in the tokenizer kwargs), so switching engines
     rebuilds rather than reusing the other engine's tokenized stage."""
-    spark = docs.sparkSession
-    tok_kwargs = dict(stopwords=stopwords, stemmer=stemmer, empty_fallback=empty_fallback)
-    if tokenizer_engine != "pandas":
-        tok_kwargs["engine"] = tokenizer_engine
+    from bm25s_spark.shards import build_sharded_postings
+
+    tok_kwargs = tokenizer_spec(stopwords, stemmer, empty_fallback,
+                                tokenizer_engine)
     fingerprint = json.dumps(
         {
             "corpus_tag": corpus_tag,
@@ -175,98 +177,16 @@ def build_index_checkpointed(
         },
         sort_keys=True,
     )
-    ck = Checkpointer(spark, checkpoint_dir, fingerprint)
-
-    def s_docs():
-        if doc_id_col is not None:
-            return docs.withColumn("doc_id", F.col(doc_id_col).cast("long"))
-        return assign_doc_ids(docs, order_cols)
-
-    base = ck.stage("doc_ids", s_docs)
-
-    # sql engine + stemmer: JVM scan over SURFACE tokens, stemming folds
-    # into a vocab-sized stage (indexer.stem_tf) after TF — mirrors
-    # build_index; the fingerprint already distinguishes the spec
-    sql_stem = tokenizer_engine == "sql" and stemmer is not None
-    if sql_stem:
-        udf = make_tokenizer_udf(**dict(tok_kwargs, stemmer=None))
-    else:
-        udf = make_tokenizer_udf(**tok_kwargs)
-
-    def s_tokenized():
-        return base.select(
-            "doc_id",
-            udf(F.col(text_col)).alias("tokens"),
-        ).select("doc_id", "tokens", F.size("tokens").alias("dl"))
-
-    tokenized = ck.stage(
-        "tokenized", s_tokenized,
-        metrics_fn=lambda rows: {"docs_tokenized": rows},
-    )
-    doc_lens = tokenized.select("doc_id", "dl")
-
-    agg = doc_lens.agg(
-        F.count(F.lit(1)).alias("n"), F.avg("dl").alias("avgdl"),
-        F.max("dl").alias("maxdl"),
-    ).collect()[0]
-    num_docs, avgdl = int(agg["n"]), float(agg["avgdl"] or 0.0)
-    if docs_per_shard is None:
-        from bm25s_spark.indexer import auto_docs_per_shard
-
-        docs_per_shard = auto_docs_per_shard(
-            num_docs, spark.sparkContext.defaultParallelism
-        )
-        sharded_stage = f"sharded_dps{docs_per_shard}"
-    else:
-        sharded_stage = "sharded"
-
-    def s_tf():
-        from bm25s_spark.indexer import narrow_tf, stem_tf
-
-        # max(dl) is already known from the stats agg: skip the megadoc
-        # union branch (double tokenized scan) when nothing needs it
-        t = narrow_tf(tokenized, max_doc_len=int(agg["maxdl"] or 0))
-        if sql_stem:
-            t = stem_tf(t, stemmer)
-        return t
-
-    tf = ck.stage("tf", s_tf)
-
-    def s_term_stats():
-        return corpus_term_stats(
-            spark, tf.groupBy("term").agg(F.count(F.lit(1)).alias("df")),
-        )
-
-    term_stats = ck.stage("term_stats", s_term_stats)
-
-    def s_postings():
-        return tf.join(term_stats, "term")
-
-    postings = ck.stage(
-        "postings", s_postings,
-        metrics_fn=lambda rows: {"postings_emitted": rows},
-    )
-
-    index = BM25Index(
-        spark=spark,
-        postings=postings,
-        term_stats=term_stats,
-        doc_lens=doc_lens,
-        doc_map=base.drop("tokens"),
-        num_docs=num_docs,
-        avg_doc_len=avgdl,
-        k1=k1, b=b, delta=delta,
-        tokenizer_kwargs=tok_kwargs,
+    ck = Checkpointer(docs.sparkSession, checkpoint_dir, fingerprint)
+    index = build_pipeline(
+        docs, doc_id_col, order_cols, True, dict(k1=k1, b=b, delta=delta),
+        tok_kwargs, text_col=text_col, stage=ck.stage,
         docs_per_shard=docs_per_shard,
     )
-
-    def s_sharded():
-        from bm25s_spark.shards import build_sharded_postings
-
-        return build_sharded_postings(index, docs_per_shard)
-
     index.sharded = ck.stage(
-        sharded_stage, s_sharded,
+        f"sharded_dps{index.docs_per_shard}" if docs_per_shard is None
+        else "sharded",
+        lambda: build_sharded_postings(index, index.docs_per_shard),
         metrics_fn=lambda rows: {"blocks_compressed": rows},
     )
     return index, ck

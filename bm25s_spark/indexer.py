@@ -18,9 +18,10 @@ from the postings and two per-term scalars taken from ``df``
 doc-sharded layout), so every ``method × idf_method`` combination is
 exact from one index and a merge only adds facts.
 
-The build is a pure DataFrame pipeline (SURVEY.md §3.1 lifecycle):
+The build is a pure DataFrame pipeline (SURVEY.md §3.1 lifecycle),
+:func:`build_pipeline`:
 
-1. tokenize (Arrow pandas UDF, narrow)
+1. doc ids, then tokenize (Arrow pandas UDF, narrow)
 2. TF per (doc, term) as a narrow per-row array computation — a doc's
    tokens sit in one row, so the per-doc ``Counter``
    (``reference/bm25s/scoring.py:238-243``) is array_distinct + filter
@@ -29,6 +30,11 @@ The build is a pure DataFrame pipeline (SURVEY.md §3.1 lifecycle):
    reducer's input at n_partitions rows per term — no skew)
    (reference: ``reference/bm25s/scoring.py:28-57``)
 4. join TF × term_stats (vocab-sized → broadcast/AQE) for term_id/df
+
+The corpus stats and steps 2–4 run in :func:`index_from_segments`, the
+one index constructor: every build (checkpointed or not), merge,
+compaction and incremental refresh hands it ``(doc_id, dl, term, tf)``
+rows and ``doc_lens``.
 
 ``k1/b/delta`` are pinned at index time like the reference
 (``reference/bm25s/__init__.py:144-152``); ``method``/``idf_method`` stay
@@ -296,69 +302,157 @@ def build_index(
     text queries.  Stemmer-less ``sql`` keeps both sides JVM and has no
     such asymmetry.
     """
-    spark = docs.sparkSession
-    tok_kwargs = dict(
-        stopwords=stopwords,
-        stemmer=stemmer,
-        empty_fallback=empty_fallback,
+    return build_pipeline(
+        docs, doc_id_col, order_cols, keep_doc_map,
+        dict(k1=k1, b=b, delta=delta),
+        tokenizer_spec(stopwords, stemmer, empty_fallback,
+                       tokenizer_engine, token_pattern),
+        text_col=text_col,
     )
+
+
+def tokenizer_spec(stopwords, stemmer: str | None, empty_fallback: bool,
+                   engine: str = "pandas",
+                   token_pattern: str | None = None) -> dict:
+    """The tokenizer spec an index carries for its queries."""
+    kw = dict(stopwords=stopwords, stemmer=stemmer,
+              empty_fallback=empty_fallback)
     if token_pattern is not None:
-        tok_kwargs["token_pattern"] = token_pattern
-    if tokenizer_engine != "pandas":
-        tok_kwargs["engine"] = tokenizer_engine
+        kw["token_pattern"] = token_pattern
+    if engine != "pandas":
+        kw["engine"] = engine
+    return kw
 
-    build_caches: list = []
-    if doc_id_col is not None:
-        base = docs.withColumn("doc_id", F.col(doc_id_col).cast("long"))
+
+def _persisting_stage(persisted: list):
+    """The stage hook without a checkpoint directory (the call shape of
+    ``checkpoint.Checkpointer.stage``): each stage is persisted at its
+    level below and recorded in ``persisted``, or stays lazy.
+    ``tokenized`` feeds three branches (stats, TF, DF), so the one
+    Python stage runs once; ``tf`` feeds the DF aggregation, the vocab
+    pull and the postings join, which would each re-run the narrow
+    explode (measured ~3× the per-pass cost on the bench build).  Both
+    are postings-sized, so MEMORY_AND_DISK spills at scale;
+    ``BM25Index.unpersist`` releases them with the index."""
+    levels = {"tokenized": StorageLevel.MEMORY_AND_DISK,
+              "tf": StorageLevel.MEMORY_AND_DISK,
+              "term_stats": StorageLevel.MEMORY_AND_DISK_DESER}
+
+    def stage(name, produce, metrics_fn=None):
+        df = produce()
+        if name in levels:
+            df = df.persist(levels[name])
+            persisted.append(df)
+        return df
+
+    return stage
+
+
+def build_pipeline(
+    docs: DataFrame,
+    doc_id_col: str | None,
+    order_cols: list[str] | None,
+    keep_doc_map: bool,
+    params: dict,
+    tok_kwargs: dict,
+    text_col: str | None = None,
+    tokens_col: str | None = None,
+    stage=None,
+    docs_per_shard: int | None = None,
+) -> BM25Index:
+    """doc ids → tokenize → corpus stats → tf → [stem fold] → term stats
+    → postings, the build of :func:`build_index`,
+    :func:`build_index_from_tokens` and
+    ``checkpoint.build_index_checkpointed`` (``stage`` =
+    ``Checkpointer.stage``; None persists in memory).  Tokens come from
+    ``text_col`` under ``tok_kwargs``, or verbatim from ``tokens_col``;
+    ``params`` holds k1, b and delta."""
+    persisted: list = []
+    stage = stage or _persisting_stage(persisted)
+
+    def s_doc_ids():
+        if doc_id_col is not None:
+            return docs.withColumn("doc_id", F.col(doc_id_col).cast("long"))
+        return assign_doc_ids(docs, order_cols, persisted_out=persisted)
+
+    base = stage("doc_ids", s_doc_ids)
+    stem_with = None
+    if tokens_col is not None:
+        tokens = F.col(tokens_col)
+        doc_map = base.drop(tokens_col)
     else:
-        base = assign_doc_ids(docs, order_cols, persisted_out=build_caches)
+        spec = tok_kwargs
+        if tok_kwargs.get("engine") == "sql" \
+                and tok_kwargs["stemmer"] is not None:
+            # JVM scan over SURFACE tokens; the stemmer spec stays in
+            # tok_kwargs (query side) and folds into the TF (stem_tf)
+            stem_with = tok_kwargs["stemmer"]
+            spec = dict(tok_kwargs, stemmer=None)
+        tokens = make_tokenizer_udf(**spec)(F.col(text_col))
+        doc_map = base
+    tokenized = stage(
+        "tokenized",
+        lambda: base.select("doc_id", tokens.alias("tokens")).select(
+            "doc_id", "tokens", F.size("tokens").alias("dl")),
+        lambda rows: {"docs_tokenized": rows},
+    )
 
-    sql_stem = tokenizer_engine == "sql" and stemmer is not None
-    if sql_stem:
-        # JVM scan over SURFACE tokens; the stemmer spec stays in
-        # tok_kwargs (query side + stem_tf fold), but never in the scan
-        udf = make_tokenizer_udf(**dict(tok_kwargs, stemmer=None))
-    else:
-        udf = make_tokenizer_udf(**tok_kwargs)
-    # persist: tokenization (the one Python stage) must run exactly once
-    # even though three downstream branches (stats, TF, DF) consume it;
-    # the checkpointed builder materializes this stage as a table instead
-    from pyspark.storagelevel import StorageLevel
+    def segments(max_dl: int) -> DataFrame:
+        tf = narrow_tf(tokenized, max_doc_len=max_dl)
+        if stem_with is None:
+            return tf
+        # ``dl`` is stem-invariant; the surface-form TF is consumed twice
+        # by the fold (the distinct-term mapping and the re-aggregation
+        # join), so it is cached and the explode runs once
+        tf = tf.persist(StorageLevel.MEMORY_AND_DISK)
+        persisted.append(tf)
+        return stem_tf(tf, stem_with)
 
-    tokenized = base.select(
-        "doc_id", udf(F.col(text_col)).alias("tokens")
-    ).persist(StorageLevel.MEMORY_AND_DISK)
-
-    doc_map = base if keep_doc_map else None
-    return _index_from_tokenized(
-        spark, tokenized, doc_map, k1, b, delta, tok_kwargs,
-        stem_with=stemmer if sql_stem else None,
-        aux_persisted=build_caches,
+    return index_from_segments(
+        segments, tokenized.select("doc_id", "dl").persist(),
+        doc_map if keep_doc_map else None, **params,
+        tokenizer_kwargs=tok_kwargs, stage=stage, persisted=persisted,
+        docs_per_shard=docs_per_shard,
     )
 
 
-def _index_from_tokenized(
-    spark: SparkSession,
-    tokenized: DataFrame,
+def index_from_segments(
+    segments,
+    doc_lens: DataFrame,
     doc_map: DataFrame | None,
     k1: float,
     b: float,
     delta: float,
-    tok_kwargs: dict,
-    stem_with=None,
-    aux_persisted: list | None = None,
+    tokenizer_kwargs: dict | None,
+    dfreq: DataFrame | None = None,
+    stage=None,
+    persisted: list | None = None,
+    docs_per_shard: int | None = None,
+    pools_from: tuple = (),
 ) -> BM25Index:
-    """Shared back half of the build: (doc_id, tokens) → BM25Index.
+    """The one index constructor: ``(doc_id, dl, term, tf)`` segments
+    plus ``doc_lens`` → the index, with its term dictionary.
 
-    ``stem_with``: stemmer spec when ``tokenized`` carries SURFACE
-    tokens that still need the vocab-sized stemming fold
-    (:func:`stem_tf` — the ``tokenizer_engine="sql"`` + stemmer path).
-    ``dl`` and the corpus scalars are stem-invariant, so they are
-    computed before the fold."""
-    doc_lens = tokenized.select(
-        "doc_id", F.size("tokens").alias("dl")
-    ).persist()
-
+    ``segments`` is the rows, or a function of the corpus's longest doc
+    length that returns them (the build's :func:`narrow_tf` skips its
+    megadoc branch with it).  ``dfreq`` (term, df), when given, skips
+    the posting-sized DF aggregation (:func:`merge_indexes` sums its
+    sides' vocab-sized df).  ``stage`` is the stage hook for ``tf``,
+    ``term_stats`` and ``postings``; None persists them in memory, and
+    ``persisted`` lists frames already cached for the index.  A pad pool
+    one of ``pools_from`` has served becomes this index's when
+    ``doc_lens`` holds no other doc id at or below its largest (the
+    append pattern); that check is a conditional count in the
+    corpus-stats aggregation, so it adds no job."""
+    spark = doc_lens.sparkSession
+    persisted = [] if persisted is None else persisted
+    stage = stage or _persisting_stage(persisted)
+    pools = [
+        (key, pool) for idx in pools_from
+        for key, (source, pool) in idx.driver_cache.items()
+        if isinstance(key, tuple) and key[0] == PAD_POOL
+        and source is idx.doc_lens and len(pool) == 2 * key[1]
+    ]
     # one tiny action for the global scalars (reference does the same
     # single pass for avg_doc_len, reference/bm25s/__init__.py:357);
     # max(dl) rides along for free and lets narrow_tf skip the megadoc
@@ -366,35 +460,16 @@ def _index_from_tokenized(
     agg = doc_lens.agg(
         F.count(F.lit(1)).alias("n"), F.avg("dl").alias("avgdl"),
         F.max("dl").alias("maxdl"),
+        *[F.count(F.when(F.col("doc_id") <= int(pool.max()), 1))
+          .alias(f"_pool{j}") for j, (_, pool) in enumerate(pools)],
     ).collect()[0]
-    num_docs, avgdl = int(agg["n"]), float(agg["avgdl"] or 0.0)
-
-    tf = narrow_tf(tokenized, max_doc_len=int(agg["maxdl"] or 0))
-    aux = list(aux_persisted or [])
-    aux.append(tokenized)
-    if stem_with is not None:
-        # the surface-form TF is consumed twice by the fold (distinct-term
-        # mapping + the re-aggregation join) — cache it so the explode
-        # runs once
-        tf = tf.persist(StorageLevel.MEMORY_AND_DISK)
-        aux.append(tf)
-        tf = stem_tf(tf, stem_with)
-    return _index_from_tf(
-        spark, tf, doc_lens, doc_map, num_docs, avgdl, k1, b, delta,
-        tok_kwargs, aux_persisted=aux,
-    )
-
-
-def corpus_term_stats(
-    spark: SparkSession,
-    dfreq: DataFrame,
-    persisted_out: list | None = None,
-    localized_out: list | None = None,
-) -> DataFrame:
-    """(term, df) → ``term_stats`` (term, term_id, df): the vocabulary
-    with the empty-token patch and dense term ids.  When the ids are
-    assigned on the driver, the (term, df, term_id) frame is appended to
-    ``localized_out`` (when given)."""
+    num_docs = int(agg["n"])
+    tf = stage("tf", lambda: segments(int(agg["maxdl"] or 0))
+               if callable(segments) else segments)
+    # DF per term: reference/bm25s/scoring.py:28-57 — map-side partial
+    # aggregation bounds the shuffle at one row per term per partition
+    if dfreq is None:
+        dfreq = tf.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
     # vocab with the empty-token patch (reference/bm25s/__init__.py:562-564):
     # "" joins the vocab (df=0 → contributes nothing, but OOV lookups hit it)
     empty_row = spark.range(1).select(
@@ -410,54 +485,15 @@ def corpus_term_stats(
     # VOCAB_LOCALIZE_MAX terms (one bounded Arrow pull + a pandas sort →
     # pure-JVM local relation) instead of the 3-job range-partitioner
     # path; web-scale vocabularies past the cap stay distributed
-    return assign_dense_ids(vocab, ["term"], "term_id",
-                            persisted_out=persisted_out,
-                            localize_max=VOCAB_LOCALIZE_MAX,
-                            localized_out=localized_out,
-                            ).select("term", "term_id", "df")
-
-
-def _index_from_tf(
-    spark: SparkSession,
-    tf: DataFrame,
-    doc_lens: DataFrame,
-    doc_map: DataFrame | None,
-    num_docs: int,
-    avgdl: float,
-    k1: float,
-    b: float,
-    delta: float,
-    tok_kwargs: dict,
-    dfreq: DataFrame | None = None,
-    aux_persisted: list | None = None,
-) -> BM25Index:
-    """(doc_id, dl, term, tf) rows → the eager index tables.
-
-    ``dfreq`` (term, df), when given, skips the posting-sized DF
-    aggregation — :func:`merge_indexes` passes the vocab-sized sum of
-    the sides' document frequencies instead."""
-    # cache the TF table: it is consumed by THREE separate jobs (the
-    # vocab range-partitioner's sample, the vocab id-assignment
-    # materialization, and the final postings join) — without the cache
-    # each of those re-runs the narrow explode over the whole corpus
-    # (measured ~3× the per-pass cost on the bench build).  Postings-
-    # sized but compact (4 narrow columns); MEMORY_AND_DISK spills at
-    # scale, and unpersist() releases it with the index.
-    tf = tf.persist(StorageLevel.MEMORY_AND_DISK)
-    aux_persisted = list(aux_persisted or [])
-    aux_persisted.append(tf)
-    # DF per term: reference/bm25s/scoring.py:28-57 — map-side partial
-    # aggregation bounds the shuffle at one row per term per partition
-    if dfreq is None:
-        dfreq = tf.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
-
     vocab_local: list = []
-    term_stats = corpus_term_stats(
-        spark, dfreq, persisted_out=aux_persisted, localized_out=vocab_local,
-    ).persist()
+    term_stats = stage("term_stats", lambda: assign_dense_ids(
+        vocab, ["term"], "term_id", persisted_out=persisted,
+        localize_max=VOCAB_LOCALIZE_MAX, localized_out=vocab_local,
+    ).select("term", "term_id", "df"))
     # term_stats is vocab-sized → broadcast when small; Catalyst/AQE
     # picks the strategy
-    postings = tf.join(term_stats, "term")
+    postings = stage("postings", lambda: tf.join(term_stats, "term"),
+                     lambda rows: {"postings_emitted": rows})
 
     index = BM25Index(
         spark=spark,
@@ -466,15 +502,15 @@ def _index_from_tf(
         doc_lens=doc_lens,
         doc_map=doc_map,
         num_docs=num_docs,
-        avg_doc_len=avgdl,
+        avg_doc_len=float(agg["avgdl"] or 0.0),
         k1=k1,
         b=b,
         delta=delta,
-        tokenizer_kwargs=tok_kwargs,
+        tokenizer_kwargs=dict(tokenizer_kwargs or {}),
         docs_per_shard=auto_docs_per_shard(
             num_docs, spark.sparkContext.defaultParallelism
-        ),
-        aux_persisted=aux_persisted,
+        ) if docs_per_shard is None else docs_per_shard,
+        aux_persisted=persisted,
     )
     if vocab_local:
         # the ids were numbered on the driver: that frame is already the
@@ -482,6 +518,9 @@ def _index_from_tf(
         index.driver_cache[TERM_DICT] = (
             term_stats, vocab_local[0][["term", "df"]].set_index("term"),
         )
+    for j, (key, pool) in enumerate(pools):
+        if agg[f"_pool{j}"] == len(pool):
+            index.driver_cache[key] = (doc_lens, pool)
     return index
 
 
@@ -508,18 +547,10 @@ def build_index_from_tokens(
     at retrieve time (defaults to the standard config); pass the config
     that produced the corpus tokens for consistent retrieval.
     """
-    spark = docs.sparkSession
-    if doc_id_col is not None:
-        base = docs.withColumn("doc_id", F.col(doc_id_col).cast("long"))
-    else:
-        base = assign_doc_ids(docs, order_cols)
-    tokenized = base.select(
-        "doc_id", F.col(tokens_col).alias("tokens")
-    ).persist()
-    doc_map = base.drop(tokens_col) if keep_doc_map else None
-    return _index_from_tokenized(
-        spark, tokenized, doc_map, k1, b, delta,
-        dict(query_tokenizer_kwargs or {}),
+    return build_pipeline(
+        docs, doc_id_col, order_cols, keep_doc_map,
+        dict(k1=k1, b=b, delta=delta), dict(query_tokenizer_kwargs or {}),
+        tokens_col=tokens_col,
     )
 
 
@@ -543,17 +574,11 @@ def build_index_from_token_ids(
     bounded by per-doc distinct terms) and the vocab join is vocab-sized
     (broadcast), so no token-array rebuild is needed.
     """
-    spark = ids_df.sparkSession
     if doc_id_col is not None:
         base = ids_df.withColumn("doc_id", F.col(doc_id_col).cast("long"))
     else:
         base = assign_doc_ids(ids_df, order_cols)
     base = base.persist()
-    doc_lens = base.select("doc_id", F.size(ids_col).alias("dl")).persist()
-    agg = doc_lens.agg(
-        F.count(F.lit(1)).alias("n"), F.avg("dl").alias("avgdl")
-    ).collect()[0]
-    num_docs, avgdl = int(agg["n"]), float(agg["avgdl"] or 0.0)
     tf = (
         base.select(
             "doc_id", F.size(ids_col).alias("dl"),
@@ -569,10 +594,10 @@ def build_index_from_token_ids(
         )
         .select("doc_id", "dl", "term", "tf")
     )
-    doc_map = base.drop(ids_col) if keep_doc_map else None
-    return _index_from_tf(
-        spark, tf, doc_lens, doc_map, num_docs, avgdl, k1, b, delta,
-        dict(query_tokenizer_kwargs or {}),
+    return index_from_segments(
+        tf, base.select("doc_id", F.size(ids_col).alias("dl")).persist(),
+        base.drop(ids_col) if keep_doc_map else None, k1, b, delta,
+        query_tokenizer_kwargs,
     )
 
 
@@ -639,7 +664,6 @@ def merge_indexes(
                 "ambiguous"
             )
 
-    spark = head.spark
     from functools import reduce
 
     doc_lens = reduce(
@@ -658,23 +682,6 @@ def merge_indexes(
                 f"doc_id {clash[0]['doc_id']} appears in more than one "
                 "index; merge_indexes requires disjoint doc-id sets"
             )
-
-    # a pad pool an input has served is the merged index's pool too when
-    # the union holds no other doc id at or below its largest (the
-    # append pattern: new ids continue past the old ones) — counted in
-    # the same aggregation, so a merge never leaves a pool to re-pull
-    pools = [
-        (key, pool) for idx in indexes
-        for key, (source, pool) in idx.driver_cache.items()
-        if isinstance(key, tuple) and key[0] == PAD_POOL
-        and source is idx.doc_lens and len(pool) == 2 * key[1]
-    ]
-    agg = doc_lens.agg(
-        F.count(F.lit(1)).alias("n"), F.avg("dl").alias("avgdl"),
-        *[F.count(F.when(F.col("doc_id") <= int(pool.max()), 1))
-          .alias(f"_pool{j}") for j, (_, pool) in enumerate(pools)],
-    ).collect()[0]
-    num_docs, avgdl = int(agg["n"]), float(agg["avgdl"] or 0.0)
 
     tf = reduce(
         lambda a, b: a.unionByName(b),
@@ -695,15 +702,10 @@ def merge_indexes(
     ):
         doc_map = reduce(lambda a, b: a.unionByName(b), doc_maps)
 
-    merged = _index_from_tf(
-        spark, tf, doc_lens, doc_map, num_docs, avgdl,
-        head.k1, head.b, head.delta, dict(head.tokenizer_kwargs),
-        dfreq=dfreq,
+    return index_from_segments(
+        tf, doc_lens, doc_map, head.k1, head.b, head.delta,
+        head.tokenizer_kwargs, dfreq=dfreq, pools_from=indexes,
     )
-    for j, (key, pool) in enumerate(pools):
-        if agg[f"_pool{j}"] == len(pool):
-            merged.driver_cache[key] = (doc_lens, pool)
-    return merged
 
 
 class SparkBM25:

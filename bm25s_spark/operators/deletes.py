@@ -33,7 +33,7 @@ from dataclasses import replace
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from bm25s_spark.indexer import BM25Index, _index_from_tf
+from bm25s_spark.indexer import BM25Index, index_from_segments
 
 
 def _tombstone_set(tombstones_df: DataFrame, doc_id_col: str,
@@ -92,11 +92,12 @@ def compact_index(
     view (its postings/doc_lens are already filtered).  Doc ids are
     preserved: compaction changes statistics, not identity.  The
     vocabulary (including the ``""`` patch), df and dense term ids are
-    re-derived by the same ``_index_from_tf`` back half the build uses,
-    so compacted and freshly-built indexes cannot drift.  A
-    reference-format import (``compat.import_bm25s``) has no real
-    (tf, dl) to re-derive from and raises ``ValueError``; its
-    :func:`with_tombstones` view still serves queries.
+    re-derived by the one index constructor every build uses
+    (``indexer.index_from_segments``), so compacted and freshly-built
+    indexes cannot drift.  A reference-format import
+    (``compat.import_bm25s``) has no real (tf, dl) to re-derive from and
+    raises ``ValueError``; its :func:`with_tombstones` view still serves
+    queries.
     """
     if index.compat_import is not None:
         raise ValueError(
@@ -108,13 +109,7 @@ def compact_index(
         with_tombstones(index, tombstones_df, doc_id_col, broadcast)
         if tombstones_df is not None else index
     )
-    doc_lens = live.doc_lens
-    agg = doc_lens.agg(
-        F.count(F.lit(1)).alias("n"), F.avg("dl").alias("avgdl")
-    ).collect()[0]
-    num_docs, avgdl = int(agg["n"]), float(agg["avgdl"] or 0.0)
-    tf = live.postings.select("doc_id", "dl", "term", "tf")
-    return _index_from_tf(
-        index.spark, tf, doc_lens, live.doc_map, num_docs, avgdl,
-        index.k1, index.b, index.delta, index.tokenizer_kwargs,
+    return index_from_segments(
+        live.postings.select("doc_id", "dl", "term", "tf"), live.doc_lens,
+        live.doc_map, index.k1, index.b, index.delta, index.tokenizer_kwargs,
     )

@@ -9,11 +9,13 @@ to the postings/doc_lens tables; the vocab table grows (or not)
 according to ``update_vocab``.
 
 Statistics: BM25 scores depend on the global ``avg_doc_len``/``df``/
-``num_docs``, so appended postings store only (tf, dl) and
-:meth:`IncrementalIndexer.to_index` derives the statistics of
-everything ingested so far; queries compute impacts from them, so no
-stored value goes stale.  The reference's index is immutable after
-``index()`` (SURVEY.md §7 hard-part 5).
+``num_docs``, so appended postings store only (tf, dl).
+:meth:`IncrementalIndexer.to_index` hands the raw postings — already
+the ``(doc_id, dl, term, tf)`` segment shape — to the one index
+constructor every build uses (``indexer.index_from_segments``), which
+derives the statistics of everything ingested so far; queries compute
+impacts from them, so no stored value goes stale.  The reference's
+index is immutable after ``index()`` (SURVEY.md §7 hard-part 5).
 """
 
 from __future__ import annotations
@@ -23,6 +25,9 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from bm25s_spark.ids import assign_dense_ids
+from bm25s_spark.indexer import index_from_segments, narrow_tf
+from bm25s_spark.scoring import DEFAULT_B, DEFAULT_DELTA, DEFAULT_K1
 from bm25s_spark.tokenization import make_tokenizer_udf
 
 
@@ -71,16 +76,12 @@ class IncrementalIndexer:
     def process_batch(self, batch_df: DataFrame, batch_id: int = 0) -> None:
         """foreachBatch sink: tokenize, id-assign past the high-water
         mark, append postings/doc_lens, maintain vocab per update_vocab."""
-        from bm25s_spark.ids import assign_dense_ids
-
         base = assign_dense_ids(batch_df, ["conv_id", "turn_idx"], "_rank")
         offset = self._high_water()
         toks = base.select(
             (F.col("_rank") + offset).alias("doc_id"),
             self._udf(F.col("text")).alias("tokens"),
         ).withColumn("dl", F.size("tokens")).persist()
-
-        from bm25s_spark.indexer import narrow_tf
 
         known_vocab = self.vocab()
         # one tiny agg on the persisted batch: lets narrow_tf skip the
@@ -119,32 +120,12 @@ class IncrementalIndexer:
         return writer.start()
 
     # finalize ---------------------------------------------------------
-    def to_index(self, k1: float = 1.5, b: float = 0.75, delta: float = 0.5):
+    def to_index(self, k1: float = DEFAULT_K1, b: float = DEFAULT_B,
+                 delta: float = DEFAULT_DELTA):
         """The accumulated raw postings under the *current* global
         stats → a queryable BM25Index (the epoch-refresh pass)."""
-        from bm25s_spark.indexer import (
-            BM25Index, auto_docs_per_shard, corpus_term_stats,
-        )
-
-        spark = self.spark
-        doc_lens = spark.read.parquet(self._p("doc_lens"))
-        agg = doc_lens.agg(
-            F.count(F.lit(1)).alias("n"), F.avg("dl").alias("avgdl")
-        ).collect()[0]
-        num_docs, avgdl = int(agg["n"]), float(agg["avgdl"] or 0.0)
-        tf = spark.read.parquet(self._p("raw_postings"))
-        term_stats = corpus_term_stats(
-            spark, tf.groupBy("term").agg(F.count(F.lit(1)).alias("df")),
-        )
-        postings = tf.join(term_stats, "term")
-
-        return BM25Index(
-            spark=spark, postings=postings, term_stats=term_stats,
-            doc_lens=doc_lens, doc_map=None,
-            num_docs=num_docs, avg_doc_len=avgdl,
-            k1=k1, b=b, delta=delta,
-            tokenizer_kwargs=self.tokenizer_kwargs,
-            docs_per_shard=auto_docs_per_shard(
-                num_docs, spark.sparkContext.defaultParallelism
-            ),
+        read = self.spark.read.parquet
+        return index_from_segments(
+            read(self._p("raw_postings")), read(self._p("doc_lens")), None,
+            k1, b, delta, self.tokenizer_kwargs,
         )

@@ -7,7 +7,6 @@ strategies).  Run: python scripts/explain_plans.py [out_path]
 from __future__ import annotations
 
 import contextlib
-import io
 import os
 import sys
 
@@ -15,10 +14,31 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
 def _formatted(df) -> str:
-    buf = io.StringIO()
-    with contextlib.redirect_stdout(buf):
-        df.explain("formatted")
-    return buf.getvalue()
+    """What ``df.explain("formatted")`` prints, read without redirecting
+    stdout (a chunked retrieval runs its chunks on several threads)."""
+    return df._sc._jvm.PythonSQLUtils.explainString(
+        df._jdf.queryExecution(), "formatted"
+    )
+
+
+@contextlib.contextmanager
+def _executed(cls, action: str):
+    """Collect the formatted plan of every DataFrame on which ``action``
+    (``toPandas``, ``localCheckpoint``) runs inside the block: a sharded
+    retrieval executes its plans inside the call, so the DataFrame it
+    returns shows only their result."""
+    plans: list[str] = []
+    orig = getattr(cls, action)
+
+    def spy(self, *args, **kw):
+        plans.append(_formatted(self))
+        return orig(self, *args, **kw)
+
+    setattr(cls, action, spy)
+    try:
+        yield plans
+    finally:
+        setattr(cls, action, orig)
 
 
 def main():
@@ -44,16 +64,26 @@ def main():
     )
 
     sections.append((
-        "index build (flat postings: tokenize → TF/DF → impacts)",
+        "index build (flat postings: tokenize → TF → DF and term ids → postings join)",
         _formatted(idx.postings),
     ))
     sections.append((
         "top-k retrieval, join strategy (broadcast query terms → hash agg → window)",
         _formatted(idx.retrieve(qdf, k=5, pad=False)),
     ))
+    frame = type(qdf)
+    with _executed(frame, "toPandas") as pulls:
+        idx.retrieve(qdf, k=5, strategy="sharded", pad=False)
     sections.append((
-        "top-k retrieval, sharded strategy (semi-join prune → mapInPandas kernel → mapInPandas final merge)",
-        _formatted(idx.retrieve(qdf, k=5, strategy="sharded", pad=False)),
+        "top-k retrieval, sharded strategy, bounded batch: the in-process layout pull (array_contains term filter on the cached layout → toPandas; the driver scores and merges)",
+        pulls[-1],
+    ))
+    with _executed(frame, "localCheckpoint") as chunks:
+        idx.retrieve(qdf, k=5, strategy="sharded", pad=False,
+                     query_chunk_size=1)
+    sections.append((
+        "top-k retrieval, sharded strategy, batch above query_chunk_size: one chunk (semi-join prune → range exchange → mapInPandas kernel → q_idx exchange → mapInPandas merge)",
+        chunks[0],
     ))
 
     # saved-index scan: term-lookup against the term-sorted layout should
@@ -66,9 +96,11 @@ def main():
         _formatted(terms.where(F.col("term") == "spark").select("term", "doc_ids")),
     ))
     loaded = load_index(spark, os.path.join(d, "ix"))
+    with _executed(frame, "toPandas") as pulls:
+        loaded.retrieve(qdf, k=5, strategy="sharded", pad=False)
     sections.append((
-        "loaded sharded postings scan for query path (expect partition/batch scan, no Python until the kernel)",
-        _formatted(loaded.retrieve(qdf, k=5, strategy="sharded", pad=False)),
+        "loaded sharded postings: the bounded batch's layout pull (expect a parquet scan with the term filter, no Python)",
+        pulls[-1],
     ))
 
     from bm25s_spark.operators.coverage import query_coverage

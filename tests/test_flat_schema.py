@@ -115,6 +115,15 @@ def test_constructor_flat_schema(spark, docs, tmp_path, name):
     assert idx.postings.columns == POSTINGS_COLS, name
     assert idx.term_stats.columns == TERM_STATS_COLS, name
     assert idx.postings.count() > 0
+    if name != "load_index":
+        # a fresh index carries its term dictionary, equal to a pull of
+        # its term_stats, so its first query does not pull it again
+        from bm25s_spark.indexer import TERM_DICT
+
+        source, vocab = idx.driver_cache[TERM_DICT]
+        pulled = idx.term_stats.select("term", "df").toPandas()
+        assert source is idx.term_stats and vocab.sort_index().equals(
+            pulled.set_index("term").sort_index()), name
 
 
 @pytest.mark.parametrize("method", ["lucene", "bm25l"])

@@ -238,3 +238,42 @@ def test_merge_carries_query_caches(spark, merge_setup):
     assert_rank_identical(merged_rows, *rows_to_arrays(full_rows), atol=1e-4)
     for idx in (base, delta, merged):
         idx.unpersist()
+
+
+def _jobs_in_group(spark, group, fn):
+    sc = spark.sparkContext
+    sc.setJobGroup(group, "job budget")
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_build_and_merge_job_budget(spark, merge_setup):
+    """A warm ``build_index`` and a warm ``merge_indexes`` run no more
+    Spark jobs than when each constructor ran its own stats and term
+    stats: 5 jobs for the build of 1,500 docs with given doc ids and 7
+    for the merge with a 500-doc delta, measured in this test session
+    on a 4-core host.  The first build and merge of a session can run
+    more, so both run once before the counted pass."""
+    docs = merge_setup[0]
+
+    def build(lo, hi):
+        return build_index(
+            docs.where((F.col("doc_id") >= lo) & (F.col("doc_id") < hi)),
+            doc_id_col="doc_id")
+
+    built = []
+    for attempt in ("warm", "counted"):
+        base, build_jobs = _jobs_in_group(
+            spark, f"build-{attempt}", lambda: build(0, 1500))
+        delta = build(1500, 2000)
+        merged, merge_jobs = _jobs_in_group(
+            spark, f"merge-{attempt}", lambda: merge_indexes(base, delta))
+        built += [base, delta, merged]
+    assert merged.num_docs == 2000
+    assert 0 < build_jobs <= 5, build_jobs
+    assert 0 < merge_jobs <= 7, merge_jobs
+    for idx in built:
+        idx.unpersist()
