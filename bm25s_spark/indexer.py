@@ -52,6 +52,7 @@ from pyspark.storagelevel import StorageLevel
 from bm25s_spark.ids import assign_dense_ids, assign_doc_ids
 from bm25s_spark.scoring import DEFAULT_B, DEFAULT_DELTA, DEFAULT_K1, METHODS
 from bm25s_spark.tokenization import make_tokenizer_udf
+from bm25s_spark.util import cut_lineage, is_cut, release
 
 
 # docs_per_shard clamp for auto_docs_per_shard: the cap keeps the query
@@ -126,18 +127,26 @@ class BM25Index:
     # ``dataclasses.replace`` view starts empty
     driver_cache: dict = field(default_factory=dict, init=False,
                                repr=False, compare=False)
+    # (postings, the lineage-cut (doc_id, dl, term, tf) rows they join
+    # to term_stats): a merge or compaction reads the rows while those
+    # postings are still the index's.  A ``dataclasses.replace`` view
+    # starts without them
+    segments: tuple | None = field(default=None, init=False, repr=False,
+                                   compare=False)
 
     def persist(self) -> "BM25Index":
-        self.postings = self.postings.persist()
-        self.term_stats = self.term_stats.persist()
-        self.doc_lens = self.doc_lens.persist()
+        # a checkpointed table is stored by its first scan already
+        for name in ("postings", "term_stats", "doc_lens"):
+            df = getattr(self, name)
+            if not is_cut(df):
+                setattr(self, name, df.persist())
         return self
 
     def unpersist(self) -> None:
         for df in (self.postings, self.term_stats, self.doc_lens,
                    *self.aux_persisted):
             try:
-                df.unpersist()
+                release(df)
             except Exception:
                 pass
         self.driver_cache.clear()
@@ -327,22 +336,27 @@ def tokenizer_spec(stopwords, stemmer: str | None, empty_fallback: bool,
 def _persisting_stage(persisted: list):
     """The stage hook without a checkpoint directory (the call shape of
     ``checkpoint.Checkpointer.stage``): each stage is persisted at its
-    level below and recorded in ``persisted``, or stays lazy.
-    ``tokenized`` feeds three branches (stats, TF, DF), so the one
-    Python stage runs once; ``tf`` feeds the DF aggregation, the vocab
-    pull and the postings join, which would each re-run the narrow
-    explode (measured ~3× the per-pass cost on the bench build).  Both
-    are postings-sized, so MEMORY_AND_DISK spills at scale;
+    level below, or cut (``util.cut_lineage``), and recorded in
+    ``persisted``, or stays lazy.  ``tokenized`` feeds three branches
+    (stats, TF, DF), so the one Python stage runs once; ``tf`` feeds the
+    DF aggregation, the vocab pull and the postings join, which would
+    each re-run the narrow explode (measured ~3× the per-pass cost on
+    the bench build), and every later job over the postings and every
+    later merge, which would otherwise walk every earlier build, so it
+    is cut.  Both are postings-sized and spill to disk at scale;
     ``BM25Index.unpersist`` releases them with the index."""
     levels = {"tokenized": StorageLevel.MEMORY_AND_DISK,
-              "tf": StorageLevel.MEMORY_AND_DISK,
               "term_stats": StorageLevel.MEMORY_AND_DISK_DESER}
 
     def stage(name, produce, metrics_fn=None):
         df = produce()
-        if name in levels:
+        if name == "tf":
+            df = cut_lineage(df)
+        elif name in levels:
             df = df.persist(levels[name])
-            persisted.append(df)
+        else:
+            return df
+        persisted.append(df)
         return df
 
     return stage
@@ -368,14 +382,14 @@ def build_pipeline(
     ``text_col`` under ``tok_kwargs``, or verbatim from ``tokens_col``;
     ``params`` holds k1, b and delta."""
     persisted: list = []
-    stage = stage or _persisting_stage(persisted)
+    hook = stage or _persisting_stage(persisted)
 
     def s_doc_ids():
         if doc_id_col is not None:
             return docs.withColumn("doc_id", F.col(doc_id_col).cast("long"))
         return assign_doc_ids(docs, order_cols, persisted_out=persisted)
 
-    base = stage("doc_ids", s_doc_ids)
+    base = hook("doc_ids", s_doc_ids)
     stem_with = None
     if tokens_col is not None:
         tokens = F.col(tokens_col)
@@ -390,7 +404,7 @@ def build_pipeline(
             spec = dict(tok_kwargs, stemmer=None)
         tokens = make_tokenizer_udf(**spec)(F.col(text_col))
         doc_map = base
-    tokenized = stage(
+    tokenized = hook(
         "tokenized",
         lambda: base.select("doc_id", tokens.alias("tokens")).select(
             "doc_id", "tokens", F.size("tokens").alias("dl")),
@@ -409,7 +423,7 @@ def build_pipeline(
         return stem_tf(tf, stem_with)
 
     return index_from_segments(
-        segments, tokenized.select("doc_id", "dl").persist(),
+        segments, tokenized.select("doc_id", "dl"),
         doc_map if keep_doc_map else None, **params,
         tokenizer_kwargs=tok_kwargs, stage=stage, persisted=persisted,
         docs_per_shard=docs_per_shard,
@@ -424,29 +438,38 @@ def index_from_segments(
     b: float,
     delta: float,
     tokenizer_kwargs: dict | None,
-    dfreq: DataFrame | None = None,
     stage=None,
     persisted: list | None = None,
     docs_per_shard: int | None = None,
     pools_from: tuple = (),
+    check_disjoint: bool = False,
 ) -> BM25Index:
     """The one index constructor: ``(doc_id, dl, term, tf)`` segments
     plus ``doc_lens`` → the index, with its term dictionary.
 
     ``segments`` is the rows, or a function of the corpus's longest doc
     length that returns them (the build's :func:`narrow_tf` skips its
-    megadoc branch with it).  ``dfreq`` (term, df), when given, skips
-    the posting-sized DF aggregation (:func:`merge_indexes` sums its
-    sides' vocab-sized df).  ``stage`` is the stage hook for ``tf``,
-    ``term_stats`` and ``postings``; None persists them in memory, and
-    ``persisted`` lists frames already cached for the index.  A pad pool
-    one of ``pools_from`` has served becomes this index's when
-    ``doc_lens`` holds no other doc id at or below its largest (the
-    append pattern); that check is a conditional count in the
-    corpus-stats aggregation, so it adds no job."""
+    megadoc branch with it).  ``stage`` is the stage hook for ``tf``,
+    ``term_stats`` and ``postings``, and ``persisted`` lists frames
+    already cached for the index.  With ``stage=None`` the index is
+    built in memory and comes back with its lineage cut: ``doc_lens``
+    and the ``tf`` rows are cut (``util.cut_lineage``), and the
+    corpus-stats and DF aggregations, their first full scans, store
+    them.  So no job is added, and once this returns no job, merge or
+    layout over the index reads the frames they came from.  Pass them
+    unpersisted.  A pad pool one of ``pools_from`` has served becomes
+    this index's when ``doc_lens`` holds no other doc id at or below its
+    largest (the append pattern), and ``check_disjoint`` raises
+    ``ValueError`` on a doc id ``doc_lens`` holds twice; both checks
+    are counts in the corpus-stats aggregation, so they add no job
+    while they pass."""
     spark = doc_lens.sparkSession
     persisted = [] if persisted is None else persisted
-    stage = stage or _persisting_stage(persisted)
+    if stage is None:
+        stage = _persisting_stage(persisted)
+        doc_lens = cut_lineage(doc_lens)
+    else:
+        doc_lens = doc_lens.persist()
     pools = [
         (key, pool) for idx in pools_from
         for key, (source, pool) in idx.driver_cache.items()
@@ -460,16 +483,29 @@ def index_from_segments(
     agg = doc_lens.agg(
         F.count(F.lit(1)).alias("n"), F.avg("dl").alias("avgdl"),
         F.max("dl").alias("maxdl"),
+        *([F.countDistinct("doc_id").alias("ids")] if check_disjoint
+          else []),
         *[F.count(F.when(F.col("doc_id") <= int(pool.max()), 1))
           .alias(f"_pool{j}") for j, (_, pool) in enumerate(pools)],
     ).collect()[0]
     num_docs = int(agg["n"])
+    if check_disjoint and agg["ids"] != num_docs:
+        clash = (
+            doc_lens.groupBy("doc_id")
+            .agg(F.count(F.lit(1)).alias("n"))
+            .where(F.col("n") > 1)
+            .take(1)
+        )
+        release(doc_lens)
+        raise ValueError(
+            f"doc_id {clash[0]['doc_id']} appears in more than one "
+            "index; merge_indexes requires disjoint doc-id sets"
+        )
     tf = stage("tf", lambda: segments(int(agg["maxdl"] or 0))
                if callable(segments) else segments)
     # DF per term: reference/bm25s/scoring.py:28-57 — map-side partial
     # aggregation bounds the shuffle at one row per term per partition
-    if dfreq is None:
-        dfreq = tf.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
+    dfreq = tf.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
     # vocab with the empty-token patch (reference/bm25s/__init__.py:562-564):
     # "" joins the vocab (df=0 → contributes nothing, but OOV lookups hit it)
     empty_row = spark.range(1).select(
@@ -512,6 +548,7 @@ def index_from_segments(
         ) if docs_per_shard is None else docs_per_shard,
         aux_persisted=persisted,
     )
+    index.segments = (postings, tf)
     if vocab_local:
         # the ids were numbered on the driver: that frame is already the
         # query path's term dictionary, so no query pulls it again
@@ -595,7 +632,7 @@ def build_index_from_token_ids(
         .select("doc_id", "dl", "term", "tf")
     )
     return index_from_segments(
-        tf, base.select("doc_id", F.size(ids_col).alias("dl")).persist(),
+        tf, base.select("doc_id", F.size(ids_col).alias("dl")),
         base.drop(ids_col) if keep_doc_map else None, k1, b, delta,
         query_tokenizer_kwargs,
     )
@@ -612,11 +649,11 @@ def merge_indexes(
     ingest batch (or each corpus partition) independently, then merge.
     The merge is cheap because the per-(doc, term) facts (``tf``, ``dl``)
     are corpus-independent: only the corpus-level statistics change, and
-    those are recomputed exactly:
+    those are recomputed exactly by the one index constructor
+    (:func:`index_from_segments`), as a build computes them:
 
-    - ``df``       = sum of the sides' per-term df (vocab-sized shuffle,
-      NOT a posting re-aggregation — doc sets are disjoint so the counts
-      add)
+    - ``df`` = the DF aggregation over the unioned (doc_id, dl, term,
+      tf) rows (map-side partial, one row per term per partition)
     - ``num_docs`` / ``avg_doc_len`` = one tiny agg over the unioned
       ``doc_lens`` (integer token counts sum exactly, so the mean is
       bit-identical to the full build's)
@@ -625,11 +662,16 @@ def merge_indexes(
     (doc_id, dl, term, tf) rows joined to the merged ``term_stats``, and
     every score equals a from-scratch build's (asserted in tests).
 
-    Scale shape: no tokenization re-run, no posting-sized groupBy; the
-    only posting-sized work is the narrow union + the vocab join that
-    every build already does.  ``check_disjoint`` (one doc-sized
-    aggregation) guards against overlapping doc ids — disable it when
-    the partitioning scheme guarantees disjointness.  A reference-format
+    Scale shape: no tokenization re-run and no posting-sized shuffle;
+    the posting-sized work is one scan of the sides' rows, which stores
+    the merged copy the index keeps (its lineage is cut), and the vocab
+    join every build already does.  Once this returns, the merged index
+    reads nothing of its sides, which may be released
+    (``BM25Index.unpersist``).  ``check_disjoint`` (a distinct count of
+    doc ids in the corpus-stats aggregation; a second pass names the
+    clash only when there is one) guards against overlapping doc ids —
+    disable it when the partitioning scheme guarantees disjointness.
+    A reference-format
     import (``compat.import_bm25s``) has no real (tf, dl) to rebuild
     from and raises ``ValueError``.
 
@@ -668,32 +710,8 @@ def merge_indexes(
 
     doc_lens = reduce(
         lambda a, b: a.unionByName(b), (i.doc_lens for i in indexes)
-    ).persist()
-    if check_disjoint:
-        clash = (
-            doc_lens.groupBy("doc_id")
-            .agg(F.count(F.lit(1)).alias("n"))
-            .where(F.col("n") > 1)
-            .take(1)
-        )
-        if clash:
-            doc_lens.unpersist()
-            raise ValueError(
-                f"doc_id {clash[0]['doc_id']} appears in more than one "
-                "index; merge_indexes requires disjoint doc-id sets"
-            )
-
-    tf = reduce(
-        lambda a, b: a.unionByName(b),
-        (i.postings.select("doc_id", "dl", "term", "tf") for i in indexes),
     )
-    # disjoint doc sets → per-term df adds; the "" vocab patch rows carry
-    # df=0 (or the true count when empty_fallback produced real "" tokens)
-    # on every side, so the sum is the union corpus's df for "" too
-    dfreq = reduce(
-        lambda a, b: a.unionByName(b),
-        (i.term_stats.select("term", "df") for i in indexes),
-    ).groupBy("term").agg(F.sum("df").alias("df"))
+    tf = reduce(lambda a, b: a.unionByName(b), map(index_segments, indexes))
 
     doc_maps = [i.doc_map for i in indexes]
     doc_map = None
@@ -704,8 +722,19 @@ def merge_indexes(
 
     return index_from_segments(
         tf, doc_lens, doc_map, head.k1, head.b, head.delta,
-        head.tokenizer_kwargs, dfreq=dfreq, pools_from=indexes,
+        head.tokenizer_kwargs, pools_from=indexes,
+        check_disjoint=check_disjoint,
     )
+
+
+def index_segments(index: BM25Index) -> DataFrame:
+    """The index's ``(doc_id, dl, term, tf)`` rows: the lineage-cut rows
+    its postings were joined from while those postings are still the
+    index's, else a projection of the postings.  The cut rows carry no
+    join, so a constructor can cut them again without running a job."""
+    if index.segments is not None and index.segments[0] is index.postings:
+        return index.segments[1].select("doc_id", "dl", "term", "tf")
+    return index.postings.select("doc_id", "dl", "term", "tf")
 
 
 class SparkBM25:

@@ -33,7 +33,8 @@ from dataclasses import replace
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from bm25s_spark.indexer import BM25Index, index_from_segments
+from bm25s_spark.indexer import (BM25Index, index_from_segments,
+                                 index_segments)
 
 
 def _tombstone_set(tombstones_df: DataFrame, doc_id_col: str,
@@ -110,6 +111,6 @@ def compact_index(
         if tombstones_df is not None else index
     )
     return index_from_segments(
-        live.postings.select("doc_id", "dl", "term", "tf"), live.doc_lens,
+        index_segments(live), live.doc_lens,
         live.doc_map, index.k1, index.b, index.delta, index.tokenizer_kwargs,
     )

@@ -1,4 +1,4 @@
-"""Shared plan-materialization helpers."""
+"""Shared plan-materialization and lineage helpers."""
 
 from __future__ import annotations
 
@@ -92,3 +92,50 @@ def eager_checkpoint(df: DataFrame, reliable: bool = True) -> DataFrame:
     if reliable and spark.sparkContext.getCheckpointDir() is not None:
         return df.checkpoint(eager=True)
     return df.localCheckpoint(eager=True)
+
+
+def cut_lineage(df: DataFrame) -> DataFrame:
+    """``df`` with its lineage cut at its first computation, which also
+    stores it.
+
+    The reliable checkpoint when a checkpoint dir is configured (the
+    rule of :func:`eager_checkpoint` for returned data); otherwise a
+    local checkpoint kept serialized in executor memory, spilling to
+    disk.  No job runs here for a plan without an exchange; adaptive
+    execution runs a plan's exchange and broadcast stages to build its
+    RDD, so cut plans without one.  The first job over the result
+    should scan every partition: a job that computes only some makes
+    Spark run one more for the rest.  Index tables are cut this way
+    because every job over a frame, and every frame built from it,
+    otherwise walks its whole history (:func:`release` frees the stored
+    blocks)."""
+    from pyspark.storagelevel import StorageLevel
+
+    if df.sparkSession.sparkContext.getCheckpointDir() is not None:
+        return df.checkpoint(eager=False)
+    return df.localCheckpoint(eager=False,
+                              storageLevel=StorageLevel.MEMORY_AND_DISK)
+
+
+def _cut_rdd(df: DataFrame):
+    """The JVM RDD a checkpointed ``df`` scans, or None."""
+    plan = df._jdf.queryExecution().analyzed()
+    return plan.rdd() if plan.getClass().getSimpleName() == "LogicalRDD" \
+        else None
+
+
+def is_cut(df: DataFrame) -> bool:
+    """Whether ``df``'s plan is one scan of an existing RDD, as a
+    checkpoint's is."""
+    return _cut_rdd(df) is not None
+
+
+def release(df: DataFrame) -> None:
+    """Unpersist ``df`` and, for a checkpoint, free its stored blocks:
+    ``DataFrame.unpersist`` does not touch those, which otherwise stay
+    until the JVM collects the RDD.  Frames built from ``df`` that have
+    not yet been computed can no longer be."""
+    df.unpersist()
+    rdd = _cut_rdd(df)
+    if rdd is not None:
+        rdd.unpersist(False)

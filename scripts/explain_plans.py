@@ -64,7 +64,7 @@ def main():
     )
 
     sections.append((
-        "index build (flat postings: tokenize → TF → DF and term ids → postings join)",
+        "index build (flat postings: the build's cut (doc_id, dl, term, tf) rows, a Scan ExistingRDD, ⨝ the term ids)",
         _formatted(idx.postings),
     ))
     sections.append((
@@ -123,7 +123,12 @@ def main():
         f.write("# PLANS — formatted physical plans for the headline paths\n\n")
         f.write("Generated by scripts/explain_plans.py; reviewed for: filter/\n"
                 "projection pushdown, broadcast choices, WholeStageCodegen spans,\n"
-                "partial aggregation, and absence of Python in JVM-only paths.\n")
+                "partial aggregation, and absence of Python in JVM-only paths.\n\n"
+                "An in-memory index keeps no lineage to the frames it was built\n"
+                "from: its doc lengths and (doc_id, dl, term, tf) rows are\n"
+                "checkpoints stored by their first scan, so the flat postings\n"
+                "plan starts from a Scan ExistingRDD instead of the tokenize →\n"
+                "TF chain, and stays the same size after any number of merges.\n")
         for title, body in sections:
             f.write(f"\n## {title}\n\n```\n{body}\n```\n")
     print(f"wrote {out_path}")

@@ -277,3 +277,95 @@ def test_build_and_merge_job_budget(spark, merge_setup):
     assert 0 < merge_jobs <= 7, merge_jobs
     for idx in built:
         idx.unpersist()
+
+
+def _cached_rdd_ids(spark) -> set:
+    return {int(i.id())
+            for i in spark.sparkContext._jsc.sc().getRDDStorageInfo()}
+
+
+def test_unpersist_releases_cut_tables(spark, merge_setup):
+    """An index's ``doc_lens`` and ``tf`` rows are checkpoints, whose
+    blocks ``DataFrame.unpersist`` leaves in place.  After build →
+    layout → merge, releasing the old index (and its layout, as a
+    refresh loop does) leaves none of its blocks stored, and the merged
+    index, which reads nothing of it, still builds its layout and
+    holds a fresh build's postings."""
+    import time
+
+    from bm25s_spark.shards import ensure_sharded
+    from bm25s_spark.util import is_cut
+
+    docs, full, _ = merge_setup
+    before = _cached_rdd_ids(spark)
+    base = build_index(docs.where(F.col("doc_id") < 1500),
+                       doc_id_col="doc_id")
+    assert is_cut(base.doc_lens) and is_cut(base.segments[1])
+    ensure_sharded(base).count()
+    base_ids = _cached_rdd_ids(spark) - before
+    delta = build_index(docs.where(F.col("doc_id") >= 1500),
+                        doc_id_col="doc_id")
+    merged = merge_indexes(base, delta)
+    assert base_ids & _cached_rdd_ids(spark)
+    base.unpersist()
+    base.sharded.unpersist()
+    deadline = time.monotonic() + 30     # block removal is asynchronous
+    while base_ids & _cached_rdd_ids(spark) and time.monotonic() < deadline:
+        time.sleep(0.2)
+    assert not base_ids & _cached_rdd_ids(spark)
+    ensure_sharded(merged).count()
+    pcols = full.postings.columns
+    assert _sorted_rows(
+        merged.postings.select(pcols), "term", "doc_id"
+    ) == _sorted_rows(full.postings.select(pcols), "term", "doc_id")
+    delta.unpersist()
+    merged.unpersist()
+    merged.sharded.unpersist()
+
+
+def test_refresh_loop_keeps_lineage_flat(spark, merge_setup):
+    """Eight back-to-back refreshes (build the delta, merge, build the
+    layout, release the old indexes) leave tables whose plans and
+    layout lineage do not grow with the refresh count, and an index
+    that ranks like one build over the union."""
+    import re
+
+    from bm25s_spark.shards import ensure_sharded
+    from tests.conftest import assert_rank_identical, rows_to_arrays
+
+    def plan_size(df):
+        # expression ids grow with the session, not with the plan
+        return len(re.sub(r"#\d+", "#",
+                          df._jdf.queryExecution().analyzed().toString()))
+
+    docs, full, _ = merge_setup
+    idx = build_index(docs.where(F.col("doc_id") < 400), doc_id_col="doc_id")
+    ensure_sharded(idx).count()
+    seen = {}
+    for r in range(1, 9):
+        old = idx
+        delta = build_index(
+            docs.where((F.col("doc_id") >= 200 * r + 200)
+                       & (F.col("doc_id") < 200 * r + 400)),
+            doc_id_col="doc_id")
+        idx = merge_indexes(old, delta)
+        ensure_sharded(idx).count()
+        old.unpersist()
+        old.sharded.unpersist()
+        delta.unpersist()
+        seen[r] = (plan_size(idx.postings), plan_size(idx.doc_lens),
+                   len(idx.sharded.rdd.toDebugString().splitlines()))
+    assert idx.num_docs == full.num_docs
+    assert seen[8][:2] == seen[2][:2], seen
+    assert seen[8][2] <= seen[2][2], seen
+
+    texts = [r["text"] for r in docs.orderBy("doc_id").select("text").collect()]
+    qdf = spark.createDataFrame(queries_for(texts, 8, seed=13),
+                                "query_id string, text string")
+    for kw in (dict(strategy="join"), dict(strategy="sharded")):
+        got = [r.asDict() for r in idx.retrieve(qdf, k=5, **kw).collect()]
+        want = [r.asDict() for r in full.retrieve(qdf, k=5, **kw).collect()]
+        assert_rank_identical(got, *rows_to_arrays(want), rtol=1e-9,
+                              atol=1e-9)
+    idx.unpersist()
+    idx.sharded.unpersist()
